@@ -2496,7 +2496,7 @@ def h23_market_share(spark, sf_dir):
     # part filters FIRST and broadcast-semi-joins the lineitem scan (the
     # biggest row-count cut); the EUROPE customer predicate pre-filters
     # ORDERS below the fact-fact join (the h15/Q7 move, measured 1.51x
-    # at sf10 in tools/star_plan_variants_study.py — 4/5 of orders never
+    # at sf10 in PLANS.md's star-plan variant A/B — 4/5 of orders never
     # reach the join); supplier/nation/region all broadcast; the share
     # is CASE-sum / sum in a single aggregate pass (no second join).
     li = load_table(spark, sf_dir, "lineitem")
@@ -2638,7 +2638,7 @@ def h26_brand_supplier_counts(spark, sf_dir):
     # fact-grain distinct before the join was built and measured 3x
     # WORSE at sf10, because it shuffles the whole fact table before
     # the ~13%-selective filter can prune it; see
-    # tools/r12_rewrite_ab_study.py), then the anti blocklist, then the
+    # PLANS.md's round-12 rewrite A/B), then the anti blocklist, then the
     # COUNT DISTINCT is written as its own two combinable aggregates:
     # distinct (brand, type, size, suppkey) -> plain count.
     li = load_table(spark, sf_dir, "lineitem")

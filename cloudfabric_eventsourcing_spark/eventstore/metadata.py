@@ -13,27 +13,10 @@ import contextlib
 import json
 import os
 import tempfile
-import threading
 from typing import Any, Optional
 
-# Process-wide per-path mutexes for JsonFileMetadataRepository: fcntl
-# locks alone cannot serialize THREADS of one process (lockf record locks
-# are owned per-process; flock is per open-file-description, but relying
-# on it for intra-process exclusion still lets one thread's close() drop
-# a lock another thread obtained through a different repository object on
-# some platforms).  The threading.Lock serializes threads; the flock
-# serializes processes.
-_PATH_LOCKS: dict[str, threading.Lock] = {}
-_PATH_LOCKS_GUARD = threading.Lock()
-
-
-def _path_lock(path: str) -> threading.Lock:
-    key = os.path.realpath(path)
-    with _PATH_LOCKS_GUARD:
-        lock = _PATH_LOCKS.get(key)
-        if lock is None:
-            lock = _PATH_LOCKS[key] = threading.Lock()
-        return lock
+from cloudfabric_eventsourcing_spark.eventstore.locking import exclusive_lock
+from cloudfabric_eventsourcing_spark.eventstore.store import ParquetEventStore
 
 
 class InMemoryMetadataRepository:
@@ -68,15 +51,18 @@ class JsonFileMetadataRepository:
     """Single-JSON-file store with atomic replace (small metadata only —
     index state, rebuild progress; not a data path).
 
-    Writes take an advisory fcntl lock around the load-modify-save, so
-    CONCURRENT PROCESSES (the reference worker's maxParallelTasks shape,
-    ProjectionsRebuildProcessor.cs:28-59) cannot lose each other's
-    updates to different keys: without it, two workers leasing two
-    different projections could each read the file, apply their own key,
-    and the later replace would erase the earlier worker's lease.  Reads
-    stay lock-free — the atomic replace guarantees every reader sees a
-    complete (if slightly stale) snapshot, and the state store's
-    optimistic updated_at re-check handles staleness."""
+    Writes hold an exclusive flock on the sidecar `<path>.lock` around
+    the load-modify-save — the same kernel-released lock the parquet
+    event store takes per stream (`eventstore/locking.py`) — so
+    concurrent THREADS and PROCESSES (the reference worker's
+    maxParallelTasks shape, ProjectionsRebuildProcessor.cs:28-59) cannot
+    lose each other's updates to different keys: without it, two workers
+    leasing two different projections could each read the file, apply
+    their own key, and the later replace would erase the earlier
+    worker's lease.  Reads stay lock-free — the atomic replace
+    guarantees every reader sees a complete (if slightly stale)
+    snapshot, and the state store's optimistic updated_at re-check
+    handles staleness."""
 
     def __init__(self, path: str):
         self.path = path
@@ -96,30 +82,9 @@ class JsonFileMetadataRepository:
 
     @contextlib.contextmanager
     def _file_lock(self):
-        """Two-layer mutual exclusion around load-modify-save.
-
-        Layer 1: a process-wide threading.Lock keyed by realpath — two
-        THREADS sharing (or independently constructing) a repository on
-        the same file serialize here.  lockf record locks are owned
-        per-process, so without this a second thread's lockf would
-        succeed immediately and, worse, its close() would drop the lock
-        out from under the first thread mid-critical-section.
-
-        Layer 2: fcntl.flock on a sidecar .lock file — flock locks
-        attach to the open-file-description, so separate PROCESSES (the
-        parallel rebuild workers) conflict; closing this fd releases
-        only this OFD's lock, never another holder's.
-        """
-        import fcntl
-
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with _path_lock(self.path + ".lock"):
-            lock_fd = os.open(self.path + ".lock", os.O_CREAT | os.O_WRONLY)
-            try:
-                fcntl.flock(lock_fd, fcntl.LOCK_EX)
-                yield
-            finally:
-                os.close(lock_fd)  # releases this OFD's flock
+        with exclusive_lock(self.path + ".lock", ParquetEventStore.LOCK_TIMEOUT_S):
+            yield
 
     def upsert_item(self, id: str, partition_key: str, item: Any) -> None:
         with self._file_lock():

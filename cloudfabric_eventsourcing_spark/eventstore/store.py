@@ -34,7 +34,9 @@ from __future__ import annotations
 import contextlib
 import datetime
 import glob
+import hashlib
 import json
+import logging
 import os
 import threading
 import time
@@ -55,6 +57,9 @@ from cloudfabric_eventsourcing_spark.eventstore.event import (
     OptimisticConcurrencyError,
     StreamNotFoundError,
 )
+from cloudfabric_eventsourcing_spark.eventstore.locking import exclusive_lock
+
+log = logging.getLogger(__name__)
 
 Subscriber = Callable[[Event], None]
 
@@ -256,27 +261,23 @@ class ParquetEventStore(EventStore):
     """Append-only parquet-directory store.
 
     Layout: `{path}/part-<time_ns>-<uuid>.parquet`, one fragment per
-    committed append. The transaction boundary is PER STREAM: a
-    `.commit-<streamhash>.lock` file (O_EXCL, plus an in-process mutex)
-    serializes writers of one stream while appends to DISJOINT streams
-    proceed in parallel — optimistic-concurrency semantics identical to
-    the reference's per-stream version check (SURVEY.md §7 "genuinely hard
-    parts" #1), throughput scales with writer parallelism like the
-    cluster-side Delta mapping would.
+    committed append. The transaction boundary is PER STREAM: an
+    exclusive flock on `{path}/_locks/commit-<streamhash>.lock` serializes
+    writers of one stream — threads and processes alike — while appends
+    to DISJOINT streams proceed in parallel; optimistic-concurrency
+    semantics identical to the reference's per-stream version check
+    (SURVEY.md §7 "genuinely hard parts" #1).  The kernel releases a
+    flock when its holder dies, so a crashed writer never blocks the
+    stream and a slow live one is never raced.  Lock files persist
+    (`eventstore/locking.py`); Spark's listing skips the `_locks/`
+    directory and the fragment glob never sees it.
     """
 
     LOCK_TIMEOUT_S = 30.0
-    # a .lock file older than this is presumed abandoned (writer crashed
-    # between os.open and os.unlink) and is stolen; must comfortably exceed
-    # the longest plausible append (an append writes one small fragment,
-    # ~ms) so a live-but-slow writer is never raced
-    LOCK_STALE_S = 10.0
 
     def __init__(self, path: str):
         self.path = path
         self._subscribers = []
-        self._stream_mutexes: dict[str, threading.Lock] = {}
-        self._mutexes_guard = threading.Lock()
         # incremental per-stream version cache: fragments are immutable, so
         # scanning each NEW fragment once (under the commit lock) keeps
         # appends amortized O(1) instead of O(total fragments) — the
@@ -288,13 +289,14 @@ class ParquetEventStore(EventStore):
         self._cache_guard = threading.Lock()
 
     def initialize(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
+        os.makedirs(os.path.join(self.path, "_locks"), exist_ok=True)
 
-    def _stream_mutex(self, key: str) -> threading.Lock:
-        with self._mutexes_guard:
-            if key not in self._stream_mutexes:
-                self._stream_mutexes[key] = threading.Lock()
-            return self._stream_mutexes[key]
+    def _lock_path(self, name: str) -> str:
+        return os.path.join(self.path, "_locks", f"{name}.lock")
+
+    def _stream_lock_path(self, stream_id: str, partition_key: str) -> str:
+        key = hashlib.sha1(f"{stream_id}\x00{partition_key}".encode()).hexdigest()
+        return self._lock_path(f"commit-{key[:12]}")
 
     # -- dataset helpers ----------------------------------------------------
     def _fragments(self) -> list[str]:
@@ -307,29 +309,39 @@ class ParquetEventStore(EventStore):
         return pa_ds.dataset(frags, schema=_ARROW_SCHEMA, format="parquet")
 
     def _scan(self, filter_expr=None, columns=None) -> pa.Table:
-        ds = self._dataset()
-        if ds is None:
-            return _ARROW_SCHEMA.empty_table()
-        return ds.to_table(filter=filter_expr, columns=columns)
+        def read():
+            ds = self._dataset()
+            if ds is None:
+                return _ARROW_SCHEMA.empty_table()
+            return ds.to_table(filter=filter_expr, columns=columns)
+
+        return _relist_on_vanish(read)
 
     # -- reads --------------------------------------------------------------
     def load_stream(self, stream_id, partition_key, from_version=None):
         # point read through the fragment index: only files containing this
         # stream are opened (mirrors the reference's (stream_id,
         # partition_key) index — PostgresqlEventStore.cs:521-526)
-        self._refresh_version_cache()
-        frags = [
-            f
-            for f in self._stream_fragments.get((stream_id, partition_key), [])
-            if os.path.exists(f)
-        ]
-        if not frags:
-            return EventStream(stream_id, 0, [])
         expr = (pc.field("stream_id") == stream_id) & (
             pc.field("partition_key") == partition_key
         )
-        ds = pa_ds.dataset(frags, schema=_ARROW_SCHEMA, format="parquet")
-        table = ds.to_table(filter=expr).sort_by("stream_version")
+
+        def read():
+            self._refresh_version_cache()
+            frags = [
+                f
+                for f in self._stream_fragments.get((stream_id, partition_key), [])
+                if os.path.exists(f)
+            ]
+            if not frags:
+                return None
+            ds = pa_ds.dataset(frags, schema=_ARROW_SCHEMA, format="parquet")
+            return ds.to_table(filter=expr)
+
+        table = _relist_on_vanish(read)
+        if table is None:
+            return EventStream(stream_id, 0, [])
+        table = table.sort_by("stream_version")
         version = (
             int(table["stream_version"][-1].as_py()) if table.num_rows else 0
         )
@@ -374,7 +386,7 @@ class ParquetEventStore(EventStore):
         correctness for stream X relies on X's fragments being stable,
         which X's commit lock guarantees."""
         with self._cache_guard:
-            self._refresh_version_cache_locked()
+            _relist_on_vanish(self._refresh_version_cache_locked)
 
     def _refresh_version_cache_locked(self) -> None:
         for frag in self._fragments():
@@ -409,150 +421,29 @@ class ParquetEventStore(EventStore):
         if not events:
             return True
         pk = events[0].partition_key
-        import hashlib
-
-        lock_key = hashlib.sha1(f"{stream_id}\x00{pk}".encode()).hexdigest()[:12]
-        lock_path = os.path.join(self.path, f".commit-{lock_key}.lock")
-        mutex = self._stream_mutex(lock_key)
-        deadline = time.monotonic() + self.LOCK_TIMEOUT_S
-        if not mutex.acquire(timeout=self.LOCK_TIMEOUT_S):
-            raise TimeoutError(f"could not acquire in-process lock for {stream_id}")
-        try:
-            # appends yield to an in-flight maintenance rewrite (best-effort
-            # barrier; durability does NOT depend on it — _replace_all only
-            # ever unlinks the fragment list it was built from, so a
-            # fragment that slips past this wait still survives the rewrite)
-            self._wait_for_maintenance(deadline)
-            fd, token = self._acquire_lock_file(lock_path, deadline)
-            try:
-                current = self._max_version(stream_id, pk)
-                if current != expected_version:
-                    raise OptimisticConcurrencyError(
-                        f"stream {stream_id}: expected version {expected_version}, "
-                        f"store has {current} — another writer appended"
-                    )
-                records = self._prepare_records(
-                    user_info, stream_id, expected_version, events
+        with exclusive_lock(self._stream_lock_path(stream_id, pk), self.LOCK_TIMEOUT_S):
+            current = self._max_version(stream_id, pk)
+            if current != expected_version:
+                raise OptimisticConcurrencyError(
+                    f"stream {stream_id}: expected version {expected_version}, "
+                    f"store has {current} — another writer appended"
                 )
-                # the version-cache refresh above may have globbed many
-                # fragments; re-stamp the lock before the parquet write so
-                # a slow commit is never judged stale mid-flight
-                self._touch_lock(lock_path)
-                written = self._write_fragment(records)
-                # fold the fragment we just wrote into the cache directly —
-                # unless a concurrent thread's refresh already globbed and
-                # indexed it (double-listing would duplicate the stream's
-                # events on point reads)
-                with self._cache_guard:
-                    if written not in self._seen_fragments:
-                        self._seen_fragments.add(written)
-                        key = (stream_id, pk)
-                        self._versions[key] = records[-1].stream_version
-                        self._stream_fragments.setdefault(key, []).append(written)
-            finally:
-                self._release_lock_file(lock_path, fd, token)
-        finally:
-            mutex.release()
+            records = self._prepare_records(
+                user_info, stream_id, expected_version, events
+            )
+            written = self._write_fragment(records)
+            # fold the fragment we just wrote into the cache directly —
+            # unless a concurrent thread's refresh already globbed and
+            # indexed it (double-listing would duplicate the stream's
+            # events on point reads)
+            with self._cache_guard:
+                if written not in self._seen_fragments:
+                    self._seen_fragments.add(written)
+                    key = (stream_id, pk)
+                    self._versions[key] = records[-1].stream_version
+                    self._stream_fragments.setdefault(key, []).append(written)
         self._push(events)
         return True
-
-    # -- lock-file protocol -------------------------------------------------
-    def _acquire_lock_file(self, lock_path: str, deadline: float) -> tuple[int, str]:
-        """O_EXCL lock file with crash recovery: a lock older than
-        LOCK_STALE_S is presumed abandoned and stolen via an atomic
-        rename (only one contender wins the rename, so two stealers can
-        never both unlink a freshly re-acquired lock). The version
-        precheck each writer runs AFTER acquiring the lock is the fence —
-        a steal can never commit a stale expected_version.
-
-        Liveness/exclusion hardening:
-          - every lock file carries a unique OWNER TOKEN; release unlinks
-            only if the file still holds our token, so a stalled holder
-            that was legitimately stolen can never remove the new
-            holder's lock (`_release_lock_file`);
-          - holders REFRESH the lock mtime during long held sections
-            (`_touch_lock` in the append path, a heartbeat thread for
-            maintenance), so a live-but-slow holder is not seen stale;
-          - after winning the steal rename, the stealer re-checks the
-            grave's mtime: if the holder refreshed it between our stat
-            and rename, the lock was NOT stale — link it back (no-op if
-            a new lock already appeared) and back off.
-
-        Reference contract: the Postgres transaction's row lock releases
-        automatically on writer death (PostgresqlEventStore.cs:386-409);
-        this gives the parquet store the same liveness.
-        """
-        token = uuid.uuid4().hex
-        while True:
-            try:
-                fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, token.encode())
-                return fd, token
-            except FileExistsError:
-                try:
-                    age = time.time() - os.stat(lock_path).st_mtime
-                    if age > self.LOCK_STALE_S:
-                        grave = f"{lock_path}.stale-{uuid.uuid4().hex[:8]}"
-                        os.rename(lock_path, grave)  # atomic: one winner
-                        try:
-                            fresh = (
-                                time.time() - os.stat(grave).st_mtime
-                                <= self.LOCK_STALE_S
-                            )
-                        except FileNotFoundError:
-                            fresh = False
-                        if fresh:
-                            # holder heartbeat raced our stat — restore and
-                            # treat as held (link keeps the holder's inode,
-                            # so its token-verified release still works)
-                            with contextlib.suppress(FileExistsError):
-                                os.link(grave, lock_path)
-                            os.unlink(grave)
-                        else:
-                            os.unlink(grave)
-                            continue  # genuinely stale: retry O_EXCL now
-                except FileNotFoundError:
-                    continue  # holder released (or another stealer won)
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"could not acquire {lock_path}")
-                time.sleep(0.01)
-
-    @staticmethod
-    def _release_lock_file(lock_path: str, fd: int, token: str) -> None:
-        """Close + unlink ONLY a lock we still own (token match): if we
-        stalled past LOCK_STALE_S and were stolen, the path now holds the
-        new owner's token and must survive our release."""
-        os.close(fd)
-        try:
-            with open(lock_path, "r") as f:
-                if f.read() == token:
-                    os.unlink(lock_path)
-        except FileNotFoundError:
-            pass
-
-    @staticmethod
-    def _touch_lock(lock_path: str) -> None:
-        """Heartbeat: refresh the lock mtime so concurrent contenders never
-        judge a live holder stale mid-commit."""
-        with contextlib.suppress(FileNotFoundError):
-            os.utime(lock_path)
-
-    _MAINT_LOCK = ".maint.lock"
-
-    def _maintenance_lock_path(self) -> str:
-        return os.path.join(self.path, self._MAINT_LOCK)
-
-    def _wait_for_maintenance(self, deadline: float) -> None:
-        path = self._maintenance_lock_path()
-        while os.path.exists(path):
-            try:
-                if time.time() - os.stat(path).st_mtime > self.LOCK_STALE_S:
-                    return  # abandoned maintenance; appends are safe anyway
-            except FileNotFoundError:
-                return
-            if time.monotonic() > deadline:
-                raise TimeoutError("maintenance rewrite held the store too long")
-            time.sleep(0.01)
 
     def _write_fragment(self, records: list[EventRecord]) -> str:
         name = f"part-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet"
@@ -568,31 +459,14 @@ class ParquetEventStore(EventStore):
     # Postgres transaction — PostgresqlEventStore.cs:101-178): a rewrite
     # only ever unlinks the EXACT fragment list it was built from, so an
     # append that commits concurrently is never folded away — its fragment
-    # simply survives next to the rewritten snapshot. The .maint.lock file
-    # additionally (a) serializes maintenance ops against each other and
-    # (b) makes appenders briefly yield, shrinking the interleaving window.
+    # simply survives next to the rewritten snapshot, so appends never wait
+    # for maintenance. The maintenance lock serializes maintenance ops
+    # against each other (e.g. a hard_delete during a compact would
+    # otherwise resurrect the deleted rows).
 
     @contextlib.contextmanager
     def _maintenance(self):
-        """Exclusive maintenance section with a HEARTBEAT: compact() on a
-        large store easily outlives LOCK_STALE_S, so a daemon thread
-        refreshes the lock mtime while held — a second maintenance op can
-        then never judge a live one stale and run concurrently (e.g.
-        hard_delete during compact resurrecting deleted rows). Release is
-        token-verified, so even a genuinely-stalled op whose lock WAS
-        stolen cannot remove the stealer's lock in its finally."""
-        path = self._maintenance_lock_path()
-        deadline = time.monotonic() + self.LOCK_TIMEOUT_S
-        fd, token = self._acquire_lock_file(path, deadline)
-        stop = threading.Event()
-
-        def beat():
-            while not stop.wait(self.LOCK_STALE_S / 3):
-                self._touch_lock(path)
-
-        beater = threading.Thread(target=beat, daemon=True)
-        beater.start()
-        try:
+        with exclusive_lock(self._lock_path("maintenance"), self.LOCK_TIMEOUT_S):
             # repair any swap a previous maintenance op left half-done
             # BEFORE this op reads the fragment list: without this, a
             # crash between _replace_fragments' rename-in and unlinks
@@ -602,10 +476,6 @@ class ParquetEventStore(EventStore):
             # resurrected into the compacted output
             self._recover_swap()
             yield
-        finally:
-            stop.set()
-            beater.join()
-            self._release_lock_file(path, fd, token)
 
     def compact(self, max_fragments: int = 1) -> None:
         """Fold many small append fragments into one (the parquet-store
@@ -639,10 +509,13 @@ class ParquetEventStore(EventStore):
         marker = self._swap_marker_path()
         part = marker + ".part"
         if os.path.exists(part):
+            log.warning("%s: removing a half-written swap marker", self.path)
             os.unlink(part)
         if os.path.exists(marker):
             with open(marker) as fh:
                 intent = json.load(fh)
+            log.warning("%s: repairing an interrupted swap to %s (%d fragments)",
+                        self.path, intent["out"], len(intent["frags"]))
             if os.path.exists(os.path.join(self.path, intent["out"])):
                 for base in intent["frags"]:
                     f = os.path.join(self.path, base)
@@ -651,6 +524,7 @@ class ParquetEventStore(EventStore):
                 self._invalidate_version_cache()
             os.unlink(marker)
         for tmp in glob.glob(os.path.join(self.path, ".tmp-compact-*")):
+            log.warning("%s: removing leftover %s", self.path, os.path.basename(tmp))
             os.unlink(tmp)
 
     def _replace_fragments(self, frags: list[str], table: pa.Table) -> None:
@@ -767,6 +641,18 @@ def _table_from_records(records: list[EventRecord]) -> pa.Table:
 
 def _records_from_table(table: pa.Table) -> list[EventRecord]:
     return [EventRecord(**row) for row in table.to_pylist()]
+
+
+def _relist_on_vanish(read):
+    """Run `read()` again while it fails on a fragment it listed that has
+    since been unlinked.  A compaction — possibly by another store
+    instance or process — renames its snapshot in BEFORE unlinking the
+    sources, so listing again always finds the vanished rows."""
+    while True:
+        try:
+            return read()
+        except FileNotFoundError:
+            continue
 
 
 def _dedupe_versions(records: list[EventRecord]) -> list[EventRecord]:

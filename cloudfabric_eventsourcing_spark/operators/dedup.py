@@ -1124,7 +1124,7 @@ def save_cosine_index(
     listing for the partition prefix, at parquet row-group min/max for
     the full bucket value.
 
-    Layout (r9, measured in tools/vector_probe_study.py): partitioning
+    Layout (r9, measured in PLANS.md's cosine probe study): partitioning
     by the FULL bucket value explodes into 2^bits directories — at
     bits=16 a 500-vector multiprobe batch touched ~8.5k tiny-file
     partitions and the probe spent 22s listing/opening them, slower

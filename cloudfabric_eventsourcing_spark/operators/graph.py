@@ -28,7 +28,11 @@ all (its dedup story ends at unique keys); this operator exists for the
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, functions as F
+
+log = logging.getLogger(__name__)
 
 
 #: target edge rows per partition for the slim (n, m) adjacency frame —
@@ -363,11 +367,14 @@ def _recover_compact_swap(spark, path: str) -> None:
     )
     if not fs.exists(P(labels)):
         if fs.exists(P(tmp + "/_COMMITTED")):
+            log.warning("%s: rolling an interrupted compaction forward", path)
             _checked_rename(fs, P, tmp, labels)
         elif fs.exists(P(old)):
+            log.warning("%s: rolling an interrupted compaction back", path)
             _checked_rename(fs, P, old, labels)
     for p in (tmp, old):
         if fs.exists(P(p)):
+            log.warning("%s: removing leftover %s", path, p.rsplit("/", 1)[-1])
             fs.delete(P(p), True)
 
 

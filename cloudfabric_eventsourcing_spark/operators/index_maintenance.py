@@ -50,12 +50,15 @@ from __future__ import annotations
 
 import glob
 import json
+import logging
 import os
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 # subdirectories that hold row data per index layout; meta/centroids are
 # single-file by construction and never need compaction
@@ -99,11 +102,14 @@ def _recover_dir(d: str) -> None:
     marker = os.path.join(d, _MARKER)
     part = marker + ".part"
     if os.path.exists(part):  # crash mid-marker-write: nothing moved yet
+        log.warning("%s: removing a half-written compaction marker", d)
         os.unlink(part)
     if not os.path.exists(marker):
         return
     with open(marker) as fh:
         intent = json.load(fh)
+    log.warning("%s: repairing an interrupted compaction (%d moves)",
+                d, len(intent["moves"]))
     tmp = intent["tmp"]
     pending = [
         (src_base, dst_base)

@@ -626,8 +626,8 @@ def curate_vector_stream(
     row groups inside them — save_cosine_index's r9 layout), the batch
     side broadcasts, and the append writes only the accepted rows —
     nothing corpus-sized ever shuffles.  Batch cost measured ~flat
-    100k→500k vectors at bits=16 (tools/vector_probe_study.py; PLANS.md
-    Round-9).  Flatness is CONDITIONAL on bucket cardinality: at bits
+    100k→500k vectors at bits=16 (PLANS.md Round-9, cosine probe
+    study).  Flatness is CONDITIONAL on bucket cardinality: at bits
     too low for the corpus (2^bits ≲ batch × (bits+1) probes) the probe
     degrades toward a corpus scan — pick bits ≈ log2(corpus /
     target-occupancy) at index creation, and blue/green re-bucket when

@@ -5,9 +5,11 @@ version of the reference's backend-parameterized differential suites
 import datetime
 import decimal
 import os
+import sys
 import threading
 import time
 
+import pyarrow.compute as pc
 import pytest
 
 from cloudfabric_eventsourcing_spark.domain import AggregateRepository
@@ -126,10 +128,16 @@ def test_concurrent_writers_serialize(store):
                 continue
 
     threads = [threading.Thread(target=writer, args=(i,)) for i in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    switch_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the writers' locked sections
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch_interval)
+    assert not any(t.is_alive() for t in threads)
     stream = store.load_stream(order.id, ORDERS_PARTITION_KEY)
     assert stream.version == 1 + len(success)
     versions = [store.load_stream(order.id, ORDERS_PARTITION_KEY).version]
@@ -418,7 +426,7 @@ def test_hard_delete_order_via_repository(store):
     assert repo.load(order.id, ORDERS_PARTITION_KEY) is None
 
 
-# -- maintenance durability + lock liveness (round-2 hardening) -------------
+# -- maintenance durability + lock liveness ---------------------------------
 
 def _parquet_store(tmp_path):
     s = ParquetEventStore(str(tmp_path / "events"))
@@ -429,6 +437,36 @@ def _parquet_store(tmp_path):
 def _append_order(store, oid):
     repo = AggregateRepository(store, Order)
     repo.save(USER, make_order(oid))
+
+
+def _lock_is_free(path):
+    """True when nobody holds an flock on `path` (probe with LOCK_NB)."""
+    import fcntl
+
+    fd = os.open(path, os.O_WRONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        return True
+    except BlockingIOError:
+        return False
+    finally:
+        os.close(fd)
+
+
+def _hold_lock_in_child(path):
+    """Start a child process that flocks `path` and hangs; returns once
+    the lock is held."""
+    import subprocess
+
+    child = subprocess.Popen(
+        [sys.executable, "-c",
+         f"import fcntl,os,time; fd = os.open({path!r}, os.O_CREAT|os.O_WRONLY); "
+         "fcntl.flock(fd, fcntl.LOCK_EX); print('locked', flush=True); "
+         "time.sleep(60)"],
+        stdout=subprocess.PIPE,
+    )
+    assert child.stdout.readline().strip() == b"locked"
+    return child
 
 
 def test_compact_preserves_concurrent_append(tmp_path):
@@ -464,13 +502,11 @@ def test_compact_and_hard_delete_still_work(tmp_path):
     assert store.hard_delete("2c55f399-0000-0000-0000-000000000000",
                              ORDERS_PARTITION_KEY) is True
     assert store.get_statistics().total_events_count == 3
-    # maintenance lock released
-    import os
-    assert not os.path.exists(store._maintenance_lock_path())
+    assert _lock_is_free(store._lock_path("maintenance"))
 
 
 def test_swap_crash_is_repaired_before_next_maintenance(
-    tmp_path, monkeypatch
+    tmp_path, monkeypatch, caplog
 ):
     """A crash between _replace_fragments' snapshot rename and its
     fragment unlinks must not let the NEXT compact() bake the duplicate
@@ -478,7 +514,7 @@ def test_swap_crash_is_repaired_before_next_maintenance(
     deleted stream into the compacted output.  The swap-intent marker
     makes the half-finished swap roll forward at the next maintenance
     op."""
-    import os
+    import logging
 
     from cloudfabric_eventsourcing_spark.eventstore import store as st
 
@@ -515,10 +551,12 @@ def test_swap_crash_is_repaired_before_next_maintenance(
     assert s1.version == survivor_before.version
     assert len(s1.events) == len(survivor_before.events)
 
-    # the next maintenance op repairs the swap FIRST: the compacted
-    # store holds each surviving event exactly once and the hard-deleted
-    # stream stays gone
-    store.compact()
+    # the next maintenance op repairs the swap FIRST, and says so: the
+    # compacted store holds each surviving event exactly once and the
+    # hard-deleted stream stays gone
+    with caplog.at_level(logging.WARNING, logger=st.__name__):
+        store.compact()
+    assert "repairing an interrupted swap" in caplog.text
     assert not os.path.exists(store._swap_marker_path())
     assert len(store._fragments()) == 1
     per_stream = n_total // 4
@@ -528,164 +566,195 @@ def test_swap_crash_is_repaired_before_next_maintenance(
     )
 
 
-def test_stale_commit_lock_is_stolen(tmp_path):
-    """A lock file abandoned by a crashed writer must not stall appends for
-    LOCK_TIMEOUT_S (reference: Postgres row locks die with the writer)."""
-    import hashlib
-    import os
-    import time
-
+def test_unheld_lock_file_never_blocks(tmp_path):
+    """Lock files persist after release; a file nobody holds (left by an
+    earlier writer, crashed or not) never delays an append or a
+    maintenance op."""
     store = _parquet_store(tmp_path)
     oid = "2c55f399-0000-0000-0000-000000000001"
-    key = hashlib.sha1(f"{oid}\x00{ORDERS_PARTITION_KEY}".encode()).hexdigest()[:12]
-    lock = os.path.join(store.path, f".commit-{key}.lock")
-    with open(lock, "w"):
-        pass
-    old = time.time() - store.LOCK_STALE_S - 5
-    os.utime(lock, (old, old))
-    t0 = time.monotonic()
-    _append_order(store, oid)  # would TimeoutError after 30 s without stealing
-    assert time.monotonic() - t0 < store.LOCK_STALE_S
-    assert store.load_stream(oid, ORDERS_PARTITION_KEY).version == 1
-
-
-def test_fresh_lock_is_respected(tmp_path):
-    """A live writer's lock (recent mtime) must NOT be stolen."""
-    import hashlib
-    import os
-
-    store = _parquet_store(tmp_path)
-    store.LOCK_TIMEOUT_S = 0.3  # fail fast for the test
-    oid = "2c55f399-0000-0000-0000-000000000001"
-    key = hashlib.sha1(f"{oid}\x00{ORDERS_PARTITION_KEY}".encode()).hexdigest()[:12]
-    lock = os.path.join(store.path, f".commit-{key}.lock")
-    with open(lock, "w"):
-        pass
-    with pytest.raises(TimeoutError):
-        _append_order(store, oid)
-    os.unlink(lock)
-
-
-def test_stale_maintenance_lock_does_not_block_appends(tmp_path):
-    import os
-    import time
-
-    store = _parquet_store(tmp_path)
-    with open(store._maintenance_lock_path(), "w"):
-        pass
-    old = time.time() - store.LOCK_STALE_S - 5
-    os.utime(store._maintenance_lock_path(), (old, old))
-    _append_order(store, "2c55f399-0000-0000-0000-000000000002")
-    assert store.get_statistics().total_events_count == 1
-
-
-def test_killed_writer_lock_recovered_by_second_writer(tmp_path):
-    """Verdict #7 scenario: a writer PROCESS dies while holding the commit
-    lock; a second writer in another process must succeed once the lock
-    goes stale instead of deadlocking until LOCK_TIMEOUT_S."""
-    import hashlib
-    import os
-    import signal
-    import subprocess
-    import sys
-    import time
-
-    store = _parquet_store(tmp_path)
-    store.LOCK_STALE_S = 0.5
-    oid = "2c55f399-0000-0000-0000-000000000001"
-    key = hashlib.sha1(f"{oid}\x00{ORDERS_PARTITION_KEY}".encode()).hexdigest()[:12]
-    lock = os.path.join(store.path, f".commit-{key}.lock")
-    # child acquires the lock exactly as append_to_stream does, then hangs
-    child = subprocess.Popen(
-        [sys.executable, "-c",
-         f"import os,time; os.open({lock!r}, os.O_CREAT|os.O_EXCL|os.O_WRONLY); "
-         "print('locked', flush=True); time.sleep(60)"],
-        stdout=subprocess.PIPE,
-    )
-    assert child.stdout.readline().strip() == b"locked"
-    child.send_signal(signal.SIGKILL)  # crash mid-append
-    child.wait()
-    time.sleep(0.6)  # let the abandoned lock cross the stale TTL
+    for path in (store._stream_lock_path(oid, ORDERS_PARTITION_KEY),
+                 store._lock_path("maintenance")):
+        open(path, "w").close()
     t0 = time.monotonic()
     _append_order(store, oid)
+    store.compact()
     assert time.monotonic() - t0 < 5
     assert store.load_stream(oid, ORDERS_PARTITION_KEY).version == 1
 
 
-# -- lock-protocol hardening (round-3: owner tokens, heartbeat, dedupe) ------
+def test_fresh_lock_is_respected(tmp_path, caplog):
+    """A held lock — the stream's commit lock or the maintenance lock —
+    makes a contender wait and then time out, with a warning logged."""
+    import logging
 
-def test_release_only_unlinks_own_lock(tmp_path):
-    """A stalled holder whose lock was legitimately stolen must NOT remove
-    the new holder's lock in its finally (owner-token release)."""
-    import os
-
-    store = _parquet_store(tmp_path)
-    lock = os.path.join(store.path, ".commit-deadbeef.lock")
-    fd, token = store._acquire_lock_file(lock, time.monotonic() + 5)
-    # simulate a steal + new acquisition: different owner token on disk
-    os.unlink(lock)
-    with open(lock, "w") as f:
-        f.write("someone-else")
-    store._release_lock_file(lock, fd, token)
-    assert os.path.exists(lock)  # new holder's lock survived
-    with open(lock) as f:
-        assert f.read() == "someone-else"
-    os.unlink(lock)
-
-
-def test_heartbeat_refreshed_lock_not_stolen_after_rename_race(tmp_path):
-    """The steal path re-checks the grave's mtime after winning the rename:
-    a lock whose holder heartbeat-refreshed it is restored, not destroyed."""
-    import os
+    from cloudfabric_eventsourcing_spark.eventstore.locking import exclusive_lock
 
     store = _parquet_store(tmp_path)
-    store.LOCK_TIMEOUT_S = 0.5
-    lock = os.path.join(store.path, ".commit-cafebabe.lock")
-    with open(lock, "w") as f:
-        f.write("live-holder")
-    old = time.time() - store.LOCK_STALE_S - 5
-    os.utime(lock, (old, old))
-
-    real_rename = os.rename
-
-    def rename_then_heartbeat(src, dst):
-        real_rename(src, dst)
-        if src == lock:
-            # holder's heartbeat lands between the stealer's stat and its
-            # grave inspection: the renamed inode gets a fresh mtime
-            os.utime(dst)
-
-    import unittest.mock as mock
-
-    with mock.patch("os.rename", side_effect=rename_then_heartbeat):
-        with pytest.raises(TimeoutError):
-            store._acquire_lock_file(lock, time.monotonic() + 0.4)
-    # the live holder's lock was restored with its content intact
-    assert os.path.exists(lock)
-    with open(lock) as f:
-        assert f.read() == "live-holder"
+    store.LOCK_TIMEOUT_S = 0.3  # fail fast for the test
+    oid = "2c55f399-0000-0000-0000-000000000001"
+    commit_lock = store._stream_lock_path(oid, ORDERS_PARTITION_KEY)
+    with caplog.at_level(logging.WARNING):
+        with exclusive_lock(commit_lock, 1.0):
+            with pytest.raises(TimeoutError):
+                _append_order(store, oid)
+        with exclusive_lock(store._lock_path("maintenance"), 1.0):
+            with pytest.raises(TimeoutError):
+                store.compact()
+    assert caplog.text.count("still held after") == 2
+    _append_order(store, oid)  # released on exit: the append goes through
+    assert store.load_stream(oid, ORDERS_PARTITION_KEY).version == 1
 
 
-def test_maintenance_heartbeat_keeps_long_op_owned(tmp_path):
-    """A maintenance op running longer than LOCK_STALE_S must keep its lock
-    fresh (heartbeat thread) so a second op cannot steal it mid-rewrite."""
-    import os
+def test_stale_maintenance_lock_does_not_block_appends(tmp_path):
+    """A maintenance process killed mid-op leaves no stale lock: the
+    kernel frees it at once, so the next append and the next maintenance
+    op both run without waiting."""
+    import signal
 
     store = _parquet_store(tmp_path)
-    store.LOCK_STALE_S = 0.3
-    with store._maintenance():
-        time.sleep(1.0)  # > 3x the stale TTL
-        age = time.time() - os.stat(store._maintenance_lock_path()).st_mtime
-        assert age < store.LOCK_STALE_S, "heartbeat failed to refresh the lock"
-        # a contender arriving now must see the lock as HELD, not stale
-        store2 = ParquetEventStore(store.path)
-        store2.LOCK_STALE_S = 0.3
-        store2.LOCK_TIMEOUT_S = 0.4
-        with pytest.raises(TimeoutError):
-            store2._acquire_lock_file(
-                store2._maintenance_lock_path(), time.monotonic() + 0.4
-            )
-    assert not os.path.exists(store._maintenance_lock_path())
+    store.LOCK_TIMEOUT_S = 2.0
+    maint_lock = store._lock_path("maintenance")
+    child = _hold_lock_in_child(maint_lock)
+    assert not _lock_is_free(maint_lock)
+    child.send_signal(signal.SIGKILL)  # crash mid-maintenance
+    child.communicate()  # reaps the child and closes its stdout pipe
+    assert _lock_is_free(maint_lock)
+    _append_order(store, "2c55f399-0000-0000-0000-000000000002")
+    _append_order(store, "2c55f399-0000-0000-0000-000000000003")
+    store.compact()
+    assert len(store._fragments()) == 1
+    assert store.get_statistics().total_events_count == 2
+
+
+def test_killed_writer_lock_recovered_by_second_writer(tmp_path):
+    """A writer PROCESS dies while holding the commit lock; a second
+    writer in another process succeeds at once — the kernel released the
+    lock with the dead process (reference: Postgres row locks die with
+    the writer)."""
+    import signal
+
+    store = _parquet_store(tmp_path)
+    store.LOCK_TIMEOUT_S = 2.0
+    oid = "2c55f399-0000-0000-0000-000000000001"
+    commit_lock = store._stream_lock_path(oid, ORDERS_PARTITION_KEY)
+    child = _hold_lock_in_child(commit_lock)
+    child.send_signal(signal.SIGKILL)  # crash mid-append
+    child.communicate()  # reaps the child and closes its stdout pipe
+    assert _lock_is_free(commit_lock)
+    t0 = time.monotonic()
+    _append_order(store, oid)
+    assert time.monotonic() - t0 < 1
+    assert store.load_stream(oid, ORDERS_PARTITION_KEY).version == 1
+
+
+def test_slow_locked_section_is_not_raced(tmp_path, monkeypatch):
+    """A writer whose locked section runs long keeps the stream: a second
+    store on the same directory waits for it, then fails the version
+    check, and the stream holds exactly one event.  The former lease
+    protocol stole any lock older than its stale TTL (set to 0.3 s here,
+    where that attribute still exists), so both writers committed
+    version 1 and load_stream silently dropped one of the two events."""
+    monkeypatch.setattr(ParquetEventStore, "LOCK_STALE_S", 0.3, raising=False)
+    store_a = _parquet_store(tmp_path)
+    store_b = ParquetEventStore(store_a.path)
+    oid = "2c55f399-0000-0000-0000-000000000001"
+    in_section = threading.Event()
+    real_refresh = store_a._refresh_version_cache
+
+    def slow_refresh():
+        in_section.set()
+        time.sleep(0.8)
+        real_refresh()
+
+    monkeypatch.setattr(store_a, "_refresh_version_cache", slow_refresh)
+    writer_a = threading.Thread(target=_append_order, args=(store_a, oid))
+    writer_a.start()
+    assert in_section.wait(5)
+    with pytest.raises(OptimisticConcurrencyError):
+        _append_order(store_b, oid)
+    writer_a.join(timeout=10)
+    assert not writer_a.is_alive()
+    stream = ParquetEventStore(store_a.path).load_stream(oid, ORDERS_PARTITION_KEY)
+    assert stream.version == 1 and len(stream.events) == 1
+    assert store_a.get_statistics().total_events_count == 1
+
+
+_CONTENTION_WORKER = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from cloudfabric_eventsourcing_spark.eventstore import (
+    OptimisticConcurrencyError, ParquetEventStore)
+from tests.domain_fixtures import ORDERS_PARTITION_KEY, OrderItemAdded
+
+store_path, worker, n_appends, n_streams = sys.argv[2], *map(int, sys.argv[3:6])
+store = ParquetEventStore(store_path)
+store.initialize()
+print("ready", flush=True)
+sys.stdin.readline()  # start line: every worker begins together
+committed, conflicts = 0, 0
+for i in range(n_appends):
+    sid = f"2c55f399-0000-0000-0000-{(worker + i) % n_streams:012d}"
+    while True:
+        version = store.load_stream(sid, ORDERS_PARTITION_KEY).version
+        event = OrderItemAdded(
+            partition_key=ORDERS_PARTITION_KEY, item={"by": worker, "n": i})
+        try:
+            store.append_to_stream({"userId": "w"}, sid, version, [event])
+            committed += 1
+            break
+        except OptimisticConcurrencyError:
+            conflicts += 1
+    if worker == 0 and i == n_appends // 2:
+        store.compact()
+print(json.dumps({"committed": committed, "conflicts": conflicts}), flush=True)
+"""
+
+
+def test_multiprocess_contention_with_compaction(tmp_path):
+    """4 processes, each with its own store on one directory, append with
+    optimistic-concurrency retry to 4 shared streams while one of them
+    compacts mid-run: every stream's versions are exactly 1..N with no
+    duplicates, and the store holds one event per successful append."""
+    import json
+    import subprocess
+
+    store = _parquet_store(tmp_path)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    n_workers, n_appends, n_streams = 4, 40, 4
+    workers = [
+        subprocess.Popen(
+            [sys.executable, "-c", _CONTENTION_WORKER, root, store.path,
+             str(w), str(n_appends), str(n_streams)],
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+        )
+        for w in range(n_workers)
+    ]
+    for p in workers:
+        assert p.stdout.readline().strip() == "ready"
+    for p in workers:
+        p.stdin.write("go\n")
+        p.stdin.flush()
+    results = []
+    for p in workers:
+        out, _ = p.communicate(timeout=60)
+        assert p.returncode == 0
+        results.append(json.loads(out))
+    committed = sum(r["committed"] for r in results)
+    assert committed == n_workers * n_appends
+    assert sum(r["conflicts"] for r in results) > 0  # the streams were contended
+
+    reader = ParquetEventStore(store.path)
+    total = 0
+    for s in range(n_streams):
+        sid = f"2c55f399-0000-0000-0000-{s:012d}"
+        versions = reader._scan(
+            pc.field("stream_id") == sid, columns=["stream_version"]
+        )["stream_version"].to_pylist()
+        assert sorted(versions) == list(range(1, len(versions) + 1)), sid
+        assert reader.load_stream(sid, ORDERS_PARTITION_KEY).version == len(versions)
+        total += len(versions)
+    assert total == committed == reader.get_statistics().total_events_count
+    assert len(reader._fragments()) < committed  # the compaction ran
 
 
 def test_reader_dedupes_compaction_swap_window(tmp_path):

@@ -1097,6 +1097,12 @@ def test_winnowing_arrow_kernel_identical(spark, sf_dir):
             (5, "four tokens right here"),
             (6, "tab\tand\nnewline   runs\x0bform\fone token stream"),
             (7, "UPPER Case MiXeD tokens lower the same way"),
+            # non-ASCII case folding (final sigma, dotted capital I): the
+            # JVM and Python lowercase these identically
+            (8, "ΣΑΣ"),
+            (9, "ΣΑΣ ΟΔΟΣ"),
+            (10, "İ"),
+            (11, "ΣΑΣ ΟΔΟΣ İ ΣΑΣ ΟΔΟΣ"),
         ],
         "doc_id long, text string",
     )
@@ -3191,6 +3197,32 @@ def test_quality_score_no_int_overflow_on_large_docs(spark):
     df = spark.createDataFrame([(1, "a" * 400_000)], ["doc_id", "text"])
     got = with_quality_score(df).select("quality").collect()[0][0]
     assert got == 0.92, got
+
+
+def test_incremental_components_small_differential(spark):
+    """Default-gate twin of the slow differential below: on one small
+    seeded graph, incremental_components over a split edge list equals a
+    full connected_components recompute over all edges."""
+    import random
+
+    from cloudfabric_eventsourcing_spark.operators import graph
+
+    rng = random.Random(3)
+    edges = [(rng.randrange(40), rng.randrange(40)) for _ in range(30)]
+    edges = [(a, b) for a, b in edges if a != b]
+    old_df = spark.createDataFrame(edges[:18], ["id_a", "id_b"])
+    new_df = spark.createDataFrame(edges[18:], ["id_a", "id_b"])
+    got = {
+        (r["node"], r["component"])
+        for r in graph.incremental_components(
+            graph.connected_components(old_df), new_df
+        ).collect()
+    }
+    want = {
+        (r["node"], r["component"])
+        for r in graph.connected_components(old_df.unionByName(new_df)).collect()
+    }
+    assert got == want, (sorted(got - want), sorted(want - got))
 
 
 @pytest.mark.slow
