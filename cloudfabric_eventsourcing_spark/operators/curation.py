@@ -55,15 +55,38 @@ modules):
                           (sampling.deterministic_shuffle), the handoff
                           point to packing.pack_offsets
 
-Every stage stays declarative (Catalyst plans end to end); the whole
-pipeline is lazy — one action materializes it. Stages toggle off for
-ablations. Returns (curated_df, stats_dict) where stats records per-stage
-row counts (each count is an action; pass collect_stats=False to keep the
-pipeline fully lazy).
+Every stage stays declarative (Catalyst plans end to end). Stages toggle
+off for ablations. Returns (curated_df, stats_dict) where stats records
+the rows remaining after each stage.
+
+The counts cost one pass, not one pass per stage: each noted stage
+carries a string-named ``DataFrame.observe`` count, and ONE action — an
+eager ``localCheckpoint`` of the output, tagged in the Spark UI with
+``setJobDescription("curate: <stages>")`` — runs the pipeline and fills
+every count at once (the observed-metrics mechanism Structured Streaming
+uses for per-trigger progress).  The one exception is a stage whose
+metric node the optimizer drops because it sat under a join with an
+empty side; that stage gets a count of its own.  The returned frame is
+that checkpoint, so the caller's collect/write reads materialized rows
+instead of running the pipeline again, and no metric node leaks into
+the caller's plans.
+Checkpoint blocks are executor-local and non-replicated, the same
+caveat as dedup.hamming_neardup_pairs: unrecoverable on executor loss
+and discouraged under dynamic allocation.  With collect_stats=False
+curate adds no action: the result is the lazy plan and stats is empty.
+
+``pyspark.sql.Observation`` is deliberately not used: the first use
+initializes the session's observation manager, which is not
+serializable, and from then on every task whose closure captures the
+SparkSession (a fitted LogisticRegressionModel that still holds its
+training summary does) fails with "Task not serializable".  Metrics
+named by a string are read back from the action's QueryExecution
+instead, which leaves the manager untouched.
 """
 
 from __future__ import annotations
 
+import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -103,13 +126,20 @@ def curate(
     shuffle_positions: bool = False,
     collect_stats: bool = True,
 ) -> tuple[DataFrame, dict]:
-    """Run the curation pipeline; see module docstring for stage order."""
-    stats: dict = {}
+    """Run the curation pipeline; see module docstring for stage order.
+
+    With collect_stats=True (the default) the pipeline runs exactly once,
+    inside this call: the result is an eager local checkpoint of the
+    output and stats maps each noted stage to its remaining row count.
+    With collect_stats=False curate adds no action and stats is empty."""
+    tag = uuid.uuid4().hex  # two curated frames never share a metric name
+    noted: dict[str, DataFrame] = {}
 
     def note(stage: str, df: DataFrame) -> DataFrame:
-        if collect_stats:
-            stats[stage] = df.count()
-        return df
+        if not collect_stats:
+            return df
+        noted[stage] = df.observe(f"curate_{tag}_{stage}", F.count(F.lit(1)))
+        return noted[stage]
 
     out = note("input", docs)
 
@@ -289,9 +319,30 @@ def curate(
             out, id_col=id_col, salt=sample_salt
         )
 
-    if collect_stats:
-        stats["output"] = out.count() if "sampled" not in stats else stats["sampled"]
-    return out, stats
+    if not collect_stats:
+        return out, {}
+    out = note("output", out)
+    sc = out.sparkSession.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("curate: " + ", ".join(noted))
+    try:
+        done = out.localCheckpoint(eager=True)
+    finally:
+        sc.setJobDescription(previous)
+    observed = out._jdf.queryExecution().observedMetrics()
+    stats = {}
+    for stage, df in noted.items():
+        name = f"curate_{tag}_{stage}"
+        # a join with an empty side is replaced by an empty relation
+        # (statically, or by AQE once a stage comes back empty), and the
+        # metric nodes beneath it go with it: only such a stage is
+        # counted on its own
+        stats[stage] = (
+            observed.apply(name).getLong(0)
+            if observed.contains(name)
+            else df.count()
+        )
+    return done, stats
 
 
 def corpus_report(

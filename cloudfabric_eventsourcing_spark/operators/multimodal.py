@@ -565,6 +565,9 @@ def image_dhash(
                 out["media_id"].append(row["media_id"])
                 out["dhash"].append(dh)
             if out["media_id"]:
+                # nullable Int64: a None next to Python ints would make
+                # pandas infer float64, which rounds hashes above 2**53
+                out["dhash"] = pd.array(out["dhash"], dtype="Int64")
                 yield pd.DataFrame(out)
 
     return df.where(F.col("kind") == "image").mapInPandas(

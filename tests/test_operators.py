@@ -2929,6 +2929,9 @@ def test_curate_with_persisted_index_drops_corpus_dups(spark, docs, tmp_path):
     )
     assert {r["doc_id"] for r in out.collect()} == {80000}
     assert stats["corpus_dedup"] == 1 and stats["neardup"] >= 4
+    # the whole dict as the count-per-stage implementation (commit
+    # df1ef89) gave it
+    assert stats == {"input": 4, "neardup": 4, "corpus_dedup": 1, "output": 1}
 
 
 def test_curation_fluency_gate_scores_short_docs_zero(spark):
@@ -2946,6 +2949,165 @@ def test_curation_fluency_gate_scores_short_docs_zero(spark):
     assert sorted(r["doc_id"] for r in kept0.collect()) == [1, 2, 3, 4]
     kept1, _ = curate(df, min_fluency=0.5, **kw)
     assert sorted(r["doc_id"] for r in kept1.collect()) == [3, 4]
+
+
+def _curate_pin_corpus(spark):
+    """12 docs that give every cheap curate stage something to drop: a
+    canonical-URL duplicate (2), a self-repeating doc (5), a quote shared
+    by two docs (3, 4), an exact copy (7), a one-token doc (8) and a
+    doc of unique bigrams (11); three sources for stratified sampling."""
+
+    def text(i):
+        return (
+            f"the data system is fast u{i}a and the model is small u{i}b "
+            f"for the team u{i}c"
+        )
+
+    quote = "one two three four five six seven eight nine ten eleven twelve"
+    rows = [
+        (1, "http://a.com/x", "web", text(1)),
+        (2, "HTTP://WWW.A.com:80/x", "web", text(2)),
+        (3, "http://b.com/q", "web",
+         "the data system is fast u3a " + quote + " for the team u3c"),
+        (4, "http://c.com/q", "web",
+         quote + " and the model is small u4b for the team u4c"),
+        (5, "http://d.com/r", "web",
+         "repeat phrase alpha beta gamma delta epsilon zeta " * 3),
+        (6, "http://e.com/1", "books", text(6)),
+        (7, "http://e.com/2", "books", text(6)),
+        (8, "http://e.com/3", "books", "lonely"),
+        (9, None, "books", text(9)),
+        (10, None, "forum", text(10)),
+        (11, "http://f.com/", "forum", "zzq xqv kwp"),
+        (12, "http://g.com/", "forum", text(12)),
+    ]
+    return spark.createDataFrame(
+        rows, "doc_id long, url string, source string, text string"
+    )
+
+
+def test_curate_stats_equal_per_stage_counts(spark):
+    """curate() fills its stats from observed metrics of one action; the
+    dicts must equal what a count() after every stage gives.  Every
+    literal here was captured from the count-per-stage implementation at
+    commit df1ef89 on these inputs.  Covers the stages no other default
+    test pins (url_deduped, span_policy, fluency_gate, sampled, output
+    after shuffle_positions), a gate that empties the corpus mid-way,
+    and an empty input, whose metric nodes the optimizer prunes under
+    empty joins."""
+    from cloudfabric_eventsourcing_spark.operators.curation import curate
+
+    docs = _curate_pin_corpus(spark)
+    base = dict(url_col="url", neardup_threshold=None, scrub_pii=False)
+
+    out, stats = curate(
+        docs, span_k=8, exact=False, min_fluency=1.5, sample_per_stratum=2,
+        sample_strata="source", shuffle_positions=True, **base,
+    )
+    assert stats == {
+        "input": 12, "url_deduped": 11, "span_policy": 8,
+        "fluency_gate": 6, "sampled": 5, "output": 5,
+    }
+    rows = out.collect()
+    assert sorted(r["doc_id"] for r in rows) == [1, 4, 9, 10, 12]
+    assert sorted(r["position"] for r in rows) == [0, 1, 2, 3, 4]
+
+    out, stats = curate(docs, min_fluency=1.5, shuffle_positions=True, **base)
+    assert stats == {
+        "input": 12, "url_deduped": 11, "exact_dedup": 10,
+        "fluency_gate": 8, "output": 8,
+    }
+    assert sorted(r["doc_id"] for r in out.collect()) == [
+        1, 3, 4, 5, 6, 9, 10, 12,
+    ]
+
+    _, stats = curate(
+        docs, min_quality=2.0, decontaminate_against=docs.limit(1),
+        decontaminate_n=3, **base,
+    )
+    assert stats == {
+        "input": 12, "url_deduped": 11, "exact_dedup": 10,
+        "quality_gate": 0, "decontaminated": 0, "output": 0,
+    }
+
+    out, stats = curate(
+        docs.where(F.col("doc_id") < 0), boilerplate_min_docs=2,
+        neardup_threshold=None, min_fluency=0.1,
+    )
+    assert stats == {
+        "input": 0, "boilerplate_stripped": 0, "exact_dedup": 0,
+        "fluency_gate": 0, "output": 0,
+    }
+    assert out.collect() == []
+
+
+def test_curate_stats_cost_one_pass(spark):
+    """Stats cost one materializing action, not one pass per stage: a
+    stats-on curate() plus the caller's collect() submits at most one
+    job more than a stats-off curate() plus collect(), and the stats-off
+    call submits none.  The action carries a "curate: <stages>" job
+    description and the caller's description comes back afterwards.
+    Two stats-on outputs union without a metric-name clash, and a freshly
+    fitted quality model still scores afterwards (no session state that
+    breaks task serialization)."""
+    import uuid
+
+    from cloudfabric_eventsourcing_spark.operators.classify import (
+        score_quality,
+        train_quality_classifier,
+    )
+    from cloudfabric_eventsourcing_spark.operators.curation import curate
+
+    sc = spark.sparkContext
+    docs = _curate_pin_corpus(spark)
+    model = train_quality_classifier(
+        docs.where(F.col("source") != "forum"),
+        docs.where(F.col("source") == "forum"),
+        num_features=1 << 10,
+        max_iter=5,
+    )
+    kw = dict(boilerplate_min_docs=4, neardup_threshold=None)
+
+    def jobs(fn):
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, "caller's description")
+        try:
+            result = fn()
+            assert sc.getLocalProperty("spark.job.description") == (
+                "caller's description"
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    (lazy, lazy_stats), lazy_call = jobs(
+        lambda: curate(docs, collect_stats=False, **kw)
+    )
+    assert lazy_call == [] and lazy_stats == {}
+    lazy_ids, lazy_collect = jobs(
+        lambda: sorted(r[0] for r in lazy.collect())
+    )
+
+    (done, stats), call = jobs(lambda: curate(docs, **kw))
+    ids, collect = jobs(lambda: sorted(r[0] for r in done.collect()))
+    assert ids == lazy_ids
+    assert stats == {
+        "input": 12, "boilerplate_stripped": 12, "exact_dedup": 11,
+        "output": 11,
+    }
+    assert len(call) + len(collect) <= len(lazy_call) + len(lazy_collect) + 1
+
+    store = sc._jsc.sc().statusStore()
+    descriptions = {store.job(j).description().get() for j in call}
+    assert descriptions == {
+        "curate: input, boilerplate_stripped, exact_dedup, output"
+    }
+
+    again, _ = curate(docs, **kw)
+    assert done.unionByName(again).count() == 2 * len(ids)
+    scored = score_quality(docs, model, out_col="q").collect()
+    assert len(scored) == 12 and all(0.0 <= r["q"] <= 1.0 for r in scored)
 
 
 def test_write_training_shards_roundtrip(spark, docs, tmp_path):
@@ -5393,6 +5555,38 @@ def test_image_dhash_and_hamming_pairs(spark):
     assert got_pairs == {(0, 1): 2, (2, 3): 2}
     with _pytest.raises(ValueError, match="max_hamming"):
         dedup.hamming_neardup_pairs(hashes, "dhash", "media_id", max_hamming=4)
+
+
+def test_image_dhash_exact_next_to_null_row(spark):
+    """A null-content row and a fingerprint above 2**53 in ONE Arrow
+    batch: the dhash column must come back as the exact int64 (a float64
+    column in between rounds the low bits away and breaks the Hamming
+    distances built on it)."""
+    from cloudfabric_eventsourcing_spark.operators import codecs, multimodal
+
+    pat = 0x9E3779B97F4A7C15  # low bits set: not exact as a float64
+    px = bytearray()
+    for r in range(8):
+        v = 128
+        row = [v]
+        for c in range(8):
+            v += 8 if (pat >> (r * 8 + c)) & 1 else -8
+            row.append(v)
+        px.extend(x for p in row for x in (p, p, p))
+    want = codecs.dhash_bits(9, 8, 3, bytes(px))
+    assert abs(want) > 2**53 and int(float(want)) != want
+    media = spark.createDataFrame(
+        [
+            (1, "image", bytearray(codecs.encode_png(9, 8, 3, bytes(px))), None),
+            (2, "image", None, None),
+        ],
+        multimodal.MEDIA_SCHEMA,
+    ).coalesce(1)
+    got = {
+        r["media_id"]: r["dhash"]
+        for r in multimodal.image_dhash(media, on_error="null").collect()
+    }
+    assert got == {1: want, 2: None}
 
 
 def test_hamming_index_probe_append_and_crash_discipline(spark, tmp_path):
