@@ -36,7 +36,6 @@ import datetime
 import glob
 import hashlib
 import json
-import logging
 import os
 import threading
 import time
@@ -57,9 +56,8 @@ from cloudfabric_eventsourcing_spark.eventstore.event import (
     OptimisticConcurrencyError,
     StreamNotFoundError,
 )
+from cloudfabric_eventsourcing_spark import commit
 from cloudfabric_eventsourcing_spark.eventstore.locking import exclusive_lock
-
-log = logging.getLogger(__name__)
 
 Subscriber = Callable[[Event], None]
 
@@ -462,19 +460,17 @@ class ParquetEventStore(EventStore):
     # simply survives next to the rewritten snapshot, so appends never wait
     # for maintenance. The maintenance lock serializes maintenance ops
     # against each other (e.g. a hard_delete during a compact would
-    # otherwise resurrect the deleted rows).
+    # otherwise resurrect the deleted rows).  The swap and its crash
+    # recovery are `commit.replace_files` / `commit.recover` (see that
+    # module's docstring).
 
     @contextlib.contextmanager
     def _maintenance(self):
-        with exclusive_lock(self._lock_path("maintenance"), self.LOCK_TIMEOUT_S):
-            # repair any swap a previous maintenance op left half-done
-            # BEFORE this op reads the fragment list: without this, a
-            # crash between _replace_fragments' rename-in and unlinks
-            # would make the next compact() fold fragments + compacted
-            # copy into one file — duplicate events baked permanently,
-            # and for a crashed hard_delete the supposedly-deleted rows
-            # resurrected into the compacted output
-            self._recover_swap()
+        # repair a swap a previous maintenance op left half-done BEFORE
+        # this op reads the fragment list
+        with commit.maintenance(self.path, [self.path], self.LOCK_TIMEOUT_S) as repaired:
+            if repaired:
+                self._invalidate_version_cache()
             yield
 
     def compact(self, max_fragments: int = 1) -> None:
@@ -492,76 +488,8 @@ class ParquetEventStore(EventStore):
             table = ds.to_table().sort_by(
                 [("stream_id", "ascending"), ("stream_version", "ascending")]
             )
-            self._replace_fragments(frags, table)
-
-    _SWAP_MARKER = ".swap-intent.json"
-
-    def _swap_marker_path(self) -> str:
-        return os.path.join(self.path, self._SWAP_MARKER)
-
-    def _recover_swap(self) -> None:
-        """Roll forward (or discard) a half-finished _replace_fragments.
-        Caller must hold the maintenance lock.  The marker is renamed in
-        atomically before the snapshot becomes visible, so: marker +
-        snapshot present → finish the unlinks; marker without snapshot →
-        nothing swapped, drop the marker.  Leftover `.tmp-compact-*`
-        files are pre-swap garbage either way."""
-        marker = self._swap_marker_path()
-        part = marker + ".part"
-        if os.path.exists(part):
-            log.warning("%s: removing a half-written swap marker", self.path)
-            os.unlink(part)
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                intent = json.load(fh)
-            log.warning("%s: repairing an interrupted swap to %s (%d fragments)",
-                        self.path, intent["out"], len(intent["frags"]))
-            if os.path.exists(os.path.join(self.path, intent["out"])):
-                for base in intent["frags"]:
-                    f = os.path.join(self.path, base)
-                    if os.path.exists(f):
-                        os.unlink(f)
-                self._invalidate_version_cache()
-            os.unlink(marker)
-        for tmp in glob.glob(os.path.join(self.path, ".tmp-compact-*")):
-            log.warning("%s: removing leftover %s", self.path, os.path.basename(tmp))
-            os.unlink(tmp)
-
-    def _replace_fragments(self, frags: list[str], table: pa.Table) -> None:
-        """Atomically swap exactly `frags` for one compacted snapshot.
-        Caller must hold the maintenance lock and must have built `table`
-        from exactly `frags`."""
-        tmp = os.path.join(self.path, f".tmp-compact-{uuid.uuid4().hex[:8]}.parquet")
-        # small row groups -> per-stream point reads skip unrelated groups
-        pq.write_table(table, tmp, row_group_size=4096)
-        out = os.path.join(
-            self.path, f"part-{time.time_ns():020d}-compacted.parquet"
-        )
-        # intent marker first (atomic via rename): a crash between the
-        # snapshot rename and the unlinks is repaired by _recover_swap
-        # at the next maintenance op instead of leaving fragments whose
-        # rows the next compact would duplicate into the store for good
-        marker = self._swap_marker_path()
-        with open(marker + ".part", "w") as fh:
-            json.dump(
-                {
-                    "out": os.path.basename(out),
-                    "frags": [os.path.basename(f) for f in frags],
-                },
-                fh,
-            )
-        os.rename(marker + ".part", marker)
-        # snapshot becomes visible BEFORE the originals vanish: a reader
-        # globbing mid-swap sees transient DUPLICATE rows — harmless for
-        # appenders (max stream_version unchanged, version precheck stays
-        # correct) AND for readers (load_stream/load_events dedupe by
-        # stream_version / event id) — never a partial store (which would
-        # let an appender observe version 0 and re-issue committed versions)
-        os.rename(tmp, out)
-        for f in frags:
-            os.unlink(f)
-        os.unlink(marker)
-        self._invalidate_version_cache()
+            commit.replace_files(self.path, frags, _snapshot_writer(table))
+            self._invalidate_version_cache()
 
     def get_statistics(self):
         table = self._scan(columns=["created_at"])
@@ -593,7 +521,8 @@ class ParquetEventStore(EventStore):
             kept = ds.to_table(filter=expr)
             if kept.num_rows == before:
                 return False
-            self._replace_fragments(frags, kept)
+            commit.replace_files(self.path, frags, _snapshot_writer(kept))
+            self._invalidate_version_cache()
             return True
 
     # -- Spark access -------------------------------------------------------
@@ -639,6 +568,14 @@ def _table_from_records(records: list[EventRecord]) -> pa.Table:
     return pa.table(cols, schema=_ARROW_SCHEMA)
 
 
+def _snapshot_writer(table: pa.Table):
+    """`commit.replace_files` writer: one snapshot file with small row
+    groups, so per-stream point reads skip unrelated groups."""
+    return lambda staging: pq.write_table(
+        table, os.path.join(staging, "snapshot.parquet"), row_group_size=4096
+    )
+
+
 def _records_from_table(table: pa.Table) -> list[EventRecord]:
     return [EventRecord(**row) for row in table.to_pylist()]
 
@@ -657,7 +594,7 @@ def _relist_on_vanish(read):
 
 def _dedupe_versions(records: list[EventRecord]) -> list[EventRecord]:
     """Drop duplicate stream_versions from a version-sorted single-stream
-    read: during the compaction swap window (_replace_fragments publishes
+    read: during the compaction swap window (commit.replace_files publishes
     the snapshot BEFORE unlinking sources) a reader can see every event
     twice; without this, aggregate rehydration would apply each event
     twice."""

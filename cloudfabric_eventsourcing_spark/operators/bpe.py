@@ -65,6 +65,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cloudfabric_eventsourcing_spark import commit
+
 #: end-of-word marker (Sennrich's </w>): lets the encoder distinguish
 #: word-final subwords so detokenization is lossless
 EOW = "</w>"
@@ -356,13 +358,8 @@ def save_bpe(
     (delete-marker-first / stamp-last): a crash between the meta and
     merges writes leaves no marker, and load_bpe fails loudly instead
     of encoding with half an artifact."""
-    from cloudfabric_eventsourcing_spark.operators.dedup import (
-        _clear_marker,
-        _stamp_marker,
-    )
-
     _check_mode(mode)
-    _clear_marker(spark, path)
+    commit.clear_marker(spark, path)
     spark.createDataFrame(
         [(_BPE_FORMAT_VERSION, EOW, _SPLITTER_CLASS, True, len(merges),
           mode)],
@@ -373,7 +370,7 @@ def save_bpe(
         [(r, a, b) for r, (a, b) in enumerate(merges)],
         "rank int, a string, b string",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/merges")
-    _stamp_marker(spark, path)
+    commit.stamp_marker(spark, path)
 
 
 def load_bpe(spark, path: str, mode: str = "char") -> list[tuple[str, str]]:
@@ -389,12 +386,8 @@ def load_bpe(spark, path: str, mode: str = "char") -> list[tuple[str, str]]:
     merges never fire on char symbols and vice versa — a mismatch
     silently degrades to base-alphabet encoding).  v1 artifacts carry
     no mode column and load as "char", which is what v1 produced."""
-    from cloudfabric_eventsourcing_spark.operators.dedup import (
-        _require_marker,
-    )
-
     _check_mode(mode)
-    _require_marker(spark, path)
+    commit.require_marker(spark, path)
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     if meta["format_version"] > _BPE_FORMAT_VERSION:
         raise ValueError(

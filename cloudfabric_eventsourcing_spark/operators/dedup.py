@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cloudfabric_eventsourcing_spark import commit
 from cloudfabric_eventsourcing_spark.operators.text import fingerprint_tokens, tokens_column
 
 
@@ -545,43 +546,6 @@ def _grams_and_bands(
 # Persisted MinHash index (incremental dedup)
 # ---------------------------------------------------------------------------
 
-_INDEX_MARKER = "_SPARK_GRAFT_CONSISTENT"  # underscore prefix: ignored by scans
-
-
-def _marker_path(spark, path: str):
-    jvm = spark._jvm
-    mp = jvm.org.apache.hadoop.fs.Path(f"{path}/{_INDEX_MARKER}")
-    return mp.getFileSystem(spark._jsc.hadoopConfiguration()), mp
-
-
-def _clear_marker(spark, path: str) -> None:
-    """First step of a full (overwrite) index save: the meta/data writes
-    that follow are separate jobs, and a crash between them over an
-    existing index leaves parts that DISAGREE (e.g. new banding params
-    over old band rows — probes then silently admit duplicates).  With
-    the marker gone, every reader fails loudly until the save is
-    re-run to completion."""
-    fs, mp = _marker_path(spark, path)
-    fs.delete(mp, False)
-
-
-def _stamp_marker(spark, path: str) -> None:
-    fs, mp = _marker_path(spark, path)
-    fs.create(mp).close()
-
-
-def _require_marker(spark, path: str) -> None:
-    fs, mp = _marker_path(spark, path)
-    if not fs.exists(mp):
-        raise ValueError(
-            f"index at {path} has no consistency marker: a full save is "
-            "in flight or was interrupted (its parts may disagree). "
-            "Re-run the save to completion. For an index written by an "
-            f"older version, create {path}/{_INDEX_MARKER} after "
-            "verifying it is complete."
-        )
-
-
 def save_minhash_index(
     df: DataFrame,
     path: str,
@@ -618,7 +582,7 @@ def save_minhash_index(
                 "band inconsistently"
             )
     else:
-        _clear_marker(spark, path)
+        commit.clear_marker(spark, path)
         spark.createDataFrame(
             [(num_perm, bands, n)], "num_perm int, bands int, n int"
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
@@ -633,11 +597,11 @@ def save_minhash_index(
     grams_df.write.mode(mode).parquet(f"{path}/grams")
     banded.write.mode(mode).partitionBy("bi").parquet(f"{path}/bands")
     if mode != "append":
-        _stamp_marker(spark, path)
+        commit.stamp_marker(spark, path)
 
 
 def _read_minhash_meta(spark, path: str) -> tuple[int, int, int]:
-    _require_marker(spark, path)
+    commit.require_marker(spark, path)
     row = spark.read.parquet(f"{path}/meta").collect()[0]
     return (int(row["num_perm"]), int(row["bands"]), int(row["n"]))
 
@@ -779,12 +743,12 @@ def save_hamming_index(
     grows it incrementally under the shared marker discipline."""
     spark = df.sparkSession
     if mode != "append":
-        _clear_marker(spark, path)
+        commit.clear_marker(spark, path)
         spark.createDataFrame(
             [(4, 16)], "bands int, chunk_bits int"
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
     else:
-        _require_marker(spark, path)
+        commit.require_marker(spark, path)
         row = spark.read.parquet(f"{path}/meta").collect()[0]
         if (row["bands"], row["chunk_bits"]) != (4, 16):
             raise ValueError(
@@ -795,7 +759,7 @@ def save_hamming_index(
         "bi"
     ).parquet(f"{path}/bands")
     if mode != "append":
-        _stamp_marker(spark, path)
+        commit.stamp_marker(spark, path)
 
 
 def hamming_dedup_against_index(
@@ -824,7 +788,7 @@ def hamming_dedup_against_index(
             f"max_hamming <= 3 (got {max_hamming})"
         )
     spark = new_df.sparkSession
-    _require_marker(spark, path)
+    commit.require_marker(spark, path)
     q = _hamming_bands(new_df, hash_col, id_col)
     q_banded = F.broadcast(q) if broadcast else q
     idx = _read_index_table(spark, f"{path}/bands", q.schema)
@@ -1159,7 +1123,7 @@ def save_cosine_index(
             # every later read) — refuse before writing anything
             _check_cosine_layout(existing, path)
     else:
-        _clear_marker(spark, path)
+        commit.clear_marker(spark, path)
         spark.createDataFrame(
             [(dims, bits, seed)], "dims int, bits int, seed int"
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
@@ -1173,7 +1137,7 @@ def save_cosine_index(
         mode
     ).partitionBy("pbucket").parquet(f"{path}/vectors")
     if mode != "append":
-        _stamp_marker(spark, path)
+        commit.stamp_marker(spark, path)
 
 
 def _check_cosine_layout(columns, path: str) -> None:
@@ -1194,7 +1158,7 @@ def _check_cosine_layout(columns, path: str) -> None:
 
 
 def _read_cosine_meta(spark, path: str) -> tuple[int, int, int]:
-    _require_marker(spark, path)
+    commit.require_marker(spark, path)
     row = spark.read.parquet(f"{path}/meta").collect()[0]
     return (int(row["dims"]), int(row["bits"]), int(row["seed"]))
 

@@ -28,11 +28,9 @@ all (its dedup story ends at unique keys); this operator exists for the
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, functions as F
 
-log = logging.getLogger(__name__)
+from cloudfabric_eventsourcing_spark import commit
 
 
 #: target edge rows per partition for the slim (n, m) adjacency frame —
@@ -333,51 +331,6 @@ def save_cluster_index(
     ).write.mode("overwrite").parquet(f"{path}/labels")
 
 
-def _index_fs(spark, path: str):
-    """(Path class, FileSystem) for the index root, resolved through the
-    Hadoop FS API so every swap/recovery touch is scheme-aware (local,
-    hdfs://, s3a:// — same filesystems Spark reads the index with)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return (
-        jvm.org.apache.hadoop.fs.Path,
-        jpath.getFileSystem(spark._jsc.hadoopConfiguration()),
-    )
-
-
-def _checked_rename(fs, P, src: str, dst: str) -> None:
-    """Hadoop FileSystem.rename reports failure by returning false, not
-    raising; an unchecked false here would let the debris sweep delete
-    the committed rows the failed rename left stranded."""
-    if not fs.rename(P(src), P(dst)):
-        raise IOError(f"cluster index swap rename failed: {src} -> {dst}")
-
-
-def _recover_compact_swap(spark, path: str) -> None:
-    """Close the compaction rename windows: a crash between
-    rename(labels -> old) and rename(tmp -> labels) would otherwise
-    leave labels/ missing — and the next append's cold-start bootstrap
-    would then install an EMPTY base over a real corpus.  Roll the swap
-    forward when the tmp dir is committed, backward otherwise."""
-    P, fs = _index_fs(spark, path)
-    labels, tmp, old = (
-        f"{path}/labels",
-        f"{path}/.labels.compact-tmp",
-        f"{path}/.labels.compact-old",
-    )
-    if not fs.exists(P(labels)):
-        if fs.exists(P(tmp + "/_COMMITTED")):
-            log.warning("%s: rolling an interrupted compaction forward", path)
-            _checked_rename(fs, P, tmp, labels)
-        elif fs.exists(P(old)):
-            log.warning("%s: rolling an interrupted compaction back", path)
-            _checked_rename(fs, P, old, labels)
-    for p in (tmp, old):
-        if fs.exists(P(p)):
-            log.warning("%s: removing leftover %s", path, p.rsplit("/", 1)[-1])
-            fs.delete(P(p), True)
-
-
 def load_cluster_labels(spark, path: str) -> DataFrame:
     """Resolved (node, component) view: base + appended nodes, relabeled
     through the min-closure of the remap journal.
@@ -392,7 +345,10 @@ def load_cluster_labels(spark, path: str) -> DataFrame:
     (Round-8 journal-depth study)."""
     from pyspark.errors import AnalysisException
 
-    _recover_compact_swap(spark, path)
+    # a compaction crash between its renames leaves labels/ missing, and
+    # the next append's cold start would install an EMPTY base over a
+    # real corpus
+    commit.recover_swap_dir(spark, f"{path}/labels")
     base = spark.read.parquet(f"{path}/labels")
     try:
         nodes = spark.read.parquet(f"{path}/nodes")
@@ -468,8 +424,9 @@ def append_cluster_pairs(
 
 def compact_cluster_index(spark, path: str) -> None:
     """Materialize the resolved labels as the new base and clear the
-    journal.  Crash-safe by construction: resolved labels are written to
-    a tmp dir and renamed over labels/ (never an empty/partial base);
+    journal.  Crash-safe by construction: resolved labels replace labels/
+    through `commit.swap_dir` (never an empty/partial base — a crash
+    between its renames is repaired by the next load_cluster_labels);
     re-applying a not-yet-deleted journal to already-resolved labels is
     the identity (the old component ids no longer appear), and leftover
     node rows duplicate resolved rows, which the read path drops.
@@ -477,18 +434,11 @@ def compact_cluster_index(spark, path: str) -> None:
     between curate_stream batches — foreachBatch serializes), not
     concurrently with an append: an append landing between the resolve
     and the journal clear would be erased with it."""
-    P, fs = _index_fs(spark, path)
-    # eager checkpoint materializes BEFORE the files it reads are moved
+    # eager checkpoint materializes BEFORE the files it reads are moved;
+    # load_cluster_labels ran recover_swap_dir, as swap_dir requires
     resolved = load_cluster_labels(spark, path).localCheckpoint(eager=True)
-    tmp = f"{path}/.labels.compact-tmp"
-    resolved.write.mode("overwrite").parquet(tmp)
-    fs.create(P(tmp + "/_COMMITTED")).close()  # _recover_compact_swap gate
-    old = f"{path}/.labels.compact-old"
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    _checked_rename(fs, P, f"{path}/labels", old)
-    _checked_rename(fs, P, tmp, f"{path}/labels")
-    fs.delete(P(old), True)
+    commit.swap_dir(spark, f"{path}/labels", resolved)
+    P, fs = commit.hadoop_fs(spark, path)
     # nodes BEFORE remap: a leftover node row still resolves through the
     # journal to the same final label as its resolved base duplicate,
     # whereas the reverse order could leave a stale node row with no

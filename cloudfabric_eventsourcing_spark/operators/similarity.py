@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cloudfabric_eventsourcing_spark import commit
+
 
 def _id_asc_key(v):
     """Ordering key reproducing Spark's ``asc(id)`` tiebreak (nulls
@@ -420,9 +422,6 @@ def ivf_topk(
 # Persisted IVF index
 # ---------------------------------------------------------------------------
 
-_IVF_MARKER = "_SPARK_GRAFT_CONSISTENT"  # underscore prefix: ignored by scans
-
-
 def save_ivf_index(
     df: DataFrame,
     centroids: np.ndarray,
@@ -446,10 +445,7 @@ def save_ivf_index(
     # cell assignments — probes then read the wrong partitions with no
     # error at all.  Missing marker = mid-write or interrupted; load
     # fails loudly instead of serving silently wrong neighbors.
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(f"{path}/{_IVF_MARKER}")
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(marker, False)
+    commit.clear_marker(spark, path)
     cent_rows = [
         (int(i), [float(v) for v in c]) for i, c in enumerate(centroids)
     ]
@@ -460,24 +456,13 @@ def save_ivf_index(
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/vectors"
     )
-    fs.create(marker).close()
+    commit.stamp_marker(spark, path)
 
 
 
 def load_ivf_index(spark, path: str):
     """Returns (assigned_vectors_df, centroid_matrix) for ivf_topk."""
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(f"{path}/{_IVF_MARKER}")
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(marker):
-        raise ValueError(
-            f"IVF index at {path} has no consistency marker: a "
-            "save_ivf_index run is in flight or was interrupted "
-            "(centroids and vectors may disagree). Re-run "
-            "save_ivf_index, or retrain_ivf_index blue/green. For an "
-            f"index saved by an older version, create {path}/"
-            f"{_IVF_MARKER} after verifying it is complete."
-        )
+    commit.require_marker(spark, path)
     cent_rows = (
         spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
     )
@@ -1311,9 +1296,6 @@ def pq_adc_score(
 # query many — the 32x-smaller ANN working set as a durable artifact
 # ---------------------------------------------------------------------------
 
-_PQ_MARKER = "_SPARK_GRAFT_CONSISTENT"  # shared index-marker discipline
-
-
 def save_pq_index(
     df: DataFrame,
     codebooks: np.ndarray,
@@ -1333,10 +1315,7 @@ def save_pq_index(
     codebooks (which would silently rank garbage)."""
     spark = df.sparkSession
     m, k, dsub = codebooks.shape
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(f"{path}/{_PQ_MARKER}")
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(marker, False)
+    commit.clear_marker(spark, path)
     book_rows = [
         (int(j), int(c), [float(v) for v in codebooks[j, c]])
         for j in range(m)
@@ -1348,22 +1327,12 @@ def save_pq_index(
     pq_encode(df, codebooks, vec_col=vec_col).select(
         id_col, "pq_code"
     ).write.mode("overwrite").parquet(f"{path}/codes")
-    fs.create(marker).close()
+    commit.stamp_marker(spark, path)
 
 
 def load_pq_index(spark, path: str):
     """Returns (codes_df, codebook_tensor) for pq_topk."""
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(f"{path}/{_PQ_MARKER}")
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(marker):
-        raise ValueError(
-            f"PQ index at {path} has no consistency marker: a "
-            "save_pq_index run is in flight or was interrupted "
-            "(codebooks and codes may disagree). Re-run save_pq_index. "
-            f"For an index saved by an older version, create {path}/"
-            f"{_PQ_MARKER} after verifying it is complete."
-        )
+    commit.require_marker(spark, path)
     rows = (
         spark.read.parquet(f"{path}/codebooks")
         .orderBy("subspace", "code")
@@ -1402,11 +1371,8 @@ def append_to_pq_index(
     if skip_existing:
         existing = spark.read.parquet(f"{path}/codes").select(id_col)
         df = df.join(existing, id_col, "left_anti")
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(f"{path}/{_PQ_MARKER}")
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(marker, False)
+    commit.clear_marker(spark, path)
     pq_encode(df, books, vec_col=vec_col).select(
         id_col, "pq_code"
     ).write.mode("append").parquet(f"{path}/codes")
-    fs.create(marker).close()
+    commit.stamp_marker(spark, path)

@@ -48,8 +48,10 @@ until the next compaction.  The CORPUS side is idempotent twice over:
   corpus.  The rule is therefore **never shrink an existing epoch
   dir**: a retried epoch first unions the rows already committed under
   its own ``run=/epoch=`` path with the newly accepted set (distinct
-  by id) and overwrites with the union, so partial index commits can
-  only ever ADD corpus rows on replay, never drop them.
+  by id) and replaces the epoch dir with the union, so partial index
+  commits can only ever ADD corpus rows on replay, never drop them.
+  The replace is ``commit.swap_dir`` (crash-safe: the epoch dir never
+  passes through an empty or partial state; see ``commit``).
 
   One failure class stays OUTSIDE the delivery contract: external loss
   of a COMMITTED epoch's corpus files (someone deletes data files of a
@@ -78,83 +80,8 @@ from typing import Callable, Optional
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
+from cloudfabric_eventsourcing_spark import commit
 from cloudfabric_eventsourcing_spark.operators import dedup as _dedup
-
-
-def _path_exists(spark, path: str) -> bool:
-    """Filesystem-agnostic existence check through the Hadoop FS API
-    (works for local paths and any scheme the session can reach)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _epoch_siblings(epoch_path: str) -> tuple[str, str]:
-    """Dot-prefixed tmp/old sibling dirs for the atomic epoch swap
-    (dot-prefixed names are invisible to Spark's file listing, so a
-    half-written tmp dir can never leak into a corpus read)."""
-    parent, base = epoch_path.rsplit("/", 1)
-    return f"{parent}/.{base}.swap-tmp", f"{parent}/.{base}.swap-old"
-
-
-def _recover_epoch_swap(spark, epoch_path: str) -> None:
-    """Close the crash windows of the epoch-union swap (r6 advice):
-    the union is written to a tmp sibling, marked _COMMITTED, and
-    renamed over the epoch dir — so the epoch dir never transitions
-    through an empty/partial state.  A crash can still land between
-    the renames; this replays the interrupted swap forward (tmp is
-    committed → install it) or backward (tmp incomplete → restore the
-    original from old), then clears debris."""
-    jvm, fs = _hadoop_fs(spark, epoch_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    tmp, old = _epoch_siblings(epoch_path)
-    if not fs.exists(P(epoch_path)):
-        # rename failure returns false (Hadoop FS contract); raising here
-        # matters because the debris sweep below would otherwise DELETE
-        # the committed rows the failed rename left stranded in tmp/old
-        if fs.exists(P(tmp + "/_COMMITTED")):
-            if not fs.rename(P(tmp), P(epoch_path)):
-                raise IOError(
-                    f"epoch swap recovery rename failed: {tmp} -> {epoch_path}"
-                )
-        elif fs.exists(P(old)):
-            if not fs.rename(P(old), P(epoch_path)):
-                raise IOError(
-                    f"epoch swap recovery rename failed: {old} -> {epoch_path}"
-                )
-    for p in (tmp, old):
-        if fs.exists(P(p)):
-            fs.delete(P(p), True)
-
-
-def _swap_epoch_dir(spark, epoch_path: str, df: DataFrame) -> None:
-    """Atomically replace ``epoch_path`` with ``df``: write to a tmp
-    sibling, stamp _COMMITTED after the write finishes, then two
-    renames.  On a cluster object store this maps to a manifest/table
-    commit; on HDFS/local both renames are metadata-atomic."""
-    jvm, fs = _hadoop_fs(spark, epoch_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    tmp, old = _epoch_siblings(epoch_path)
-    df.write.mode("overwrite").parquet(tmp)
-    fs.create(P(tmp + "/_COMMITTED")).close()
-    # Hadoop FileSystem.rename reports failure by returning false, not
-    # raising.  An unchecked first rename could leave epoch_path in
-    # place and (on FSes with dir-into-dir rename semantics) let the
-    # second rename move tmp INSIDE it and "succeed" — the unioned rows
-    # would be lost while the index append proceeds, recreating the
-    # stranded-doc inconsistency this swap exists to prevent.
-    if not fs.rename(P(epoch_path), P(old)):
-        raise IOError(f"epoch swap rename failed: {epoch_path} -> {old}")
-    if not fs.rename(P(tmp), P(epoch_path)):
-        raise IOError(f"epoch swap rename failed: {tmp} -> {epoch_path}")
-    fs.delete(P(old), True)
 
 
 def _check_corpus_layout(spark, corpus_path: str) -> None:
@@ -164,9 +91,8 @@ def _check_corpus_layout(spark, corpus_path: str) -> None:
     directory depths (it refuses the read), and silently continuing
     would strand the legacy rows.  Migration: move the flat files into
     ``run=legacy/epoch=0/`` under the same root."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(corpus_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    P, fs = commit.hadoop_fs(spark, corpus_path)
+    jpath = P(corpus_path)
     if not fs.exists(jpath):
         return
     for status in fs.listStatus(jpath):
@@ -188,13 +114,15 @@ def _write_epoch_never_shrink(
     """Run+epoch-keyed idempotent corpus write shared by the text and
     vector loops: replay any interrupted swap, union with rows already
     committed under this epoch path (never-shrink rule — see module
-    docstring), and install via the atomic tmp+_COMMITTED+rename swap
-    when prior rows exist (a naive overwrite would pass through an
-    empty/partial state)."""
-    _recover_epoch_swap(spark, epoch_path)
+    docstring), and install via `commit.swap_dir` when prior rows exist
+    (a naive overwrite deletes the epoch dir before the new files
+    commit, so a crash in that window would lose the prior attempt's
+    committed rows)."""
+    commit.recover_swap_dir(spark, epoch_path)
     union_with_prior = False
     corpus_rows = accepted
-    if _path_exists(spark, epoch_path):
+    P, fs = commit.hadoop_fs(spark, epoch_path)
+    if fs.exists(P(epoch_path)):
         try:
             prior = spark.read.parquet(epoch_path)
             corpus_rows = (
@@ -208,7 +136,7 @@ def _write_epoch_never_shrink(
             # after mkdir, before any file): nothing to preserve
             pass
     if union_with_prior:
-        _swap_epoch_dir(spark, epoch_path, corpus_rows)
+        commit.swap_dir(spark, epoch_path, corpus_rows)
     else:
         # first attempt (or unreadable debris): nothing committed to
         # lose, plain overwrite
@@ -511,18 +439,18 @@ def _run_curation_stream(
             )
 
             compact_index(batch.sparkSession, index_path)
-            if clusters_path is not None and _path_exists(
-                batch.sparkSession, f"{clusters_path}/labels"
-            ):
-                # same cadence for the cluster journal (existence-gated:
-                # a stream that never saw a pair edge has no index yet);
-                # foreachBatch serializes batches, so this runs at the
-                # compaction's required single-writer point (graph.py)
+            # same cadence for the cluster journal (existence-gated: a
+            # stream that never saw a pair edge has no index yet);
+            # foreachBatch serializes batches, so this runs at the
+            # compaction's required single-writer point (graph.py)
+            if clusters_path is not None:
                 from cloudfabric_eventsourcing_spark.operators.graph import (
                     compact_cluster_index,
                 )
 
-                compact_cluster_index(batch.sparkSession, clusters_path)
+                P, fs = commit.hadoop_fs(batch.sparkSession, clusters_path)
+                if fs.exists(P(f"{clusters_path}/labels")):
+                    compact_cluster_index(batch.sparkSession, clusters_path)
 
     writer = (
         stream.writeStream.foreachBatch(_process)
@@ -978,7 +906,7 @@ def curate_hamming_stream(
     8-byte-per-band payload makes this the cheapest probe of the three
     — the right loop when a perceptual hash is the dedup signal and no
     embedding model is in the path."""
-    _dedup._require_marker(stream.sparkSession, index_path)
+    commit.require_marker(stream.sparkSession, index_path)
 
     def probe(batch: DataFrame, return_edges: bool):
         return curate_hamming_batch_against_index(

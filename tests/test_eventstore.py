@@ -471,9 +471,12 @@ def _hold_lock_in_child(path):
 
 def test_compact_preserves_concurrent_append(tmp_path):
     """An append that commits between a rewrite's fragment capture and its
-    unlink loop must survive (durability invariant: _replace_fragments only
-    unlinks the list it was built from)."""
+    unlink loop must survive (durability invariant: commit.replace_files
+    only unlinks the list it was built from)."""
     import pyarrow.dataset as pa_ds
+    import pyarrow.parquet as pq
+
+    from cloudfabric_eventsourcing_spark import commit
     from cloudfabric_eventsourcing_spark.eventstore.store import _ARROW_SCHEMA
 
     store = _parquet_store(tmp_path)
@@ -484,7 +487,10 @@ def test_compact_preserves_concurrent_append(tmp_path):
     # a concurrent writer lands a fragment AFTER the capture
     _append_order(store, "2c55f399-0000-0000-0000-000000000009")
     n_before = store.get_statistics().total_events_count
-    store._replace_fragments(frags, table)
+    commit.replace_files(
+        store.path, frags,
+        lambda staging: pq.write_table(table, os.path.join(staging, "s.parquet")),
+    )
     assert store.get_statistics().total_events_count == n_before
     late = store.load_stream("2c55f399-0000-0000-0000-000000000009",
                              ORDERS_PARTITION_KEY)
@@ -508,15 +514,14 @@ def test_compact_and_hard_delete_still_work(tmp_path):
 def test_swap_crash_is_repaired_before_next_maintenance(
     tmp_path, monkeypatch, caplog
 ):
-    """A crash between _replace_fragments' snapshot rename and its
+    """A crash between commit.replace_files' snapshot rename and its
     fragment unlinks must not let the NEXT compact() bake the duplicate
     rows in — and for a crashed hard_delete, must not resurrect the
-    deleted stream into the compacted output.  The swap-intent marker
-    makes the half-finished swap roll forward at the next maintenance
-    op."""
+    deleted stream into the compacted output.  The intent marker makes
+    the half-finished swap roll forward at the next maintenance op."""
     import logging
 
-    from cloudfabric_eventsourcing_spark.eventstore import store as st
+    from cloudfabric_eventsourcing_spark import commit
 
     store = _parquet_store(tmp_path)
     for i in range(4):
@@ -539,11 +544,12 @@ def test_swap_crash_is_repaired_before_next_maintenance(
             raise OSError("simulated crash")
         real_unlink(p)
 
-    monkeypatch.setattr(st.os, "unlink", crashing_unlink)
+    marker = os.path.join(store.path, commit._MARKER)
+    monkeypatch.setattr(commit.os, "unlink", crashing_unlink)
     with pytest.raises(OSError, match="simulated crash"):
         store.hard_delete(doomed, ORDERS_PARTITION_KEY)
-    monkeypatch.setattr(st.os, "unlink", real_unlink)
-    assert os.path.exists(store._swap_marker_path())
+    monkeypatch.setattr(commit.os, "unlink", real_unlink)
+    assert os.path.exists(marker)
 
     # mid-crash reads stay correct: per-stream loads dedupe the
     # transient duplicate rows, so the stream looks exactly as before
@@ -554,10 +560,10 @@ def test_swap_crash_is_repaired_before_next_maintenance(
     # the next maintenance op repairs the swap FIRST, and says so: the
     # compacted store holds each surviving event exactly once and the
     # hard-deleted stream stays gone
-    with caplog.at_level(logging.WARNING, logger=st.__name__):
+    with caplog.at_level(logging.WARNING, logger=commit.__name__):
         store.compact()
     assert "repairing an interrupted swap" in caplog.text
-    assert not os.path.exists(store._swap_marker_path())
+    assert not os.path.exists(marker)
     assert len(store._fragments()) == 1
     per_stream = n_total // 4
     assert store.get_statistics().total_events_count == n_total - per_stream

@@ -2594,6 +2594,7 @@ def test_compact_index_recovers_from_mid_swap_crash(
     the NEXT compaction would read fragments + compacted copy and bake
     the duplicates into one file permanently.  The intent marker makes
     the half-finished swap roll forward instead."""
+    from cloudfabric_eventsourcing_spark import commit
     from cloudfabric_eventsourcing_spark.operators import (
         index_maintenance as im,
     )
@@ -2618,14 +2619,14 @@ def test_compact_index_recovers_from_mid_swap_crash(
             raise OSError("simulated crash")
         real_unlink(p)
 
-    monkeypatch.setattr(im.os, "unlink", crashing_unlink)
+    monkeypatch.setattr(commit.os, "unlink", crashing_unlink)
     with pytest.raises(OSError, match="simulated crash"):
         im._rewrite_dir(spark, grams_dir, 1)
-    monkeypatch.setattr(im.os, "unlink", real_unlink)
+    monkeypatch.setattr(commit.os, "unlink", real_unlink)
 
     # post-crash state: fragments + compacted copy + marker; a reader
     # sees transient duplicates (documented), never a partial dataset
-    assert os.path.exists(os.path.join(grams_dir, im._MARKER))
+    assert os.path.exists(os.path.join(grams_dir, commit._MARKER))
     dup_rows = sorted(
         (r["id"],) for r in spark.read.parquet(grams_dir).collect()
     )
@@ -2634,7 +2635,7 @@ def test_compact_index_recovers_from_mid_swap_crash(
     # recovery: compact_index repairs first, so the result is the TRUE
     # row set in one file — not the doubled set
     report = im.compact_index(spark, path)
-    assert not os.path.exists(os.path.join(grams_dir, im._MARKER))
+    assert not os.path.exists(os.path.join(grams_dir, commit._MARKER))
     assert len(_parquet_files(grams_dir)) == 1
     recovered = sorted(
         (r["id"],) for r in spark.read.parquet(grams_dir).collect()
@@ -2642,8 +2643,10 @@ def test_compact_index_recovers_from_mid_swap_crash(
     assert recovered == truth
     assert report["grams"]["files_after"] == 1
 
-    # orphan tmp dirs (crash before the marker landed) are swept
-    junk = os.path.join(path, "bands", ".tmp-compact-bi=0-junk")
+    # orphan staging dirs (crash before the marker landed) are swept
+    junk = os.path.join(
+        _partition_dirs(f"{path}/bands")[0], f"{commit._STAGING}junk"
+    )
     os.makedirs(junk)
     im.compact_index(spark, path)
     assert not os.path.exists(junk)
@@ -2676,53 +2679,108 @@ def test_compaction_tmp_dirs_invisible_to_partition_discovery(
     assert after.count() == before_rows  # tmp rows invisible
 
 
-@pytest.mark.slow
-def test_sweep_respects_marker_tmp_path_spelling(spark, docs, tmp_path):
-    """A marker-referenced tmp dir must survive the orphan sweep even
-    when the marker recorded the path under a different spelling than
-    the sweep walks (relative cwd, symlinked index root): both sides
-    are realpath-normalized, so the raw-string mismatch that used to
-    delete a live tmp — stranding _recover_dir's roll-forward in
-    FileNotFoundError forever — cannot recur."""
-    import json
-    import shutil
+def test_concurrent_compact_index_keeps_every_row(spark, tmp_path, monkeypatch):
+    """A second compact_index on the same index starts while the first
+    sits between its staged write and its intent marker.  The second
+    one's recovery sweep must not delete the first one's staging dir —
+    the first would then commit an empty move list and unlink every
+    fragment.  Compactions of one index serialize on the index's
+    maintenance lock, so the second waits and the rows survive."""
+    import threading
 
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cloudfabric_eventsourcing_spark.operators.index_maintenance import (
+        compact_index,
+    )
+
+    path = str(tmp_path / "idx_concurrent")
+    grams_dir = f"{path}/grams"
+    spark.range(80).repartition(8).write.parquet(grams_dir)
+    truth = sorted(r["id"] for r in spark.read.parquet(grams_dir).collect())
+    assert len(_parquet_files(grams_dir)) == 8
+
+    second = {}
+
+    def run_second():
+        try:
+            # rewrites nothing; only recovers and sweeps
+            second["report"] = compact_index(spark, path, max_fragments=10**6)
+        except Exception as e:  # surfaced by the assert below
+            second["error"] = e
+
+    other = threading.Thread(target=run_second, daemon=True)
+    real_parquet = DataFrameWriter.parquet
+
+    def paused_parquet(self, out, *args, **kwargs):
+        real_parquet(self, out, *args, **kwargs)
+        if "grams" in out and "started" not in second:
+            # staged write done, marker not yet written: start the
+            # second compaction and give it time to sweep
+            second["started"] = True
+            other.start()
+            other.join(timeout=3)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", paused_parquet)
+    compact_index(spark, path)
+    monkeypatch.undo()
+    other.join(timeout=60)
+    assert second.get("started") and not other.is_alive()
+    assert "error" not in second, second.get("error")
+    assert sorted(r["id"] for r in spark.read.parquet(grams_dir).collect()) == truth
+    assert len(_parquet_files(grams_dir)) == 1
+
+
+@pytest.mark.slow
+def test_sweep_respects_marker_tmp_path_spelling(
+    spark, docs, tmp_path, monkeypatch
+):
+    """A marker-referenced staging dir must survive the orphan sweep even
+    when the crashed rewrite and the recovery spell the index path
+    differently (symlinked index root, redundant `/./`): the marker
+    names its staging dir relative to the directory it sits in, so the
+    raw-string mismatch that used to delete a live tmp — stranding the
+    roll-forward in FileNotFoundError forever — cannot recur."""
+    from cloudfabric_eventsourcing_spark import commit
     from cloudfabric_eventsourcing_spark.operators import (
         index_maintenance as im,
     )
 
     path = str(tmp_path / "mh_spelling")
+    ordered = docs.orderBy("doc_id").select("doc_id", "text")
+    dedup.save_minhash_index(ordered.limit(60), path)
     dedup.save_minhash_index(
-        docs.orderBy("doc_id").select("doc_id", "text").limit(60), path
+        ordered.limit(80).subtract(ordered.limit(60)), path, mode="append"
     )
     grams_dir = f"{path}/grams"
     truth = sorted(
         (r["id"],) for r in spark.read.parquet(grams_dir).collect()
     )
-    # hand-build the post-crash state: tmp dir with the compacted file,
-    # marker whose tmp path is spelled with a redundant `/./` segment
-    frag = _parquet_files(grams_dir)[0]
-    tmp = os.path.join(path, ".tmp-compact-grams-999")
-    os.makedirs(tmp)
-    shutil.copy(frag, os.path.join(tmp, "c0.parquet"))
-    oddly_spelled = os.path.join(path, ".", ".tmp-compact-grams-999")
-    marker = {
-        "tmp": oddly_spelled,
-        "moves": [["c0.parquet", "part-recovered-00000.parquet"]],
-        "frags": [os.path.basename(frag)],
-    }
-    with open(os.path.join(grams_dir, im._MARKER), "w") as fh:
-        json.dump(marker, fh)
-    # the sweep must NOT delete the tmp dir the marker references
-    im._sweep_orphan_tmp(path)
-    assert os.path.isdir(tmp)
-    # and recovery rolls the swap forward from it
-    im.compact_index(spark, path)
+    assert len(_parquet_files(grams_dir)) > 1
+    # crash right after the marker landed, rewrite spelled with `/./`
+    real_rename = os.rename
+
+    def crashing_rename(src, dst):
+        if os.path.basename(os.path.dirname(src)).startswith(commit._STAGING):
+            raise OSError("simulated crash")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(commit.os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="simulated crash"):
+        im._rewrite_dir(spark, os.path.join(path, ".", "grams"), 1)
+    monkeypatch.setattr(commit.os, "rename", real_rename)
+    assert os.path.exists(os.path.join(grams_dir, commit._MARKER))
+    # recovery through a symlinked index root rolls the swap forward:
+    # the sweep did not delete the staging dir the marker references
+    link = str(tmp_path / "mh_link")
+    os.symlink(path, link)
+    im.compact_index(spark, link)
     recovered = sorted(
         (r["id"],) for r in spark.read.parquet(grams_dir).collect()
     )
     assert recovered == truth
-    assert not os.path.exists(os.path.join(grams_dir, im._MARKER))
+    assert len(_parquet_files(grams_dir)) == 1
+    assert not os.path.exists(os.path.join(grams_dir, commit._MARKER))
 
 
 @pytest.mark.slow
@@ -2733,12 +2791,12 @@ def test_recover_dir_survives_missing_tmp(spark, docs, tmp_path):
     (uncompacted but correct), clears the marker, and a later compaction
     retries from scratch instead of raising FileNotFoundError forever."""
     import json
+    import shutil
 
+    from cloudfabric_eventsourcing_spark import commit
     from cloudfabric_eventsourcing_spark.operators import (
         index_maintenance as im,
     )
-
-    import shutil
 
     path = str(tmp_path / "mh_missingtmp")
     dedup.save_minhash_index(
@@ -2755,19 +2813,19 @@ def test_recover_dir_survives_missing_tmp(spark, docs, tmp_path):
     moved_in = os.path.join(grams_dir, "part-arrived-00000.parquet")
     shutil.copy(frag, moved_in)
     marker = {
-        "tmp": os.path.join(path, ".tmp-compact-grams-gone"),
+        "staging": f"{commit._STAGING}gone",
         "moves": [
             ["c0.parquet", "part-arrived-00000.parquet"],
             ["c1.parquet", "part-never-arrived.parquet"],
         ],
-        "frags": [os.path.basename(frag)],
+        "old": [os.path.basename(frag)],
     }
-    with open(os.path.join(grams_dir, im._MARKER), "w") as fh:
+    with open(os.path.join(grams_dir, commit._MARKER), "w") as fh:
         json.dump(marker, fh)
-    im._recover_dir(grams_dir)  # must not raise, must not unlink frags
+    commit.recover(grams_dir)  # must not raise, must not unlink frags
     assert os.path.exists(frag)
     assert not os.path.exists(moved_in)  # partial roll-forward rolled back
-    assert not os.path.exists(os.path.join(grams_dir, im._MARKER))
+    assert not os.path.exists(os.path.join(grams_dir, commit._MARKER))
     survivors = sorted(
         (r["id"],) for r in spark.read.parquet(grams_dir).collect()
     )
@@ -3521,10 +3579,12 @@ def test_cluster_index_incremental_maintenance(spark, tmp_path):
     }
     import shutil
 
-    tmp_dir = f"{path}/.labels.compact-tmp"
+    from cloudfabric_eventsourcing_spark import commit
+
+    tmp_dir, old_dir = commit._swap_siblings(f"{path}/labels")
     shutil.copytree(f"{path}/labels", tmp_dir)
-    open(f"{tmp_dir}/_COMMITTED", "w").close()
-    os.rename(f"{path}/labels", f"{path}/.labels.compact-old")
+    open(f"{tmp_dir}/{commit._COMMITTED}", "w").close()
+    os.rename(f"{path}/labels", old_dir)
     got = {
         (r["node"], r["component"])
         for r in graph.load_cluster_labels(spark, path).collect()
@@ -3536,14 +3596,14 @@ def test_cluster_index_incremental_maintenance(spark, tmp_path):
     spark.createDataFrame([(999, 999)], ["node", "component"]).write.parquet(
         tmp_dir
     )  # incomplete attempt: no _COMMITTED marker
-    os.rename(f"{path}/labels", f"{path}/.labels.compact-old")
+    os.rename(f"{path}/labels", old_dir)
     got = {
         (r["node"], r["component"])
         for r in graph.load_cluster_labels(spark, path).collect()
     }
     assert got == want
     assert not os.path.exists(tmp_dir)
-    assert not os.path.exists(f"{path}/.labels.compact-old")
+    assert not os.path.exists(old_dir)
 
 
 def test_avi_codec_hand_packed_spec_bytes():
@@ -4115,12 +4175,13 @@ def test_ivf_index_refuses_inconsistent_state(spark, emb, tmp_path):
 
     import pytest as _pytest
 
+    from cloudfabric_eventsourcing_spark import commit
     from cloudfabric_eventsourcing_spark.operators import similarity
 
     path = str(tmp_path / "ivf_marker")
     cents = similarity.ivf_centroids_from_sample(emb, 4)
     similarity.save_ivf_index(emb, cents, path)
-    marker = os.path.join(path, similarity._IVF_MARKER)
+    marker = os.path.join(path, commit._CONSISTENT)
     assert os.path.exists(marker)
     similarity.load_ivf_index(spark, path)  # consistent: loads fine
 
@@ -4149,14 +4210,15 @@ def test_dedup_indexes_refuse_inconsistent_state(spark, docs, emb, tmp_path):
 
     import pytest as _pytest
 
+    from cloudfabric_eventsourcing_spark import commit
     from cloudfabric_eventsourcing_spark.operators import dedup
 
     mh = str(tmp_path / "mh_idx")
     dedup.save_minhash_index(docs, mh)
-    assert os.path.exists(os.path.join(mh, dedup._INDEX_MARKER))
+    assert os.path.exists(os.path.join(mh, commit._CONSISTENT))
     dedup.dedup_against_index(docs.limit(3), mh)  # gated read works
 
-    os.unlink(os.path.join(mh, dedup._INDEX_MARKER))  # mid-save state
+    os.unlink(os.path.join(mh, commit._CONSISTENT))  # mid-save state
     with _pytest.raises(ValueError, match="consistency marker"):
         dedup.dedup_against_index(docs.limit(3), mh)
     with _pytest.raises(ValueError, match="consistency marker"):
@@ -4167,8 +4229,8 @@ def test_dedup_indexes_refuse_inconsistent_state(spark, docs, emb, tmp_path):
     cs = str(tmp_path / "cos_idx")
     dims = len(emb.select("embedding").first()[0])
     dedup.save_cosine_index(emb, cs, dims=dims)
-    assert os.path.exists(os.path.join(cs, dedup._INDEX_MARKER))
-    os.unlink(os.path.join(cs, dedup._INDEX_MARKER))
+    assert os.path.exists(os.path.join(cs, commit._CONSISTENT))
+    os.unlink(os.path.join(cs, commit._CONSISTENT))
     with _pytest.raises(ValueError, match="consistency marker"):
         dedup.cosine_dedup_against_index(emb.limit(3), cs, threshold=0.9)
     dedup.save_cosine_index(emb, cs, dims=dims)
@@ -4812,8 +4874,8 @@ def test_bpe_save_load_roundtrip(spark, tmp_path):
     assert enc_a == enc_b
 
     # no marker (interrupted save) -> loud refusal
-    from cloudfabric_eventsourcing_spark.operators.dedup import _clear_marker
-    _clear_marker(spark, path)
+    from cloudfabric_eventsourcing_spark import commit
+    commit.clear_marker(spark, path)
     with _pytest.raises(ValueError, match="consistency marker"):
         bpe.load_bpe(spark, path)
 
@@ -5633,13 +5695,15 @@ def test_hamming_index_probe_append_and_crash_discipline(spark, tmp_path):
     )
     assert {(r["new_id"], r["index_id"]) for r in again.collect()} >= {(10, 10)}
     # crash discipline: no marker -> loud refusal
-    dedup._clear_marker(spark, path)
+    from cloudfabric_eventsourcing_spark import commit
+
+    commit.clear_marker(spark, path)
     with _pytest.raises(ValueError, match="consistency marker"):
         dedup.hamming_dedup_against_index(batch, path).collect()
     with _pytest.raises(ValueError, match="consistency marker"):
         dedup.save_hamming_index(batch, path, mode="append")
     # loose threshold refused
-    dedup._stamp_marker(spark, path)
+    commit.stamp_marker(spark, path)
     with _pytest.raises(ValueError, match="max_hamming"):
         dedup.hamming_dedup_against_index(batch, path, max_hamming=4)
 
@@ -6069,7 +6133,9 @@ def test_pq_index_roundtrip_append_and_crash_discipline(spark, sf_dir, tmp_path)
     assert codes3.where("vec_id = 205").count() == 1
     # crash discipline: delete the marker -> load refuses
     import os
-    os.remove(os.path.join(path, "_SPARK_GRAFT_CONSISTENT"))
+
+    from cloudfabric_eventsourcing_spark import commit
+    os.remove(os.path.join(path, commit._CONSISTENT))
     with _pytest.raises(ValueError, match="consistency marker"):
         S.load_pq_index(spark, path)
 

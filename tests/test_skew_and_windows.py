@@ -624,22 +624,22 @@ def test_streaming_curation_partial_index_commit_never_shrinks_epoch(
     ) == [10, 11]
 
 
-def test_epoch_swap_never_exposes_empty_dir(spark, tmp_path):
+def test_epoch_swap_never_exposes_empty_dir(spark, tmp_path, caplog):
     """The epoch-union rewrite goes through a tmp-sibling + rename swap
     (r6 advice): a naive mode('overwrite') deletes the epoch dir before
     the new files commit, so a crash inside that window loses the prior
     attempt's committed rows — and on the next replay those docs
     self-reject against the index while absent from the corpus (the
     stranded-doc failure).  Pin the swap itself and both crash-window
-    recoveries."""
-    from cloudfabric_eventsourcing_spark.streaming.curation import (
-        _epoch_siblings,
-        _recover_epoch_swap,
-        _swap_epoch_dir,
-    )
+    recoveries, each of which logs one WARNING (a clean state logs
+    none)."""
+    import logging
+    import os
+
+    from cloudfabric_eventsourcing_spark import commit
 
     epoch = str(tmp_path / "corpus" / "run=r1" / "epoch=0")
-    tmp_dir, old_dir = _epoch_siblings(epoch)
+    tmp_dir, old_dir = commit._swap_siblings(epoch)
 
     def rows(*ids):
         return spark.createDataFrame([(i, f"doc {i}") for i in ids],
@@ -648,19 +648,27 @@ def test_epoch_swap_never_exposes_empty_dir(spark, tmp_path):
     def read_ids():
         return sorted(r["doc_id"] for r in spark.read.parquet(epoch).collect())
 
+    def recover_logged():
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger=commit.__name__):
+            commit.recover_swap_dir(spark, epoch)
+        return [r.message for r in caplog.records if r.name == commit.__name__]
+
     # normal swap: contents replaced, no sibling debris
     rows(10).write.parquet(epoch)
-    _swap_epoch_dir(spark, epoch, rows(10, 11))
+    assert recover_logged() == []
+    commit.swap_dir(spark, epoch, rows(10, 11))
     assert read_ids() == [10, 11]
-    import os
     assert not os.path.exists(tmp_dir) and not os.path.exists(old_dir)
+    assert recover_logged() == []
 
     # crash BETWEEN the renames: epoch moved aside, committed union in
     # tmp — recovery rolls the swap forward
     rows(10, 11, 12).write.parquet(tmp_dir)
-    open(tmp_dir + "/_COMMITTED", "w").close()
+    open(f"{tmp_dir}/{commit._COMMITTED}", "w").close()
     os.rename(epoch, old_dir)
-    _recover_epoch_swap(spark, epoch)
+    (msg,) = recover_logged()
+    assert "rolled forward" in msg
     assert read_ids() == [10, 11, 12]
     assert not os.path.exists(tmp_dir) and not os.path.exists(old_dir)
 
@@ -668,15 +676,17 @@ def test_epoch_swap_never_exposes_empty_dir(spark, tmp_path):
     # recovery rolls back to the original
     rows(99).write.parquet(tmp_dir)  # incomplete attempt: no marker
     os.rename(epoch, old_dir)
-    _recover_epoch_swap(spark, epoch)
+    (msg,) = recover_logged()
+    assert "rolled back" in msg
     assert read_ids() == [10, 11, 12]
     assert not os.path.exists(tmp_dir) and not os.path.exists(old_dir)
 
     # crash after tmp commit but BEFORE the first rename: epoch intact,
     # committed tmp is debris (the replay re-unions) — swept
     rows(1, 2).write.parquet(tmp_dir)
-    open(tmp_dir + "/_COMMITTED", "w").close()
-    _recover_epoch_swap(spark, epoch)
+    open(f"{tmp_dir}/{commit._COMMITTED}", "w").close()
+    (msg,) = recover_logged()
+    assert "removed leftover" in msg
     assert read_ids() == [10, 11, 12]
     assert not os.path.exists(tmp_dir)
 
