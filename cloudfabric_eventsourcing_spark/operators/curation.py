@@ -95,6 +95,7 @@ from pyspark.sql import functions as F
 from cloudfabric_eventsourcing_spark.operators import dedup as _dedup
 from cloudfabric_eventsourcing_spark.operators import sampling as _sampling
 from cloudfabric_eventsourcing_spark.operators import text as _text
+from cloudfabric_eventsourcing_spark.session import job_description
 
 
 def curate(
@@ -322,13 +323,8 @@ def curate(
     if not collect_stats:
         return out, {}
     out = note("output", out)
-    sc = out.sparkSession.sparkContext
-    previous = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("curate: " + ", ".join(noted))
-    try:
+    with job_description(out.sparkSession, "curate: " + ", ".join(noted)):
         done = out.localCheckpoint(eager=True)
-    finally:
-        sc.setJobDescription(previous)
     observed = out._jdf.queryExecution().observedMetrics()
     stats = {}
     for stage, df in noted.items():

@@ -996,8 +996,11 @@ def run_query(
     """Full query: records + total_records_found + facets.
 
     The reference issues two round-trips (COUNT + page —
-    PostgresqlProjectionRepository.cs:531-579); we share one filtered plan
-    and persist it so the scan runs once for count/page/facets.
+    PostgresqlProjectionRepository.cs:531-579); here a sorted page, or one
+    with no limit, is one Spark job: the total is a `DataFrame.observe`
+    count placed under the page, filled by the page's own scan.  An
+    unsorted limited page stops scanning early, so its total is a
+    `count()` of its own.  Each facet request is one aggregation.
 
     `include_debug_information=True` mirrors the reference's opt-in flag
     (PostgresqlProjectionRepository.cs:619-652 interpolates the translated
@@ -1072,84 +1075,126 @@ def run_query(
         filtered = filtered.withColumn("__score", score)
         note("scoring", query.scoring_profile)
 
-    filtered = filtered.persist()
-    try:
-        total = filtered.count()
-        page = filtered
-        if query.order_by:
-            sorts = sort_columns(query.order_by, schema)
-            note("order_by", lambda: ", ".join(str(s) for s in sorts))
-            page = page.orderBy(*sorts)
-        elif scoring:
-            # ES semantics: no explicit sort -> by relevance, best first
-            tiebreak = (
-                [F.asc(schema.key_name)]
-                if schema is not None and schema.key_name in page.columns
-                else []
-            )
-            page = page.orderBy(F.desc("__score"), *tiebreak)
-        if query.offset:
-            page = page.offset(query.offset)
-            note("offset", query.offset)
-        if query.limit is not None:
-            page = page.limit(query.limit)
-            note("limit", query.limit)
-        # P1/P3: hydrate only retrievable schema columns (IsRetrievable —
-        # ProjectionDocumentPropertySchema.cs:22; filters/sorts above may
-        # still use non-retrievable columns)
-        hl_fields = [
-            f
-            for f in query.fields_to_highlight
-            if search is not None
-            and schema is not None
-            and f in page.columns
-            and (schema.property(f) is not None and schema.property(f).is_searchable)
-        ]
-        for f in hl_fields:
-            page = page.withColumn(
-                f"__hl_{f}",
-                highlight_column(f, query.search_text, query.search_mode),
-            )
-        if schema is not None:
-            retrievable = [
-                p.name
-                for p in schema.properties
-                if p.is_retrievable and p.name in page.columns
-            ]
-            if retrievable:
-                extras = (["__score"] if scoring else []) + [
-                    f"__hl_{f}" for f in hl_fields
-                ]
-                page = page.select(*retrievable, *extras)
-        records = []
-        for row in page.collect():
-            doc = row.asDict(recursive=True)
-            score = doc.pop("__score", 0.0) if scoring else 0.0
-            highlights = {}
-            for f in hl_fields:
-                hl = doc.pop(f"__hl_{f}", None)
-                if hl is not None:
-                    highlights[f] = [hl]
-            records.append(
-                QueryResultDocument(
-                    document=doc,
-                    score=float(score or 0.0),
-                    highlights=highlights,
-                )
-            )
-        facets = (
-            facet_stats(filtered, query.facet_info_to_return)
-            if query.facet_info_to_return
-            else {}
+    sorts = []
+    if query.order_by:
+        sorts = sort_columns(query.order_by, schema)
+        note("order_by", lambda: ", ".join(str(s) for s in sorts))
+    elif scoring:
+        # ES semantics: no explicit sort -> by relevance, best first
+        tiebreak = (
+            [F.asc(schema.key_name)]
+            if schema is not None and schema.key_name in filtered.columns
+            else []
         )
-    finally:
-        filtered.unpersist()
+        sorts = [F.desc("__score"), *tiebreak]
+    # The total is an observed count in the page's own job wherever that
+    # job reads every filtered row once.  A sorted, limited page is one
+    # TakeOrderedAndProject job: the count goes under it.  A sort with no
+    # limit shuffles by range, and the range partitioner samples its input
+    # in a job of its own, where a count under the sort would run twice:
+    # the count goes over it.  An unsorted limited page is a CollectLimit
+    # that stops scanning early, so it gets no count.
+    total_metric = f"query_total_{uuid.uuid4().hex}"
+    counted_under_sort = bool(sorts) and query.limit is not None
+    page = filtered
+    if counted_under_sort:
+        page = page.observe(total_metric, F.count(F.lit(1)))
+    if sorts:
+        page = page.orderBy(*sorts)
+    if query.limit is None:
+        page = page.observe(total_metric, F.count(F.lit(1)))
+    if query.offset:
+        page = page.offset(query.offset)
+        note("offset", query.offset)
+    if query.limit is not None:
+        page = page.limit(query.limit)
+        note("limit", query.limit)
+    # P1/P3: hydrate only retrievable schema columns (IsRetrievable —
+    # ProjectionDocumentPropertySchema.cs:22; filters/sorts above may
+    # still use non-retrievable columns)
+    hl_fields = [
+        f
+        for f in query.fields_to_highlight
+        if search is not None
+        and schema is not None
+        and f in page.columns
+        and (schema.property(f) is not None and schema.property(f).is_searchable)
+    ]
+    for f in hl_fields:
+        page = page.withColumn(
+            f"__hl_{f}",
+            highlight_column(f, query.search_text, query.search_mode),
+        )
+    if schema is not None:
+        retrievable = [
+            p.name
+            for p in schema.properties
+            if p.is_retrievable and p.name in page.columns
+        ]
+        if retrievable:
+            extras = (["__score"] if scoring else []) + [
+                f"__hl_{f}" for f in hl_fields
+            ]
+            page = page.select(*retrievable, *extras)
+    rows = page.collect()
+    total = _observed_total(page, total_metric, counted_under_sort)
+    if total is None:
+        total = filtered.count()
+    records = []
+    for row in rows:
+        doc = row.asDict(recursive=True)
+        score = doc.pop("__score", 0.0) if scoring else 0.0
+        highlights = {}
+        for f in hl_fields:
+            hl = doc.pop(f"__hl_{f}", None)
+            if hl is not None:
+                highlights[f] = [hl]
+        records.append(
+            QueryResultDocument(
+                document=doc,
+                score=float(score or 0.0),
+                highlights=highlights,
+            )
+        )
+    facets = (
+        facet_stats(filtered, query.facet_info_to_return)
+        if query.facet_info_to_return
+        else {}
+    )
     return ProjectionQueryResult(
         records=records,
         total_records_found=total,
         facets_stats=facets,
         debug_information="\n".join(debug),
     )
+
+
+def _observed_total(
+    page: DataFrame, name: str, counted_under_sort: bool
+) -> Optional[int]:
+    """The count observed as `name` by the page's job, or None where it
+    may not hold every filtered row.  The optimizer drops the metric with
+    its node when it replaces the plan by an empty relation (a search
+    that analyzes to no terms, a limit of 0).  A count under the sort is
+    trusted only under a TakeOrderedAndProject whose input has no order
+    of its own: over input already in the page's order it takes only
+    `limit` rows of each partition."""
+    qe = page._jdf.queryExecution()
+    observed = qe.observedMetrics()
+    if not observed.contains(name):
+        return None
+    if counted_under_sort:
+        plan = qe.executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        if plan.nodeName() == "ResultQueryStage":
+            plan = plan.plan()
+        if (
+            plan.nodeName() != "TakeOrderedAndProject"
+            or not plan.child().outputOrdering().isEmpty()
+        ):
+            return None
+    return observed.apply(name).getLong(0)
 
 
 def keyset_page(

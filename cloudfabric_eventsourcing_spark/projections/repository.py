@@ -35,14 +35,19 @@ from typing import Any, Optional
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from cloudfabric_eventsourcing_spark.plans import pyeval
-from cloudfabric_eventsourcing_spark.plans.translator import facet_stats, run_query as spark_run_query
+from cloudfabric_eventsourcing_spark.plans.translator import run_query as spark_run_query
 from cloudfabric_eventsourcing_spark.queries.projection_query import (
     ProjectionQuery,
     ProjectionQueryResult,
     QueryResultDocument,
 )
+from cloudfabric_eventsourcing_spark.session import job_description
 from cloudfabric_eventsourcing_spark.schema import (
     ARRAY,
     BOOLEAN,
@@ -74,6 +79,11 @@ _ARROW_SCALARS = {
     DATETIME: pa.timestamp("us"),
     GUID: pa.string(),
 }
+
+
+#: runs of one query before the failure of a read whose snapshot a
+#: concurrent publish retired is raised to the caller
+_QUERY_ATTEMPTS = 3
 
 
 def _arrow_type(p: PropertySchema) -> pa.DataType:
@@ -326,6 +336,10 @@ class ParquetProjectionRepository(ProjectionRepository):
         # re-enters via overwrite_from_df's swap section
         self._lock = threading.RLock()
         self._schemas: dict[str, ProjectionSchema] = {}
+        # Spark schema of each snapshot path, so a read needs no schema-
+        # inference job; safe to keep because a published snapshot is
+        # never rewritten
+        self._snapshot_structs: dict[str, StructType] = {}
         self._include_debug_information = include_debug_information
 
     # -- snapshot helpers ---------------------------------------------------
@@ -370,6 +384,15 @@ class ParquetProjectionRepository(ProjectionRepository):
         for p in glob.glob(os.path.join(d, "snapshot-*")):
             if p != keep:
                 shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+                self._snapshot_structs.pop(p, None)
+
+    def _spark_read(self, path: str):
+        struct = self._snapshot_structs.get(path)
+        if struct is None:
+            df = self.spark.read.parquet(path)
+            self._snapshot_structs[path] = df.schema
+            return df
+        return self.spark.read.schema(struct).parquet(path)
 
     def _write_snapshot(self, index_name: str, table: pa.Table) -> None:
         d = self._dir(index_name)
@@ -381,6 +404,9 @@ class ParquetProjectionRepository(ProjectionRepository):
         pq.write_table(table, tmp, coerce_timestamps="us", allow_truncated_timestamps=True)
         out = os.path.join(d, f"snapshot-{seq:08d}.parquet")
         os.rename(tmp, out)
+        self._snapshot_structs[out] = from_arrow_schema(
+            table.schema, prefer_timestamp_ntz=True
+        )
         self._drop_old(out)
 
     def _create_index(self, index_name, schema):
@@ -458,10 +484,8 @@ class ParquetProjectionRepository(ProjectionRepository):
         index_name, schema = self._resolve(selector)
         path = self._snapshot_path(index_name)
         if path is None:
-            from pyspark.sql.types import StructType
-
             return self.spark.createDataFrame([], schema.to_struct_type())
-        return self.spark.read.parquet(path)
+        return self._spark_read(path)
 
     def create_or_replace_view(
         self, view_name: Optional[str] = None, selector: str = IndexSelector.ReadOnly
@@ -476,14 +500,25 @@ class ParquetProjectionRepository(ProjectionRepository):
     def _query(self, index_name, schema, query, partition_key):
         if self.spark is None:
             raise RuntimeError("ParquetProjectionRepository needs a SparkSession for queries")
-        path = self._snapshot_path(index_name)
-        if path is None:
-            return ProjectionQueryResult(records=[], total_records_found=0)
-        df = self.spark.read.parquet(path)
-        return spark_run_query(
-            df, query, schema, partition_key,
-            include_debug_information=self._include_debug_information,
-        )
+        with job_description(self.spark, f"projection query: {index_name}"):
+            for attempt in range(_QUERY_ATTEMPTS):
+                path = self._snapshot_path(index_name)
+                if path is None:
+                    return ProjectionQueryResult(records=[], total_records_found=0)
+                try:
+                    return spark_run_query(
+                        self._spark_read(path), query, schema, partition_key,
+                        include_debug_information=self._include_debug_information,
+                    )
+                except (Py4JJavaError, PySparkException):
+                    # a concurrent publish retired the snapshot this query
+                    # resolved: run again on the one that replaced it
+                    if (
+                        attempt + 1 == _QUERY_ATTEMPTS
+                        or os.path.exists(path)
+                        or self._snapshot_path(index_name) in (None, path)
+                    ):
+                        raise
 
     def update_documents_expr(
         self,
@@ -619,6 +654,7 @@ class ParquetProjectionRepository(ProjectionRepository):
         with self._lock:
             out = os.path.join(d, f"snapshot-{self._next_seq(index_name):08d}.dir")
             os.rename(tmp, out)
+            self._snapshot_structs[out] = df.schema
             self._drop_old(out)
 
 

@@ -9,6 +9,7 @@ Arrow for the Pandas-UDF slow path.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -46,6 +47,19 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Label the Spark jobs this thread runs inside the block with `text`
+    in the Spark UI, and give back the caller's label after it."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(previous)
 
 
 def cluster_conf(
