@@ -1,8 +1,9 @@
 """Crash-safe replace protocols shared by the event store, the operator
-index compaction, the cluster index and the streaming-curation corpus.
+index compaction, the cluster index, the streaming-curation corpus and
+the parquet projection snapshots.
 
-Every multi-step replace in the package is one of two protocols, each a
-write-ahead intent followed by a commit — the shape Structured
+Every multi-step replace in the package is one of three protocols, each
+a write-ahead intent followed by a commit — the shape Structured
 Streaming's sources, sinks and state store share (SIGMOD 2018):
 
 **`replace_files` + `recover`** (local `os`): swap a known file set in a
@@ -65,6 +66,18 @@ separate jobs; the marker is cleared first and stamped last, so a
 crash in between leaves an index every reader refuses loudly instead
 of parts that silently disagree.
 
+**`publish` + `latest`** (local `os`): the versioned snapshots of a
+`ParquetProjectionRepository` index.  The write fills a hidden
+`.tmp-commit-<uuid>` dir in the index dir; one rename publishes it as
+`snapshot-<seq>.dir`, `seq` one past the snapshot the writer read.  The
+rename is the version check: of two writers that read one base, the
+second gets `SnapshotConflictError` instead of dropping the first's
+rows.  Readers resolve `latest()` and read that snapshot; a superseded
+one is deleted only `RETENTION_S` after its successor was published
+(Delta VACUUM's rule).  A crash before the rename leaves `latest()` at
+the old snapshot (a write killed outright leaves its hidden staging dir
+behind), a crash after it at the new one.
+
 Every recovery logs one WARNING when it actually repairs something.
 This module imports nothing from pyspark: the event store uses it and
 stays JVM-free.
@@ -73,6 +86,7 @@ stays JVM-free.
 from __future__ import annotations
 
 import contextlib
+import errno
 import glob
 import json
 import logging
@@ -80,7 +94,7 @@ import os
 import shutil
 import time
 import uuid
-from typing import Callable, Iterable
+from typing import Callable, Iterable, Optional
 
 log = logging.getLogger(__name__)
 
@@ -280,3 +294,76 @@ def require_marker(spark, path: str) -> None:
             f"version, create {path}/{_CONSISTENT} after verifying it is "
             "complete."
         )
+
+
+# ---------------------------------------------------------------------------
+# publish + latest (local os): versioned snapshots
+# ---------------------------------------------------------------------------
+
+#: seconds a superseded snapshot outlives the publish of its successor: a
+#: reader holds a snapshot only for one query or one `to_df()` plan, which
+#: takes seconds on a loaded host; a minute covers that with margin.
+RETENTION_S = 60.0
+
+#: `publish(base=LATEST)` replaces whatever is newest when the write is done
+LATEST = object()
+
+
+class SnapshotConflictError(RuntimeError):
+    """A successor of the snapshot a writer read is already published."""
+
+
+def _seq(path: Optional[str]) -> int:
+    if path is None:
+        return -1
+    return int(os.path.basename(path).removeprefix("snapshot-").removesuffix(".dir"))
+
+
+def _snapshots(d: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(d, "snapshot-*.dir")), key=_seq)
+
+
+def latest(d: str) -> Optional[str]:
+    """The newest published `snapshot-<seq>.dir` in `d`, or None."""
+    return (_snapshots(d) or [None])[-1]
+
+
+def publish(d: str, write: Callable[[str], None], base=LATEST) -> tuple[str, list[str]]:
+    """Publish what `write(staging)` puts in a fresh hidden dir in `d` as
+    the successor of snapshot `base` (the path the writer read, None for
+    none) and retire superseded snapshots; returns the published and the
+    retired paths.  If a successor of `base` exists, the staged write is
+    dropped and `SnapshotConflictError` raised.  Publishes into one `d`
+    are serialized and each rewrites the whole snapshot, so at most
+    1 + `RETENTION_S` / (seconds one publish takes) snapshots are kept."""
+    staging = os.path.join(d, f"{_STAGING}{uuid.uuid4().hex}")
+    os.makedirs(staging)  # creates `d` too
+    try:
+        write(staging)
+        os.utime(staging)  # its mtime is the publish time retiring reads
+        read = latest(d) if base is LATEST else base
+        out = os.path.join(d, f"snapshot-{_seq(read) + 1:08d}.dir")
+        # the successor of a base older than the newest may be retired
+        # already, and the rename alone would not fail onto a free slot
+        if latest(d) != read:
+            raise SnapshotConflictError(f"{d}: a snapshot newer than {read} exists")
+        try:
+            os.rename(staging, out)  # fails onto an existing, non-empty dir
+        except OSError as e:
+            if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+                raise
+            raise SnapshotConflictError(f"{out} is already published") from None
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    # retire each snapshot whose successor is `RETENTION_S` old
+    snaps, retired = _snapshots(d), []
+    for old, successor in zip(snaps, snaps[1:]):
+        try:
+            if time.time() - os.stat(successor).st_mtime < RETENTION_S:
+                break
+        except FileNotFoundError:  # a concurrent publish retired it
+            pass
+        shutil.rmtree(old, ignore_errors=True)
+        retired.append(old)
+    return out, retired

@@ -11,9 +11,10 @@ Backends:
   - InMemoryProjectionRepository — dict-of-dicts + the pure-Python AST
     evaluator (plans/pyeval). The live-maintenance fast path for small
     working sets and the parity backend for tests.
-  - ParquetProjectionRepository — one directory per index holding an atomic
-    snapshot parquet; upserts are batch MERGEs (read-minus-keys + concat +
-    atomic snapshot swap), queries go through Spark + the Column
+  - ParquetProjectionRepository — one directory per index holding
+    versioned snapshot dirs (`commit.publish`/`commit.latest`); writes
+    are batch MERGEs (read-minus-keys + concat) published against the
+    snapshot they read, queries go through Spark + the Column
     translator. This is the single-node stand-in for a Delta table with
     `MERGE INTO` (SURVEY.md S7); on a cluster the same repository API maps
     onto Delta MERGE inside foreachBatch. Documents are stored COLUMNAR —
@@ -26,20 +27,18 @@ Every operation stamps PartitionKey + UpdatedAt like the reference
 from __future__ import annotations
 
 import datetime
-import glob
 import os
 import threading
-import uuid
-from typing import Any, Optional
+from typing import Optional
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
-from py4j.protocol import Py4JJavaError
-from pyspark.errors import PySparkException
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
+from cloudfabric_eventsourcing_spark import commit
 from cloudfabric_eventsourcing_spark.plans import pyeval
 from cloudfabric_eventsourcing_spark.plans.translator import run_query as spark_run_query
 from cloudfabric_eventsourcing_spark.queries.projection_query import (
@@ -81,11 +80,6 @@ _ARROW_SCALARS = {
 }
 
 
-#: runs of one query before the failure of a read whose snapshot a
-#: concurrent publish retired is raised to the caller
-_QUERY_ATTEMPTS = 3
-
-
 def _arrow_type(p: PropertySchema) -> pa.DataType:
     if p.type == OBJECT:
         return pa.struct([(n.name, _arrow_type(n)) for n in p.nested_properties])
@@ -111,7 +105,8 @@ class ProjectionRepository:
 
     # -- physical ops implemented by backends -------------------------------
     def _create_index(self, index_name: str, schema: ProjectionSchema) -> None:
-        raise NotImplementedError
+        """Called when the state store registers an index; both backends
+        here create an index's storage on its first write instead."""
 
     def _upsert_batch(self, index_name: str, docs: list[dict]) -> None:
         raise NotImplementedError
@@ -139,10 +134,7 @@ class ProjectionRepository:
         index (bootstrap semantics); Write/ReadOnly resolve through the
         rebuild state machine and may raise IndexNotReadyError
         (ProjectionRepository.cs:252-373)."""
-        name, _ = self.state_store.resolve_index(
-            self.schema, selector, self._create_index
-        )
-        return name
+        return self._resolve(selector)[0]
 
     def _resolve(self, selector: str) -> tuple[str, ProjectionSchema]:
         return self.state_store.resolve_index(self.schema, selector, self._create_index)
@@ -164,14 +156,10 @@ class ProjectionRepository:
         selector: str = IndexSelector.Write,
     ) -> None:
         index_name, schema = self._resolve(selector)
-        stamped = []
-        for doc in documents:
-            d = dict(doc)
-            d["PartitionKey"] = partition_key
-            if "UpdatedAt" in {p.name for p in schema.properties}:
-                d["UpdatedAt"] = updated_at or _utcnow()
-            stamped.append(d)
-        self._upsert_batch(index_name, stamped)
+        stamp = {"PartitionKey": partition_key}
+        if schema.property("UpdatedAt") is not None:
+            stamp["UpdatedAt"] = updated_at or _utcnow()
+        self._upsert_batch(index_name, [{**doc, **stamp} for doc in documents])
 
     def single(
         self, id: str, partition_key: str, selector: str = IndexSelector.ReadOnly
@@ -231,20 +219,12 @@ class InMemoryProjectionRepository(ProjectionRepository):
         self._lock = threading.Lock()
         self._include_debug_information = include_debug_information
 
-    def _create_index(self, index_name, schema):
-        self._indexes.setdefault(index_name, {})
-
-    def _key(self, doc_or_id) -> str:
-        key_name = self.schema.key_name
-        if isinstance(doc_or_id, dict):
-            return str(doc_or_id[key_name])
-        return str(doc_or_id)
-
     def _upsert_batch(self, index_name, docs):
+        key = self.schema.key_name
         with self._lock:
             index = self._indexes.setdefault(index_name, {})
             for doc in docs:
-                index[(self._key(doc), doc["PartitionKey"])] = doc
+                index[(str(doc[key]), doc["PartitionKey"])] = doc
 
     def _get(self, index_name, id, partition_key):
         doc = self._indexes.get(index_name, {}).get((str(id), partition_key))
@@ -332,10 +312,9 @@ class ParquetProjectionRepository(ProjectionRepository):
         super().__init__(schema, state_store)
         self.base_path = base_path
         self.spark = spark
-        # RLock: merge_from_df holds it across its read-compute-swap and
-        # re-enters via overwrite_from_df's swap section
+        # this instance's publishes never conflict with each other; other
+        # instances on the same base_path hit the publish's version check
         self._lock = threading.RLock()
-        self._schemas: dict[str, ProjectionSchema] = {}
         # Spark schema of each snapshot path, so a read needs no schema-
         # inference job; safe to keep because a published snapshot is
         # never rewritten
@@ -346,72 +325,45 @@ class ParquetProjectionRepository(ProjectionRepository):
     def _dir(self, index_name: str) -> str:
         return os.path.join(self.base_path, index_name)
 
-    def _snapshot_path(self, index_name: str) -> Optional[str]:
-        """Current snapshot: either a single parquet file (driver-side
-        MERGE path) or a DIRECTORY of part files (distributed rebuild path
-        — the Spark-written layout is kept as-is so a 100 TB projection
-        never funnels through the driver)."""
-        snaps = sorted(
-            glob.glob(os.path.join(self._dir(index_name), "snapshot-*.parquet"))
-            + glob.glob(os.path.join(self._dir(index_name), "snapshot-*.dir"))
-        )
-        return snaps[-1] if snaps else None
-
-    def _read(self, index_name: str) -> pa.Table:
-        path = self._snapshot_path(index_name)
-        schema = self._index_schema(index_name)
+    def _read(self, index_name: str) -> tuple[pa.Table, Optional[str]]:
+        """The newest snapshot as a table, and its path: the base a
+        read-modify-write publishes against."""
+        path = commit.latest(self._dir(index_name))
         if path is None:
-            return arrow_schema(schema).empty_table()
-        if os.path.isdir(path):
-            import pyarrow.dataset as pa_ds
+            return arrow_schema(self.schema).empty_table(), None
+        return pa_ds.dataset(path, format="parquet").to_table(), path
 
-            return pa_ds.dataset(path, format="parquet").to_table()
-        return pq.read_table(path)
-
-    def _index_schema(self, index_name: str) -> ProjectionSchema:
-        return self._schemas.get(index_name, self.schema)
-
-    def _next_seq(self, index_name: str) -> int:
-        old = self._snapshot_path(index_name)
-        if old is None:
-            return 0
-        return int(os.path.basename(old).split("-")[1].split(".")[0]) + 1
-
-    def _drop_old(self, keep: str) -> None:
-        import shutil
-
-        d = os.path.dirname(keep)
-        for p in glob.glob(os.path.join(d, "snapshot-*")):
-            if p != keep:
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-                self._snapshot_structs.pop(p, None)
-
-    def _spark_read(self, path: str):
+    def _spark_read(self, path: Optional[str], schema: ProjectionSchema):
+        if path is None:
+            return self.spark.createDataFrame([], schema.to_struct_type())
         struct = self._snapshot_structs.get(path)
-        if struct is None:
-            df = self.spark.read.parquet(path)
-            self._snapshot_structs[path] = df.schema
-            return df
+        if struct is None:  # published by another instance
+            struct = self._snapshot_structs[path] = self.spark.read.parquet(path).schema
         return self.spark.read.schema(struct).parquet(path)
 
-    def _write_snapshot(self, index_name: str, table: pa.Table) -> None:
-        d = self._dir(index_name)
-        os.makedirs(d, exist_ok=True)
-        seq = self._next_seq(index_name)
-        tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex[:8]}.parquet")
-        # coerce any ns timestamps (e.g. INT96 read back from a Spark
-        # write) to µs so Spark can read the snapshot
-        pq.write_table(table, tmp, coerce_timestamps="us", allow_truncated_timestamps=True)
-        out = os.path.join(d, f"snapshot-{seq:08d}.parquet")
-        os.rename(tmp, out)
-        self._snapshot_structs[out] = from_arrow_schema(
-            table.schema, prefer_timestamp_ntz=True
-        )
-        self._drop_old(out)
+    def _publish(self, index_name, write, struct: StructType, base) -> None:
+        with self._lock:
+            out, retired = commit.publish(self._dir(index_name), write, base)
+        self._snapshot_structs[out] = struct
+        for p in retired:
+            self._snapshot_structs.pop(p, None)
 
-    def _create_index(self, index_name, schema):
-        os.makedirs(self._dir(index_name), exist_ok=True)
-        self._schemas[index_name] = schema
+    def _rewrite(self, index_name: str, change) -> None:
+        """Driver-side read-modify-write: publish `change(table)` as the
+        successor of the snapshot `table` was read from."""
+        with self._lock:
+            table, base = self._read(index_name)
+            new = change(table)
+            self._publish(
+                index_name,
+                # coerce any ns timestamps (e.g. INT96 read back from a Spark
+                # write) to µs so Spark can read the snapshot
+                lambda staging: pq.write_table(
+                    new, os.path.join(staging, "part-00000.parquet"),
+                    coerce_timestamps="us", allow_truncated_timestamps=True,
+                ),
+                from_arrow_schema(new.schema, prefer_timestamp_ntz=True), base,
+            )
 
     # -- physical ops -------------------------------------------------------
     def _upsert_batch(self, index_name, docs):
@@ -419,73 +371,34 @@ class ParquetProjectionRepository(ProjectionRepository):
         `MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT`
         equivalent, SURVEY.md S7)."""
         key = self.schema.key_name
-        with self._lock:
-            current = self._read(index_name)
-            # last-writer-wins within the batch, matching upsert order
-            dedup: dict[tuple[str, str], dict] = {}
-            for d in docs:
-                dedup[(str(d[key]), d["PartitionKey"])] = d
-            batch = list(dedup.values())
-            if current.num_rows:
-                # match on the composite (key, PartitionKey) — two separate
-                # is_in masks would wrongly match cross-pairs
-                combo = pc.binary_join_element_wise(
-                    pc.cast(current[key], pa.string()),
-                    current["PartitionKey"],
-                    "\x00",
-                )
-                batch_keys = pa.array([f"{k}\x00{p}" for k, p in dedup])
-                kept = current.filter(
-                    pc.invert(pc.is_in(combo, value_set=batch_keys))
-                )
-            else:
-                kept = current
-            new_rows = pa.Table.from_pylist(
-                [_normalize_doc(d) for d in batch], schema=current.schema
-            )
-            self._write_snapshot(index_name, pa.concat_tables([kept, new_rows]))
+        # last-writer-wins within the batch, matching upsert order
+        dedup = {(str(d[key]), d["PartitionKey"]): _normalize_doc(d) for d in docs}
+        self._rewrite(index_name, lambda current: pa.concat_tables([
+            current.filter(pc.invert(_matches(current, key, dedup))),
+            pa.Table.from_pylist(list(dedup.values()), schema=current.schema),
+        ]))
 
     def _get(self, index_name, id, partition_key):
-        table = self._read(index_name)
-        if table.num_rows == 0:
-            return None
-        key = self._index_schema(index_name).key_name
-        mask = pc.and_(
-            pc.equal(pc.cast(table[key], pa.string()), str(id)),
-            pc.equal(table["PartitionKey"], partition_key),
-        )
-        hit = table.filter(mask)
+        table, _ = self._read(index_name)
+        key = self.schema.key_name
+        hit = table.filter(_matches(table, key, [(str(id), partition_key)]))
         return hit.to_pylist()[0] if hit.num_rows else None
 
     def _delete(self, index_name, id, partition_key):
-        with self._lock:
-            table = self._read(index_name)
-            if table.num_rows == 0:
-                return
-            key = self._index_schema(index_name).key_name
-            mask = pc.and_(
-                pc.equal(pc.cast(table[key], pa.string()), str(id)),
-                pc.equal(table["PartitionKey"], partition_key),
-            )
-            self._write_snapshot(index_name, table.filter(pc.invert(mask)))
+        key = self.schema.key_name
+        self._rewrite(index_name, lambda table: table.filter(
+            pc.invert(_matches(table, key, [(str(id), partition_key)]))
+        ))
 
     def _delete_all(self, index_name, partition_key):
-        with self._lock:
-            table = self._read(index_name)
-            if partition_key is None:
-                kept = table.schema.empty_table()
-            else:
-                kept = table.filter(
-                    pc.invert(pc.equal(table["PartitionKey"], partition_key))
-                )
-            self._write_snapshot(index_name, kept)
+        self._rewrite(index_name, lambda table: (
+            table.schema.empty_table() if partition_key is None
+            else table.filter(pc.invert(pc.equal(table["PartitionKey"], partition_key)))
+        ))
 
     def to_df(self, selector: str = IndexSelector.ReadOnly):
         index_name, schema = self._resolve(selector)
-        path = self._snapshot_path(index_name)
-        if path is None:
-            return self.spark.createDataFrame([], schema.to_struct_type())
-        return self._spark_read(path)
+        return self._spark_read(commit.latest(self._dir(index_name)), schema)
 
     def create_or_replace_view(
         self, view_name: Optional[str] = None, selector: str = IndexSelector.ReadOnly
@@ -500,25 +413,14 @@ class ParquetProjectionRepository(ProjectionRepository):
     def _query(self, index_name, schema, query, partition_key):
         if self.spark is None:
             raise RuntimeError("ParquetProjectionRepository needs a SparkSession for queries")
+        path = commit.latest(self._dir(index_name))
+        if path is None:
+            return ProjectionQueryResult(records=[], total_records_found=0)
         with job_description(self.spark, f"projection query: {index_name}"):
-            for attempt in range(_QUERY_ATTEMPTS):
-                path = self._snapshot_path(index_name)
-                if path is None:
-                    return ProjectionQueryResult(records=[], total_records_found=0)
-                try:
-                    return spark_run_query(
-                        self._spark_read(path), query, schema, partition_key,
-                        include_debug_information=self._include_debug_information,
-                    )
-                except (Py4JJavaError, PySparkException):
-                    # a concurrent publish retired the snapshot this query
-                    # resolved: run again on the one that replaced it
-                    if (
-                        attempt + 1 == _QUERY_ATTEMPTS
-                        or os.path.exists(path)
-                        or self._snapshot_path(index_name) in (None, path)
-                    ):
-                        raise
+            return spark_run_query(
+                self._spark_read(path, schema), query, schema, partition_key,
+                include_debug_information=self._include_debug_information,
+            )
 
     def update_documents_expr(
         self,
@@ -550,9 +452,10 @@ class ParquetProjectionRepository(ProjectionRepository):
         if self.spark is None:
             raise RuntimeError("update_documents_expr needs a SparkSession")
         index_name, schema = self._resolve(selector)
-        # same read-compute-swap atomicity as merge_from_df
+        # same read-compute-publish binding as merge_from_df
         with self._lock:
-            df = self.to_df(selector=selector)
+            base = commit.latest(self._dir(index_name))
+            df = self._spark_read(base, schema)
             pred = F.lit(True)
             if partition_key is not None:
                 pred = pred & (F.col("PartitionKey") == partition_key)
@@ -573,7 +476,7 @@ class ParquetProjectionRepository(ProjectionRepository):
                     for name, expr in updates.items()
                 }
             )
-            self.overwrite_from_df(updated, selector=selector)
+            self._overwrite(index_name, updated, base)
 
     def merge_from_df(
         self,
@@ -594,19 +497,19 @@ class ParquetProjectionRepository(ProjectionRepository):
         micro-batch touched, so it is broadcast to anti-join the big
         current snapshot (no shuffle of the snapshot); on Delta the same
         call maps to MERGE INTO which rewrites only matched files instead
-        of the full snapshot."""
+        of the full snapshot. When another repository instance on the same
+        base_path published since this MERGE read its snapshot, it raises
+        `commit.SnapshotConflictError` and publishes nothing."""
         from pyspark.sql import functions as F
 
         if self.spark is None:
             raise RuntimeError("merge_from_df needs a SparkSession")
         index_name, schema = self._resolve(selector)
         key = schema.key_name
-        # hold the repo lock across read-compute-swap so a concurrent
-        # driver-side _upsert_batch/_delete can't land between our snapshot
-        # read and the replacement swap and be silently dropped (the lock
-        # is re-entered by overwrite_from_df's swap section)
+        # the publish is bound to the snapshot read here
         with self._lock:
-            current = self.to_df(selector=selector)
+            base = commit.latest(self._dir(index_name))
+            current = self._spark_read(base, schema)
             changed = (
                 docs_df.select(
                     F.col(key).cast("string").alias("__mk"),
@@ -624,20 +527,22 @@ class ParquetProjectionRepository(ProjectionRepository):
             if tombstone_col is not None:
                 ups = ups.where(~F.col(tombstone_col)).drop(tombstone_col)
             merged = kept.unionByName(ups.select(*current.columns))
-            self.overwrite_from_df(merged, selector=selector)
+            self._overwrite(index_name, merged, base)
 
     def overwrite_from_df(self, df, selector: str = IndexSelector.ProjectionRebuild):
         """Distributed rebuild sink: the Spark job writes the new snapshot
         directory directly (parallel part files, executors never funnel
-        through the driver); an atomic rename publishes it (the scale path
-        — SURVEY.md §3.3: 'embarrassingly parallel in Spark, unlike the
-        reference's single-cursor loop')."""
+        through the driver) and `commit.publish` renames it in over
+        whatever snapshot is newest by then (the scale path — SURVEY.md
+        §3.3: 'embarrassingly parallel in Spark, unlike the reference's
+        single-cursor loop')."""
+        index_name, _ = self._resolve(selector)
+        self._overwrite(index_name, df, commit.LATEST)
+
+    def _overwrite(self, index_name: str, df, base) -> None:
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        index_name, _ = self._resolve(selector)
-        d = self._dir(index_name)
-        os.makedirs(d, exist_ok=True)
         # store convention: timestamps are timezone-NAIVE UTC µs (what the
         # pyarrow MERGE path writes); cast tz-aware columns to NTZ so a
         # Spark-written snapshot reads back identically (session tz is UTC,
@@ -649,13 +554,20 @@ class ParquetProjectionRepository(ProjectionRepository):
         }
         if casts:
             df = df.withColumns(casts)
-        tmp = os.path.join(d, f".tmp-spark-{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").parquet(tmp)
-        with self._lock:
-            out = os.path.join(d, f"snapshot-{self._next_seq(index_name):08d}.dir")
-            os.rename(tmp, out)
-            self._snapshot_structs[out] = df.schema
-            self._drop_old(out)
+        self._publish(
+            index_name, lambda staging: df.write.mode("overwrite").parquet(staging),
+            df.schema, base,
+        )
+
+
+def _matches(table: pa.Table, key: str, pairs) -> pa.ChunkedArray:
+    """Rows whose (key, PartitionKey) is one of `pairs` — matched as one
+    composite, since two separate is_in masks would match cross-pairs."""
+    combo = pc.binary_join_element_wise(
+        pc.cast(table[key], pa.string()), table["PartitionKey"], "\x00"
+    )
+    keys = pa.array([f"{k}\x00{p}" for k, p in pairs], pa.string())
+    return pc.is_in(combo, value_set=keys)
 
 
 def _utcnow() -> datetime.datetime:

@@ -1,6 +1,8 @@
-"""The local replace protocol (commit.replace_files / commit.recover) under
-a crash after every step, and the JVM-free import guard of the event store
-that uses it.  No Spark session: files are written with pyarrow."""
+"""The local replace protocols under a crash after every step —
+commit.replace_files / commit.recover, and the versioned snapshots of
+commit.publish / commit.latest — and the JVM-free import guard of the
+event store that uses them.  No Spark session: files are written and read
+with pyarrow."""
 
 import glob
 import logging
@@ -10,6 +12,7 @@ import subprocess
 import sys
 
 import pyarrow as pa
+import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 import pytest
 
@@ -155,6 +158,132 @@ def test_replace_files_without_crash(tmp_path, caplog):
     assert len(names) == N_NEW + 1
     assert all(n.endswith("-compacted.parquet") for n in names[:-1])
     assert not caplog.records
+
+
+# ---------------------------------------------------------------------------
+# publish + latest
+# ---------------------------------------------------------------------------
+
+OLD = [(i, 0) for i in range(10)]
+NEW = [(i, 1) for i in range(0, 10, 2)]  # a delete shape: old and new differ
+
+
+def _gen(rows, files=2):
+    def write(staging):
+        for k in range(files):
+            _write(os.path.join(staging, f"part-{k}.parquet"), rows[k::files])
+    return write
+
+
+def _snapshot_rows(path):
+    """What a reader of `path` sees: the dataset read skips dot- and
+    underscore-prefixed entries, the same rule as Spark's file listing."""
+    t = pa_ds.dataset(path, format="parquet").to_table()
+    return sorted(zip(t["id"].to_pylist(), t["gen"].to_pylist()))
+
+
+def _mid_write(staging):
+    _gen(NEW)(staging)
+    raise _Crash("write")
+
+
+# (case id, crash hook, the staged write, outcome)
+PUBLISH_CASES = [
+    ("mid-write", None, _mid_write, "old"),
+    ("before-rename", ("rename", lambda p: True, 0), _gen(NEW), "old"),
+    ("before-retire", "rmtree", _gen(NEW), "new"),
+]
+
+
+@pytest.mark.parametrize(
+    "hook,write,outcome", [c[1:] for c in PUBLISH_CASES],
+    ids=[c[0] for c in PUBLISH_CASES],
+)
+def test_publish_leaves_exactly_old_or_new(tmp_path, monkeypatch, hook, write, outcome):
+    """Crash `publish` while the staged write runs, between the write and
+    the rename, and between the rename and the retire: `latest()` is
+    exactly the old snapshot or exactly the new one, its readers see none
+    of the staged rows, and the next publish proceeds and retires."""
+    d = str(tmp_path / "index")
+    old, _ = commit.publish(d, _gen(OLD), base=None)
+    if hook == "rmtree":  # the first retire, right after the rename
+        def crash(*_a, **_kw):
+            raise _Crash("retire")
+        monkeypatch.setattr(commit, "RETENTION_S", 0)
+        monkeypatch.setattr(commit.shutil, "rmtree", crash)
+    elif hook is not None:
+        _crash_on(monkeypatch, *hook)
+    with pytest.raises(_Crash):
+        commit.publish(d, write, base=old)
+    monkeypatch.undo()
+
+    head = commit.latest(d)
+    if outcome == "old":
+        assert head == old and _snapshot_rows(head) == OLD
+        assert os.listdir(d) == [os.path.basename(old)]  # staging removed
+    else:
+        assert head != old and _snapshot_rows(head) == NEW
+        assert _snapshot_rows(old) == OLD  # kept for its readers
+    monkeypatch.setattr(commit, "RETENTION_S", 0)
+    out, retired = commit.publish(d, _gen(OLD[:3]), base=head)
+    assert commit.latest(d) == out and _snapshot_rows(out) == OLD[:3]
+    assert sorted(retired) == sorted({old, head})
+    assert os.listdir(d) == [os.path.basename(out)]
+
+
+def test_publish_keeps_superseded_snapshots_for_the_retention(tmp_path, monkeypatch):
+    d = str(tmp_path / "index")
+    base, published = None, []
+    for gen in range(3):
+        base, retired = commit.publish(d, _gen([(0, gen)]), base=base)
+        published.append(base)
+        assert retired == []
+    assert commit._snapshots(d) == published
+    assert [_snapshot_rows(p) for p in published] == [[(0, g)] for g in range(3)]
+    monkeypatch.setattr(commit, "RETENTION_S", 0)
+    out, retired = commit.publish(d, _gen([(0, 3)]))  # a plain overwrite
+    assert retired == published and commit._snapshots(d) == [out]
+
+
+def test_publish_on_a_stale_base_conflicts(tmp_path, monkeypatch):
+    d = str(tmp_path / "index")
+    first, _ = commit.publish(d, _gen(OLD), base=None)
+    with pytest.raises(commit.SnapshotConflictError):
+        commit.publish(d, _gen(NEW), base=None)
+    assert commit.latest(d) == first and os.listdir(d) == [os.path.basename(first)]
+    # a plain overwrite replaces whatever is newest
+    out, _ = commit.publish(d, _gen(NEW))
+    assert commit.latest(d) == out and _snapshot_rows(out) == NEW
+    # a base whose successor is already retired: its slot is free, and the
+    # publish must still conflict instead of landing under the newest
+    monkeypatch.setattr(commit, "RETENTION_S", 0)
+    newest, retired = commit.publish(d, _gen(OLD))
+    assert retired == [first, out]
+    with pytest.raises(commit.SnapshotConflictError):
+        commit.publish(d, _gen(NEW), base=first)
+    assert commit._snapshots(d) == [newest] and os.listdir(d) == [os.path.basename(newest)]
+
+
+def test_publish_conflicts_when_a_racer_renames_in_first(tmp_path, monkeypatch):
+    """Two writers that read one base both pass the newest-snapshot check;
+    the rename is what decides: the second fails onto the first's
+    snapshot and leaves it intact."""
+    d = str(tmp_path / "index")
+    base, _ = commit.publish(d, _gen(OLD), base=None)
+    real, raced = os.rename, []
+
+    def racer_first(src, dst):
+        if not raced:
+            raced.append(True)
+            commit.publish(d, _gen([(99, 2)]), base=base)
+        return real(src, dst)
+
+    monkeypatch.setattr(commit.os, "rename", racer_first)
+    with pytest.raises(commit.SnapshotConflictError):
+        commit.publish(d, _gen(NEW), base=base)
+    monkeypatch.undo()
+    assert _snapshot_rows(commit.latest(d)) == [(99, 2)]
+    assert not any(n.startswith(commit._STAGING) for n in os.listdir(d))
 
 
 def test_eventstore_import_stays_jvm_free():

@@ -1,26 +1,46 @@
 """ParquetProjectionRepository.query: the total observed on the page job,
 the snapshot read with a recorded schema, the query's Spark job
-description, and a query racing a concurrent publish."""
+description, readers racing concurrent publishes, and two repository
+instances racing a read-modify-write."""
 
 import datetime
 import decimal
 import glob
 import os
+import random
+import threading
+import time
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-from cloudfabric_eventsourcing_spark.eventstore import InMemoryMetadataRepository
+from cloudfabric_eventsourcing_spark import commit
+from cloudfabric_eventsourcing_spark.benchmarks import (
+    BENCH_PARTITION,
+    BenchUserStatsBuilder,
+    BenchValueEvent,
+    bench_schema,
+)
+from cloudfabric_eventsourcing_spark.eventstore import (
+    InMemoryMetadataRepository,
+    ParquetEventStore,
+)
 from cloudfabric_eventsourcing_spark.plans.translator import (
     filter_to_column,
     run_query,
     search_to_column,
 )
 from cloudfabric_eventsourcing_spark.projections import (
+    IndexSelector,
     ParquetProjectionRepository,
     ProjectionIndexStateStore,
+    ProjectionsEngine,
     repository,
+)
+from cloudfabric_eventsourcing_spark.projections.distributed import (
+    builder_rebuild_factory,
+    fold_builder_documents,
 )
 from cloudfabric_eventsourcing_spark.queries import (
     FacetInfoRequest,
@@ -28,6 +48,7 @@ from cloudfabric_eventsourcing_spark.queries import (
     ProjectionQuery,
     SortInfo,
 )
+from cloudfabric_eventsourcing_spark.streaming import SparkStreamingProjectionsObserver
 from cloudfabric_eventsourcing_spark.schema import (
     ARRAY,
     DATETIME,
@@ -109,7 +130,7 @@ def _pyarrow_repo(spark, tmp_path) -> ParquetProjectionRepository:
 
 
 def _snapshot(repo) -> str:
-    return repo._snapshot_path(SCHEMA.index_name())
+    return commit.latest(repo._dir(SCHEMA.index_name()))
 
 
 def _jobs(spark, fn) -> int:
@@ -226,17 +247,20 @@ def test_recorded_schema_read_equals_inferred_read(spark, tmp_path, write):
     )
 
 
-def test_publish_prunes_the_retired_snapshot_schema(spark, tmp_path):
+def test_publish_prunes_the_retired_snapshot_schema(spark, tmp_path, monkeypatch):
     repo = _pyarrow_repo(spark, tmp_path)
     old = _snapshot(repo)
     repo.upsert(dict(DOCS[0], Rank=99), "even")
+    # superseded but inside the retention: kept, schema and all
+    assert os.path.exists(old) and old in repo._snapshot_structs
+    monkeypatch.setattr(commit, "RETENTION_S", 0)
+    repo.upsert(dict(DOCS[0], Rank=98), "even")
+    assert not os.path.exists(old)
     assert old not in repo._snapshot_structs
     assert _snapshot(repo) in repo._snapshot_structs
 
 
-def test_query_reruns_when_a_concurrent_publish_retires_its_snapshot(
-    spark, tmp_path, monkeypatch
-):
+def test_query_answers_from_the_snapshot_it_resolved(spark, tmp_path, monkeypatch):
     repo = _pyarrow_repo(spark, tmp_path)
     run_query = repository.spark_run_query
     published = []
@@ -249,11 +273,140 @@ def test_query_reruns_when_a_concurrent_publish_retires_its_snapshot(
         return run_query(*args, **kwargs)
 
     monkeypatch.setattr(repository, "spark_run_query", publish_first)
-    res = repo.query(ProjectionQuery(filters=[P("Rank") == 99],
-                                     order_by=[SortInfo("Id")]))
-    assert not os.path.exists(published[0])
+    query = ProjectionQuery(filters=[P("Rank") == 99], order_by=[SortInfo("Id")])
+    res = repo.query(query)
+    # the publish landed after the query resolved its snapshot: the query
+    # reads that snapshot to the end, and the publish kept it on disk
+    assert (res.records, res.total_records_found) == ([], 0)
+    assert os.path.exists(published[0]) and _snapshot(repo) != published[0]
+    res = repo.query(query)
     assert [r.document["Id"] for r in res.records] == ["d001"]
     assert res.total_records_found == 1
+
+
+def test_an_empty_upsert_batch_keeps_every_document(spark, tmp_path):
+    repo = _pyarrow_repo(spark, tmp_path)
+    repo.upsert_batch([], "even")
+    assert repo.to_df().count() == len(DOCS)
+
+
+@pytest.mark.parametrize("write", [_spark_repo, _pyarrow_repo])
+def test_a_held_frame_reads_its_snapshot_across_a_publish(spark, tmp_path, write):
+    repo = write(spark, tmp_path)
+    held = repo.to_df()
+    repo.upsert(dict(DOCS[0], Id="new"), "even")
+    assert held.count() == len(DOCS)
+    assert repo.to_df().count() == len(DOCS) + 1
+
+
+def _merge(repo, doc):
+    struct = SCHEMA.to_struct_type()
+    repo.merge_from_df(repo.spark.createDataFrame([doc], struct))
+
+
+@pytest.mark.parametrize("hook,write", [
+    ("_read", lambda repo, doc: repo.upsert(doc, doc["PartitionKey"])),
+    ("_spark_read", _merge),
+], ids=["upsert", "merge_from_df"])
+def test_two_instances_never_lose_an_update(spark, tmp_path, monkeypatch, hook, write):
+    """Two repositories on one base path: the second reads the snapshot,
+    the first publishes, then the second publishes on what it read.
+    The second must conflict, not drop the first's document."""
+    first = _repo(spark, tmp_path)
+    second = ParquetProjectionRepository(
+        SCHEMA, first.state_store, str(tmp_path), spark=spark
+    )
+    write(first, DOCS[0])
+    read, raced = getattr(second, hook), []
+
+    def read_then_race(*args, **kwargs):
+        out = read(*args, **kwargs)
+        if not raced:
+            raced.append(True)
+            write(first, DOCS[2])
+        return out
+
+    monkeypatch.setattr(second, hook, read_then_race)
+    conflicts = 0
+    try:
+        write(second, DOCS[4])
+    except commit.SnapshotConflictError:
+        conflicts += 1
+        write(second, DOCS[4])  # re-read and retry
+    ids = sorted(r["Id"] for r in first.to_df().collect())
+    assert ids == ["d000", "d002", "d004"]
+    assert conflicts == 1
+
+
+def test_readers_never_fail_during_a_live_merge(spark, tmp_path):
+    """The observer MERGEs a 50 ms trigger's worth of appends while
+    readers loop over query() and to_df().count(); no read may fail, and
+    the drained projection equals a full rebuild."""
+    rng = random.Random(7)
+    store = ParquetEventStore(str(tmp_path / "events"))
+    store.initialize()
+    state = ProjectionIndexStateStore(InMemoryMetadataRepository())
+    schema = bench_schema()
+    repo = ParquetProjectionRepository(schema, state, str(tmp_path / "proj"), spark)
+    repo.ensure_index()
+    state.update_rebuild_progress(
+        schema.schema_name, schema.index_name(), 0, completed=True
+    )
+    builder = BenchUserStatsBuilder(repo, IndexSelector.Write)
+    engine = ProjectionsEngine(store)
+    engine.add_projection_builder(builder)
+    versions = {f"u{i}": 0 for i in range(8)}
+
+    def append():
+        sid = rng.choice(sorted(versions))
+        event = BenchValueEvent(aggregate_id=sid, partition_key=BENCH_PARTITION,
+                                kind=rng.choice(["view", "purchase"]),
+                                value=round(rng.random() * 100, 2))
+        store.append_to_stream({"userId": "t"}, sid, versions[sid], [event])
+        versions[sid] += 1
+
+    for _ in range(len(versions)):
+        append()
+    observer = SparkStreamingProjectionsObserver(
+        spark, store, engine, str(tmp_path / "ckpt")
+    )
+    live = observer.start(processing_time="50 milliseconds")
+    failures, reads, done = [], [0], threading.Event()
+
+    def reader():
+        query = ProjectionQuery(order_by=[SortInfo("Id")], limit=3)
+        while not done.is_set():
+            try:
+                repo.query(query)
+                repo.to_df().count()
+                reads[0] += 1
+            except Exception as e:  # every failed read is the finding
+                failures.append(e)
+
+    thread = threading.Thread(target=reader)
+    thread.start()
+    try:
+        deadline = time.monotonic() + 4
+        while time.monotonic() < deadline:
+            append()
+            time.sleep(0.05)
+        live.processAllAvailable()
+    finally:
+        done.set()
+        thread.join(timeout=120)
+        observer.stop()
+    assert not thread.is_alive()
+    assert failures == [] and reads[0] > 0
+    got = {r["Id"]: (r["NEvents"], r["Purchases"], r["ValueCents"])
+           for r in repo.to_df().collect()}
+    rebuilt = fold_builder_documents(
+        store.to_df(spark), builder_rebuild_factory(builder), schema
+    )
+    want = {r["Id"]: (r["NEvents"], r["Purchases"], r["ValueCents"])
+            for r in rebuilt.collect()}
+    assert got == want and sum(n for n, _, _ in got.values()) == sum(
+        versions.values()
+    )
 
 
 def test_query_jobs_carry_the_index_description(spark, tmp_path, monkeypatch):

@@ -15,10 +15,11 @@ ID_STRIDE in its home table and in every table that references it, so
 referential integrity and per-entity cardinalities (lines per order,
 orders per customer, events per user) are preserved while customer /
 order / document counts grow linearly.  region / nation stay fixed (25
-nations at every sf, as in TPC-H).  Replica documents get the
-scaling_study.py prefix-token treatment so LSH near-dup cluster sizes
-stay constant instead of growing k-fold; replica embeddings get a tiny
-deterministic first-component nudge so vectors are distinct.
+nations at every sf, as in TPC-H).  Replica documents get ~2/3 of
+their tokens rewritten per replica (see `_replica`) so LSH near-dup
+cluster sizes stay constant instead of growing k-fold; replica
+embeddings get a tiny deterministic first-component nudge so vectors
+are distinct.
 
 Usage:  python tools/make_scaled_sf.py [factor] [out_dir]
         (defaults: factor=10 -> /tmp/spark_graft_sf1)
