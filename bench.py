@@ -792,7 +792,7 @@ def _bench_replay(spark, sf_dir: str) -> dict:
     """T-replay THROUGH the T8 rebuild processor (distributed mode): lease
     -> per-stream applyInPandas fold through a real ProjectionBuilder ->
     snapshot write -> per-batch progress. Also measures the reference's
-    serial 250-chunk cursor loop (mode='serial') on a 10k-event sample of
+    serial 250-chunk cursor loop (no SparkSession) on a 10k-event sample of
     the same store for the BASELINE.md >=2x comparison. Store
     materialization is excluded from both timings."""
     import shutil
@@ -845,7 +845,7 @@ def _bench_replay(spark, sf_dir: str) -> dict:
             proc = ProjectionsRebuildProcessor(
                 state, factory, store,
                 spark=spark if mode == "distributed" else None,
-                mode=mode, rebuild_batches=batches,
+                rebuild_batches=batches,
             )
             t0 = time.perf_counter()
             done = proc.rebuild_projections_that_require_rebuild()

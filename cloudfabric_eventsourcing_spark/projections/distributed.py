@@ -12,13 +12,15 @@ group replays through a FRESH builder instance bound to a group-local
 in-memory repository — the exact same handler code the serial path runs —
 and emits the group's final documents as rows. One shuffle on stream_id
 (uniform key), no driver funnel; the result DataFrame feeds the
-repository's snapshot writer (`overwrite_from_df`) so a 100 TB projection
-is written by executors in parallel.
+repository's sink (`overwrite_from_df` for a rebuild, `merge_from_df` for
+the live observer) so a 100 TB projection is written by executors in
+parallel.
 
 Applicability: sound whenever each document depends only on its own
 stream's events (true of every reference builder — the builder helpers key
 documents by aggregate_id). Builders that aggregate ACROSS streams must use
-the serial parity mode (`mode="serial"`).
+the serial paths: a rebuild processor given no SparkSession, and the
+observer's `mode="parity"`.
 """
 
 from __future__ import annotations

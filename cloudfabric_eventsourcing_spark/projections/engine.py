@@ -150,15 +150,16 @@ def _event_key(e: Event):
 class ProjectionsRebuildProcessor:
     """Worker/ProjectionsRebuildProcessor.cs:28-114 on the state store.
 
-    Two execution modes:
-      - **distributed** (default when a SparkSession is provided): each
-        builder's documents are recomputed with one per-stream
-        applyInPandas fold over the whole event table and written through
-        the repository's snapshot sink — the SURVEY §3.3 scale path.
-        Progress/health is updated per event batch (streams are split into
-        `rebuild_batches` hash buckets; each bucket is one Spark job).
-      - **serial** (`mode="serial"`, or no SparkSession): the reference's
-        chunked single-cursor replay loop, kept as the parity mode and for
+    The SparkSession selects the path:
+      - **distributed** (given a SparkSession): each builder's documents
+        are recomputed with one per-stream applyInPandas fold over the
+        whole event table and handed to the repository's
+        `overwrite_from_df`, whatever the backend — the SURVEY §3.3 scale
+        path. Progress/health is updated per event batch (streams are
+        split into `rebuild_batches` hash buckets; each bucket is one
+        Spark job).
+      - **serial** (no SparkSession): the reference's chunked
+        single-cursor replay loop, kept as the parity path and for
         builders whose documents aggregate across streams.
     """
 
@@ -169,17 +170,13 @@ class ProjectionsRebuildProcessor:
         event_store: EventStore,
         chunk_size: int = 250,
         spark=None,
-        mode: str = "auto",
         rebuild_batches: int = 4,
     ):
-        if mode not in ("auto", "distributed", "serial"):
-            raise ValueError(f"unknown rebuild mode {mode!r}")
         self.state_store = state_store
         self.engine_factory = engine_factory
         self.event_store = event_store
         self.chunk_size = chunk_size
         self.spark = spark
-        self.mode = mode
         self.rebuild_batches = max(1, rebuild_batches)
 
     def rebuild_one_projection_which_requires_rebuild(self) -> Optional[str]:
@@ -187,12 +184,7 @@ class ProjectionsRebuildProcessor:
         if state is None:
             return None
         engine = self.engine_factory(index_name)
-        distributed = self.mode == "distributed" or (
-            self.mode == "auto" and self.spark is not None
-        )
-        if distributed:
-            if self.spark is None:
-                raise ValueError("distributed rebuild mode needs a SparkSession")
+        if self.spark is not None:
             processed = self._replay_distributed(engine, state, index_name)
         else:
             processed = self._replay_serial(engine, state, index_name)
@@ -201,7 +193,7 @@ class ProjectionsRebuildProcessor:
         )
         return index_name
 
-    # -- serial parity mode (the reference's cursor loop) -------------------
+    # -- serial parity path (the reference's cursor loop) -------------------
     def _replay_serial(self, engine, state, index_name) -> int:
         total = self.event_store.get_statistics().total_events_count
 
@@ -221,7 +213,7 @@ class ProjectionsRebuildProcessor:
             chunk_processed_callback=progress,
         )
 
-    # -- distributed scale mode ---------------------------------------------
+    # -- distributed scale path ---------------------------------------------
     def _replay_distributed(self, engine, state, index_name) -> int:
         from pyspark.sql import functions as F
 
@@ -229,7 +221,6 @@ class ProjectionsRebuildProcessor:
             builder_rebuild_factory,
             fold_builder_documents,
         )
-        from cloudfabric_eventsourcing_spark.projections.state import IndexSelector
 
         total = self.event_store.get_statistics().total_events_count
         events_df = self.event_store.to_df(self.spark)
@@ -267,17 +258,7 @@ class ProjectionsRebuildProcessor:
             docs = parts[0]
             for extra in parts[1:]:
                 docs = docs.unionByName(extra)
-            repo = builder.repository
-            if hasattr(repo, "overwrite_from_df"):
-                # executors write the snapshot directly — no driver funnel
-                repo.overwrite_from_df(docs)
-            else:
-                # driver-memory backend: materialization IS the backend
-                resolved, _ = repo._resolve(IndexSelector.ProjectionRebuild)
-                repo._upsert_batch(
-                    resolved,
-                    [r.asDict(recursive=True) for r in docs.collect()],
-                )
+            builder.repository.overwrite_from_df(docs)
             for p in parts:
                 p.unpersist()
         return processed
@@ -293,7 +274,7 @@ class ProjectionsRebuildProcessor:
         pending.  Lease acquisition is the state store's CAS, so
         concurrent threads (or a second worker process) can never
         double-acquire one index; Spark accepts job submission from
-        multiple threads, so distributed-mode waves genuinely overlap.
+        multiple threads, so distributed waves genuinely overlap.
         The default stays serial — parallel draining is the long-queue
         worker deployment's knob, not a local-test default."""
         done: list[str] = []

@@ -226,6 +226,32 @@ class InMemoryProjectionRepository(ProjectionRepository):
             for doc in docs:
                 index[(str(doc[key]), doc["PartitionKey"])] = doc
 
+    def merge_from_df(
+        self,
+        docs_df,
+        selector: str = IndexSelector.Write,
+        tombstone_col: Optional[str] = None,
+    ) -> None:
+        """The driver-side MERGE: this backend's documents live on the
+        driver, so the document rows (bounded by the streams a batch
+        touched, never by its events) are collected and upserted, and
+        tombstone rows are deleted."""
+        index_name, _ = self._resolve(selector)
+        key = self.schema.key_name
+        upserts = []
+        for row in docs_df.collect():
+            d = row.asDict(recursive=True)
+            if tombstone_col is not None and d.pop(tombstone_col):
+                self._delete(index_name, d[key], d["PartitionKey"])
+            else:
+                upserts.append(d)
+        self._upsert_batch(index_name, upserts)
+
+    def overwrite_from_df(self, df, selector: str = IndexSelector.ProjectionRebuild):
+        """The rebuild sink: the index becomes exactly `df`'s rows."""
+        self.delete_all(selector=selector)
+        self.merge_from_df(df, selector)
+
     def _get(self, index_name, id, partition_key):
         doc = self._indexes.get(index_name, {}).get((str(id), partition_key))
         return dict(doc) if doc else None
@@ -333,13 +359,13 @@ class ParquetProjectionRepository(ProjectionRepository):
             return arrow_schema(self.schema).empty_table(), None
         return pa_ds.dataset(path, format="parquet").to_table(), path
 
-    def _spark_read(self, path: Optional[str], schema: ProjectionSchema):
+    def _spark_read(self, spark, path: Optional[str], schema: ProjectionSchema):
         if path is None:
-            return self.spark.createDataFrame([], schema.to_struct_type())
+            return spark.createDataFrame([], schema.to_struct_type())
         struct = self._snapshot_structs.get(path)
         if struct is None:  # published by another instance
-            struct = self._snapshot_structs[path] = self.spark.read.parquet(path).schema
-        return self.spark.read.schema(struct).parquet(path)
+            struct = self._snapshot_structs[path] = spark.read.parquet(path).schema
+        return spark.read.schema(struct).parquet(path)
 
     def _publish(self, index_name, write, struct: StructType, base) -> None:
         with self._lock:
@@ -348,12 +374,20 @@ class ParquetProjectionRepository(ProjectionRepository):
         for p in retired:
             self._snapshot_structs.pop(p, None)
 
-    def _rewrite(self, index_name: str, change) -> None:
-        """Driver-side read-modify-write: publish `change(table)` as the
-        successor of the snapshot `table` was read from."""
+    def _rewrite(self, index_name: str, drop, rows=()) -> None:
+        """Driver-side read-modify-write: publish the snapshot `table` minus
+        the rows `drop(table)` masks, plus `rows`, as the successor of the
+        snapshot `table` was read from. A write that drops and adds
+        nothing publishes nothing."""
         with self._lock:
             table, base = self._read(index_name)
-            new = change(table)
+            mask = drop(table)
+            if not rows and not pc.any(mask).as_py():
+                return
+            new = pa.concat_tables([
+                table.filter(pc.invert(mask)),
+                pa.Table.from_pylist(rows, schema=table.schema),
+            ])
             self._publish(
                 index_name,
                 # coerce any ns timestamps (e.g. INT96 read back from a Spark
@@ -373,10 +407,10 @@ class ParquetProjectionRepository(ProjectionRepository):
         key = self.schema.key_name
         # last-writer-wins within the batch, matching upsert order
         dedup = {(str(d[key]), d["PartitionKey"]): _normalize_doc(d) for d in docs}
-        self._rewrite(index_name, lambda current: pa.concat_tables([
-            current.filter(pc.invert(_matches(current, key, dedup))),
-            pa.Table.from_pylist(list(dedup.values()), schema=current.schema),
-        ]))
+        self._rewrite(
+            index_name, lambda table: _matches(table, key, dedup),
+            list(dedup.values()),
+        )
 
     def _get(self, index_name, id, partition_key):
         table, _ = self._read(index_name)
@@ -386,19 +420,21 @@ class ParquetProjectionRepository(ProjectionRepository):
 
     def _delete(self, index_name, id, partition_key):
         key = self.schema.key_name
-        self._rewrite(index_name, lambda table: table.filter(
-            pc.invert(_matches(table, key, [(str(id), partition_key)]))
-        ))
+        self._rewrite(
+            index_name, lambda table: _matches(table, key, [(str(id), partition_key)])
+        )
 
     def _delete_all(self, index_name, partition_key):
         self._rewrite(index_name, lambda table: (
-            table.schema.empty_table() if partition_key is None
-            else table.filter(pc.invert(pc.equal(table["PartitionKey"], partition_key)))
+            pa.repeat(True, table.num_rows) if partition_key is None
+            else pc.equal(table["PartitionKey"], partition_key)
         ))
 
     def to_df(self, selector: str = IndexSelector.ReadOnly):
         index_name, schema = self._resolve(selector)
-        return self._spark_read(commit.latest(self._dir(index_name)), schema)
+        return self._spark_read(
+            self.spark, commit.latest(self._dir(index_name)), schema
+        )
 
     def create_or_replace_view(
         self, view_name: Optional[str] = None, selector: str = IndexSelector.ReadOnly
@@ -418,7 +454,8 @@ class ParquetProjectionRepository(ProjectionRepository):
             return ProjectionQueryResult(records=[], total_records_found=0)
         with job_description(self.spark, f"projection query: {index_name}"):
             return spark_run_query(
-                self._spark_read(path, schema), query, schema, partition_key,
+                self._spark_read(self.spark, path, schema), query, schema,
+                partition_key,
                 include_debug_information=self._include_debug_information,
             )
 
@@ -455,7 +492,7 @@ class ParquetProjectionRepository(ProjectionRepository):
         # same read-compute-publish binding as merge_from_df
         with self._lock:
             base = commit.latest(self._dir(index_name))
-            df = self._spark_read(base, schema)
+            df = self._spark_read(self.spark, base, schema)
             pred = F.lit(True)
             if partition_key is not None:
                 pred = pred & (F.col("PartitionKey") == partition_key)
@@ -497,19 +534,19 @@ class ParquetProjectionRepository(ProjectionRepository):
         micro-batch touched, so it is broadcast to anti-join the big
         current snapshot (no shuffle of the snapshot); on Delta the same
         call maps to MERGE INTO which rewrites only matched files instead
-        of the full snapshot. When another repository instance on the same
-        base_path published since this MERGE read its snapshot, it raises
+        of the full snapshot. The snapshot is read with `docs_df`'s own
+        session, so a repository built without one works as a sink. When
+        another repository instance on the same base_path published since
+        this MERGE read its snapshot, it raises
         `commit.SnapshotConflictError` and publishes nothing."""
         from pyspark.sql import functions as F
 
-        if self.spark is None:
-            raise RuntimeError("merge_from_df needs a SparkSession")
         index_name, schema = self._resolve(selector)
         key = schema.key_name
         # the publish is bound to the snapshot read here
         with self._lock:
             base = commit.latest(self._dir(index_name))
-            current = self._spark_read(base, schema)
+            current = self._spark_read(docs_df.sparkSession, base, schema)
             changed = (
                 docs_df.select(
                     F.col(key).cast("string").alias("__mk"),

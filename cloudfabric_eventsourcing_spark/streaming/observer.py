@@ -23,10 +23,12 @@ Execution modes (default = the scale path):
   - **distributed** (default): each micro-batch only *selects* which
     streams changed; the affected streams are re-folded executor-side
     through the builders' own handlers (projections.distributed.
-    fold_builder_documents) and MERGEd into the repository as documents
-    (with tombstones for deletes). Event rows are never collected to the
-    driver — per-batch driver traffic is bounded by the number of
-    *affected documents*, not events.
+    fold_builder_documents) and the documents (with tombstones for
+    deletes) go to the repository's `merge_from_df` — the one sink call,
+    whatever the backend. Event rows are never collected to the driver;
+    the Parquet MERGE keeps documents on the executors too, and the
+    in-memory repository, whose documents live on the driver, collects
+    only the affected documents.
   - **parity** (`mode="parity"`): the reference's model — hydrate the
     batch driver-side and apply handlers per event (its handlers are also
     per-event C#). Needed only for builders whose documents aggregate
@@ -97,50 +99,20 @@ class SparkStreamingProjectionsObserver:
             F.broadcast(affected), ["stream_id", "partition_key"], "left_semi"
         )
         for builder in self.engine._builders:
-            repo = builder.repository
-            key_name = repo.schema.key_name
             docs_df = fold_builder_documents(
                 scoped,
                 builder_rebuild_factory(builder),
-                repo.schema,
+                builder.repository.schema,
                 with_tombstones=True,
             )
-            if hasattr(repo, "merge_from_df") and getattr(repo, "spark", None):
-                # scale path: one df-native MERGE per builder per batch —
-                # upserts written by executors, tombstones applied as one
-                # anti-join, zero document rows on the driver
-                repo.merge_from_df(
-                    docs_df,
-                    selector=builder.index_selector,
-                    tombstone_col=TOMBSTONE_COL,
-                )
-                continue
-            # driver-local backends (InMemoryProjectionRepository): the
-            # store itself lives on the driver, so collecting the
-            # document-level rows (bounded by affected streams, never by
-            # batch event count) is the only way in
-            upserts, deletes = [], []
-            for row in docs_df.collect():
-                d = row.asDict(recursive=True)
-                if d.pop(TOMBSTONE_COL):
-                    deletes.append(d)
-                else:
-                    upserts.append(d)
-            if upserts:
-                index_name, _ = repo._resolve(builder.index_selector)
-                repo._upsert_batch(index_name, upserts)
-            for d in deletes:
-                repo.delete(
-                    d[key_name], d["PartitionKey"], selector=builder.index_selector
-                )
+            builder.repository.merge_from_df(
+                docs_df, selector=builder.index_selector, tombstone_col=TOMBSTONE_COL
+            )
 
     def _apply_batch_parity(self, batch_df) -> None:
-        # order within batch: (created_at, stream_version) — T1
-        rows = (
-            batch_df.orderBy("created_at", "stream_version")
-            .dropDuplicates(["id"])
-            .collect()
-        )
+        # duplicate ids are copies of one event, so which one is kept does
+        # not matter; order within batch: (created_at, stream_version) — T1
+        rows = batch_df.dropDuplicates(["id"]).collect()
         rows.sort(key=lambda r: (r["created_at"], r["stream_version"]))
         for row in rows:
             record = EventRecord(

@@ -290,6 +290,25 @@ def test_an_empty_upsert_batch_keeps_every_document(spark, tmp_path):
     assert repo.to_df().count() == len(DOCS)
 
 
+@pytest.mark.parametrize("write", [
+    lambda repo: repo.upsert_batch([], "even"),
+    lambda repo: repo.delete("absent", "even"),
+    lambda repo: repo.delete_all("absent"),
+], ids=["empty_upsert", "absent_key", "absent_partition"])
+def test_a_write_that_changes_nothing_publishes_nothing(tmp_path, write):
+    """No snapshot copy for a no-op write (each would also stay on disk
+    for the retention); pyarrow-only, so no SparkSession."""
+    repo = _pyarrow_repo(None, tmp_path)
+    index_dir = repo._dir(SCHEMA.index_name())
+
+    def snapshots():
+        return commit.latest(index_dir), sorted(glob.glob(f"{index_dir}/snapshot-*.dir"))
+
+    before = snapshots()
+    write(repo)
+    assert snapshots() == before
+
+
 @pytest.mark.parametrize("write", [_spark_repo, _pyarrow_repo])
 def test_a_held_frame_reads_its_snapshot_across_a_publish(spark, tmp_path, write):
     repo = write(spark, tmp_path)

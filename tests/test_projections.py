@@ -366,7 +366,13 @@ def test_rebuild_processor_distributed_path(world, spark):
     proc = ProjectionsRebuildProcessor(
         state, engine_factory, store, spark=spark, rebuild_batches=2
     )
-    assert proc.mode == "auto" and proc.spark is not None  # distributed path
+
+    def serial(*args):  # pragma: no cover - failure path
+        raise AssertionError("a SparkSession must select the distributed fold")
+
+    # the session selects the distributed fold, which hands the in-memory
+    # repository its documents through overwrite_from_df
+    proc._replay_serial = serial
     rebuilt = proc.rebuild_projections_that_require_rebuild()
     assert new_schema.index_name() in rebuilt
 
@@ -433,9 +439,7 @@ def test_threaded_rebuild_waves_drain_pending_rebuilds(tmp_path):
         assert e._builders, index_name
         return e
 
-    proc = ProjectionsRebuildProcessor(
-        state, factory, store, chunk_size=5, mode="serial"
-    )
+    proc = ProjectionsRebuildProcessor(state, factory, store, chunk_size=5)
     done = proc.rebuild_projections_that_require_rebuild(max_parallel_tasks=2)
     # every pending index rebuilt EXACTLY once (no double-acquire)
     assert sorted(done) == sorted(pending)
@@ -581,7 +585,7 @@ def factory(index_name):
             )
     assert e._builders, index_name
     return e
-proc = ProjectionsRebuildProcessor(state, factory, store, chunk_size=5, mode="serial")
+proc = ProjectionsRebuildProcessor(state, factory, store, chunk_size=5)
 while not os.path.exists(barrier):
     time.sleep(0.001)
 print(json.dumps(proc.rebuild_projections_that_require_rebuild()), flush=True)

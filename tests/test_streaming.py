@@ -1,6 +1,7 @@
 """Structured Streaming projection maintenance (S4/T1/T2/T5/T10) and the
 distributed-fold rebuild path."""
 
+import datetime
 import decimal
 
 import pytest
@@ -13,6 +14,7 @@ from cloudfabric_eventsourcing_spark.eventstore import (
 )
 from cloudfabric_eventsourcing_spark.projections import (
     IndexSelector,
+    InMemoryProjectionRepository,
     ParquetProjectionRepository,
     ProjectionsEngine,
     ProjectionIndexStateStore,
@@ -289,6 +291,69 @@ def test_distributed_observer_never_collects_documents(spark, tmp_path, world):
     observer.process_all()
     assert repo.single(orders[0].id, ORDERS_PARTITION_KEY) is None
     assert repo.single(orders[1].id, ORDERS_PARTITION_KEY) is not None
+
+
+def test_in_memory_and_parquet_sinks_hold_the_same_documents(
+    spark, tmp_path, world
+):
+    """The distributed observer hands every repository the same documents
+    frame: the in-memory repository's driver-side MERGE and the Parquet
+    MERGE of a repository built without a SparkSession (it reads with the
+    frame's session) must hold the same documents after a drain and after
+    a drain that deletes one."""
+    store, state, _, agg_repo = world
+    orders = seed_orders(agg_repo, 2)
+
+    class DeletingBuilder(OrdersListProjectionBuilder):
+        def on_OrderItemRemoved(self, evt):
+            self.repository.delete(
+                evt.aggregate_id, evt.partition_key, selector=self.index_selector
+            )
+
+    schema = orders_list_schema()
+    repos = [
+        InMemoryProjectionRepository(schema, state),
+        ParquetProjectionRepository(schema, state, str(tmp_path / "proj_nospark")),
+    ]
+    observers = []
+    for i, repo in enumerate(repos):
+        engine = ProjectionsEngine(store)
+        engine.add_projection_builder(DeletingBuilder(repo, IndexSelector.Write))
+        observers.append(SparkStreamingProjectionsObserver(
+            spark, store, engine, str(tmp_path / f"ckpt_sink{i}")
+        ))
+
+    def drain():
+        for observer in observers:
+            observer.process_all()
+        return [
+            {o.id: _naive(repo.single(o.id, ORDERS_PARTITION_KEY)) for o in orders}
+            for repo in repos
+        ]
+
+    in_memory, parquet = drain()
+    assert in_memory == parquet
+    assert all(doc["ItemsCount"] == 2 for doc in parquet.values())
+
+    loaded = agg_repo.load(orders[0].id, ORDERS_PARTITION_KEY)
+    loaded.remove_item("Dixit")
+    agg_repo.save(USER, loaded)
+    in_memory, parquet = drain()
+    assert in_memory == parquet
+    assert parquet[orders[0].id] is None and parquet[orders[1].id] is not None
+
+
+def _naive(value):
+    """`value` with every datetime as naive UTC: a Spark-written snapshot
+    keeps timestamps nested in structs tz-aware (only top-level columns
+    are cast to NTZ), so the two backends return one instant two ways."""
+    if isinstance(value, dict):
+        return {k: _naive(v) for k, v in value.items()}
+    if isinstance(value, list):
+        return [_naive(v) for v in value]
+    if isinstance(value, datetime.datetime) and value.tzinfo is not None:
+        return value.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return value
 
 
 def test_parity_observer_mode_still_available(spark, tmp_path, world):

@@ -1,22 +1,10 @@
-"""Temporal operators (as-of forward, range join) and the custom stateful
-streaming fold (T5)."""
+"""Temporal operators: as-of forward, range join and the pandas as-of
+variant."""
 
-import decimal
-
-import pytest
 from pyspark.sql import functions as F
 
-from cloudfabric_eventsourcing_spark.domain import AggregateRepository
-from cloudfabric_eventsourcing_spark.eventstore import ParquetEventStore
 from cloudfabric_eventsourcing_spark.operators import temporal
 from cloudfabric_eventsourcing_spark.sources import load_table
-from cloudfabric_eventsourcing_spark.streaming.stateful import streaming_stream_fold
-from tests.domain_fixtures import (
-    ORDERS_PARTITION_KEY,
-    Order,
-    OrderItem,
-    utcnow,
-)
 
 
 def test_asof_join_forward(spark, sf_dir):
@@ -66,54 +54,6 @@ def test_range_join_matches_cartesian(spark, sf_dir):
     slow_set = {(r["event_id"], r["bucket_type"]) for r in slow.collect()}
     assert fast_set == slow_set and fast_set
     events.unpersist()
-
-
-def test_stateful_streaming_fold_across_batches(spark, tmp_path):
-    store = ParquetEventStore(str(tmp_path / "events"))
-    store.initialize()
-    repo = AggregateRepository(store, Order)
-    orders = []
-    for i in range(4):
-        o = Order(
-            f"00000000-0000-0000-0000-0000000000{i:02d}",
-            f"S{i}",
-            [OrderItem(utcnow(), "Base", decimal.Decimal("1.00"))],
-        )
-        repo.save({}, o)
-        orders.append(o)
-
-    def drain(name):
-        rows = {}
-
-        def on_batch(batch_df, epoch_id):
-            for r in batch_df.collect():
-                rows[r["stream_id"]] = r.asDict()
-
-        writer = streaming_stream_fold(
-            store.read_stream(spark), str(tmp_path / "ckpt"), on_batch=on_batch
-        )
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return rows
-
-    first = drain("fold_a")
-    assert len(first) == 4
-    assert all(v["items_count"] == 0 and v["n_events"] == 1 for v in first.values())
-
-    # second wave: items added to two streams; state must CARRY OVER
-    for i in range(2):
-        loaded = repo.load(orders[i].id, ORDERS_PARTITION_KEY)
-        loaded.add_item(OrderItem(utcnow(), "X", decimal.Decimal("2.00")))
-        loaded.add_item(OrderItem(utcnow(), "Y", decimal.Decimal("3.00")))
-        repo.save({}, loaded)
-
-    second = drain("fold_b")
-    # only the two touched streams emit in the second batch (update mode)
-    assert set(second) == {orders[0].id, orders[1].id}
-    for sid in second:
-        assert second[sid]["n_events"] == 3  # 1 placed + 2 added (cumulative)
-        assert second[sid]["items_count"] == 2
-        assert second[sid]["max_version"] == 3
 
 
 def test_asof_pandas_variant_matches_window_variant(spark, sf_dir):
