@@ -530,6 +530,19 @@ class ParquetProjectionRepository(ProjectionRepository):
         store (PostgresqlProjectionRepository.cs:390-470 batch upsert +
         :304-388 delete, collapsed into one plan).
 
+        The documents are computed once: `docs_df` (on the live path a
+        store scan, a semi-join and an `applyInPandas` fold) is
+        materialized by an eager `localCheckpoint`, and the changed-key
+        set and the upserts both read that checkpoint. It runs before the
+        snapshot is resolved, so a publish by another instance can only
+        race the anti-join and the write. The changed keys are not made
+        distinct: a `left_anti` join does not need unique build keys, and
+        the fold emits one row per (key, PartitionKey). The observer does
+        make its batch's (stream, partition) pairs distinct before the
+        fold, because a batch after a compaction re-delivers the whole
+        store and the fold's semi-join broadcast should be sized by
+        streams, not by events.
+
         Shape at scale: the changed-key set is bounded by the streams a
         micro-batch touched, so it is broadcast to anti-join the big
         current snapshot (no shuffle of the snapshot); on Delta the same
@@ -543,16 +556,14 @@ class ParquetProjectionRepository(ProjectionRepository):
 
         index_name, schema = self._resolve(selector)
         key = schema.key_name
+        docs = docs_df.localCheckpoint(eager=True)
         # the publish is bound to the snapshot read here
         with self._lock:
             base = commit.latest(self._dir(index_name))
-            current = self._spark_read(docs_df.sparkSession, base, schema)
-            changed = (
-                docs_df.select(
-                    F.col(key).cast("string").alias("__mk"),
-                    F.col("PartitionKey").alias("__mp"),
-                )
-                .distinct()
+            current = self._spark_read(docs.sparkSession, base, schema)
+            changed = docs.select(
+                F.col(key).cast("string").alias("__mk"),
+                F.col("PartitionKey").alias("__mp"),
             )
             kept = current.join(
                 F.broadcast(changed),
@@ -560,7 +571,7 @@ class ParquetProjectionRepository(ProjectionRepository):
                 & (current["PartitionKey"] == changed["__mp"]),
                 "left_anti",
             )
-            ups = docs_df
+            ups = docs
             if tombstone_col is not None:
                 ups = ups.where(~F.col(tombstone_col)).drop(tombstone_col)
             merged = kept.unionByName(ups.select(*current.columns))
@@ -578,23 +589,39 @@ class ParquetProjectionRepository(ProjectionRepository):
 
     def _overwrite(self, index_name: str, df, base) -> None:
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
 
         # store convention: timestamps are timezone-NAIVE UTC µs (what the
-        # pyarrow MERGE path writes); cast tz-aware columns to NTZ so a
-        # Spark-written snapshot reads back identically (session tz is UTC,
-        # values unchanged)
-        casts = {
-            f.name: F.col(f.name).cast("timestamp_ntz")
-            for f in df.schema.fields
-            if isinstance(f.dataType, T.TimestampType)
-        }
+        # pyarrow MERGE path writes); cast every column holding a tz-aware
+        # timestamp, at any depth, to NTZ so a Spark-written snapshot reads
+        # back identically (session tz is UTC, values unchanged)
+        casts = {}
+        for f in df.schema.fields:
+            ntz = _ntz(f.dataType)
+            if ntz != f.dataType:
+                casts[f.name] = F.col(f.name).cast(ntz)
         if casts:
             df = df.withColumns(casts)
         self._publish(
             index_name, lambda staging: df.write.mode("overwrite").parquet(staging),
             df.schema, base,
         )
+
+
+def _ntz(t):
+    """Spark type `t` with every `TimestampType` in it, at any depth, as
+    `TimestampNTZType`."""
+    from pyspark.sql import types as T
+
+    if isinstance(t, T.TimestampType):
+        return T.TimestampNTZType()
+    if isinstance(t, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _ntz(f.dataType), f.nullable, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_ntz(t.elementType), t.containsNull)
+    return t
 
 
 def _matches(table: pa.Table, key: str, pairs) -> pa.ChunkedArray:

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from cloudfabric_eventsourcing_spark.eventstore.event import EventRecord
 from cloudfabric_eventsourcing_spark.eventstore.store import ParquetEventStore
 from cloudfabric_eventsourcing_spark.projections.engine import ProjectionsEngine
+from cloudfabric_eventsourcing_spark.session import job_description
 
 
 class SparkStreamingProjectionsObserver:
@@ -81,13 +82,15 @@ class SparkStreamingProjectionsObserver:
 
     def _foreach_batch(self, batch_df, epoch_id: int) -> None:
         if self.mode == "distributed":
-            self._apply_batch_distributed(batch_df)
+            self._apply_batch_distributed(batch_df, epoch_id)
         else:
             self._apply_batch_parity(batch_df)
 
-    def _apply_batch_distributed(self, batch_df) -> None:
+    def _apply_batch_distributed(self, batch_df, epoch_id: int) -> None:
         """Scale path: re-fold only the streams touched by this batch,
-        executor-side, and MERGE the resulting documents (+ tombstones)."""
+        executor-side, and MERGE the resulting documents (+ tombstones).
+        Each builder's jobs show in the Spark UI as "projection batch
+        <epoch_id>: <index>"."""
         from cloudfabric_eventsourcing_spark.projections.distributed import (
             TOMBSTONE_COL,
             builder_rebuild_factory,
@@ -99,15 +102,21 @@ class SparkStreamingProjectionsObserver:
             F.broadcast(affected), ["stream_id", "partition_key"], "left_semi"
         )
         for builder in self.engine._builders:
-            docs_df = fold_builder_documents(
-                scoped,
-                builder_rebuild_factory(builder),
-                builder.repository.schema,
-                with_tombstones=True,
-            )
-            builder.repository.merge_from_df(
-                docs_df, selector=builder.index_selector, tombstone_col=TOMBSTONE_COL
-            )
+            repo = builder.repository
+            index_name = repo.ensure_index(builder.index_selector)
+            with job_description(
+                self.spark, f"projection batch {epoch_id}: {index_name}"
+            ):
+                docs_df = fold_builder_documents(
+                    scoped,
+                    builder_rebuild_factory(builder),
+                    repo.schema,
+                    with_tombstones=True,
+                )
+                repo.merge_from_df(
+                    docs_df, selector=builder.index_selector,
+                    tombstone_col=TOMBSTONE_COL,
+                )
 
     def _apply_batch_parity(self, batch_df) -> None:
         # duplicate ids are copies of one event, so which one is kept does

@@ -33,6 +33,7 @@ from cloudfabric_eventsourcing_spark.plans.translator import (
 )
 from cloudfabric_eventsourcing_spark.projections import (
     IndexSelector,
+    InMemoryProjectionRepository,
     ParquetProjectionRepository,
     ProjectionIndexStateStore,
     ProjectionsEngine,
@@ -321,6 +322,25 @@ def test_a_held_frame_reads_its_snapshot_across_a_publish(spark, tmp_path, write
 def _merge(repo, doc):
     struct = SCHEMA.to_struct_type()
     repo.merge_from_df(repo.spark.createDataFrame([doc], struct))
+
+
+def test_every_write_path_returns_the_same_raw_document(spark, tmp_path):
+    """single() returns one raw document whichever path wrote it: a Spark
+    MERGE (timestamps nested in a struct and in an array of structs
+    included), the pyarrow upsert and the in-memory repository."""
+    doc = DOCS[5]
+    merged = _repo(spark, tmp_path / "merge")
+    _merge(merged, doc)
+    upserted = _repo(spark, tmp_path / "upsert")
+    in_memory = InMemoryProjectionRepository(SCHEMA, upserted.state_store)
+    for repo in (upserted, in_memory):
+        repo.upsert_batch([doc], doc["PartitionKey"], updated_at=doc["UpdatedAt"])
+    got = [
+        repo.single(doc["Id"], doc["PartitionKey"])
+        for repo in (merged, upserted, in_memory)
+    ]
+    assert got == [doc] * 3
+    assert len(doc["Items"]) == 2 and doc["Owner"]["Since"].tzinfo is None
 
 
 @pytest.mark.parametrize("hook,write", [

@@ -1,8 +1,9 @@
 """Structured Streaming projection maintenance (S4/T1/T2/T5/T10) and the
 distributed-fold rebuild path."""
 
-import datetime
+import collections
 import decimal
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -327,7 +328,7 @@ def test_in_memory_and_parquet_sinks_hold_the_same_documents(
         for observer in observers:
             observer.process_all()
         return [
-            {o.id: _naive(repo.single(o.id, ORDERS_PARTITION_KEY)) for o in orders}
+            {o.id: repo.single(o.id, ORDERS_PARTITION_KEY) for o in orders}
             for repo in repos
         ]
 
@@ -343,17 +344,68 @@ def test_in_memory_and_parquet_sinks_hold_the_same_documents(
     assert parquet[orders[0].id] is None and parquet[orders[1].id] is not None
 
 
-def _naive(value):
-    """`value` with every datetime as naive UTC: a Spark-written snapshot
-    keeps timestamps nested in structs tz-aware (only top-level columns
-    are cast to NTZ), so the two backends return one instant two ways."""
-    if isinstance(value, dict):
-        return {k: _naive(v) for k, v in value.items()}
-    if isinstance(value, list):
-        return [_naive(v) for v in value]
-    if isinstance(value, datetime.datetime) and value.tzinfo is not None:
-        return value.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-    return value
+def test_one_batch_applies_each_event_once(spark, tmp_path, world):
+    """The Parquet MERGE computes its documents frame once: one drained
+    batch runs the builder's handlers once per event of the streams it
+    touched, not once for the changed keys and again for the upserts."""
+    store, _, repo, agg_repo = world
+    orders = seed_orders(agg_repo, 2)
+    applied = tmp_path / "applied"
+    applied.mkdir()
+
+    class CountingBuilder(OrdersListProjectionBuilder):
+        def apply_event(self, event):
+            # one marker file per handler call, written where the fold runs
+            (applied / f"{event.aggregate_id}.{uuid.uuid4().hex}").touch()
+            super().apply_event(event)
+
+    engine = ProjectionsEngine(store)
+    engine.add_projection_builder(CountingBuilder(repo, IndexSelector.Write))
+    SparkStreamingProjectionsObserver(
+        spark, store, engine, str(tmp_path / "ckpt_once")
+    ).process_all()
+
+    events = {
+        r["stream_id"]: r["count"]
+        for r in store.to_df(spark).groupBy("stream_id").count().collect()
+    }
+    calls = collections.Counter(p.name.split(".")[0] for p in applied.iterdir())
+    assert calls == events == {o.id: 2 for o in orders}
+    assert all(
+        repo.single(o.id, ORDERS_PARTITION_KEY)["ItemsCount"] == 2 for o in orders
+    )
+
+
+def test_batch_jobs_carry_the_projection_batch_description(spark, tmp_path, world):
+    """Every Spark job of a distributed batch is labelled "projection
+    batch <epoch>: <index>", and the caller's label comes back after."""
+    store, _, repo, agg_repo = world
+    orders = seed_orders(agg_repo, 2)
+    engine = ProjectionsEngine(store)
+    engine.add_projection_builder(OrdersListProjectionBuilder(repo, IndexSelector.Write))
+    observer = SparkStreamingProjectionsObserver(
+        spark, store, engine, str(tmp_path / "ckpt_label")
+    )
+    sc = spark.sparkContext
+    group = f"batch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "caller")
+    try:
+        observer._foreach_batch(store.to_df(spark), 7)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    status = sc._jsc.sc().statusStore()
+    assert jobs
+    assert {status.job(j).description().get() for j in jobs} == {
+        f"projection batch 7: {repo.schema.index_name()}"
+    }
+    assert all(
+        repo.single(o.id, ORDERS_PARTITION_KEY)["ItemsCount"] == 2 for o in orders
+    )
 
 
 def test_parity_observer_mode_still_available(spark, tmp_path, world):
