@@ -790,7 +790,7 @@ print(json.dumps({"t0": t0, "t1": time.time()}))
 
 def _bench_replay(spark, sf_dir: str) -> dict:
     """T-replay THROUGH the T8 rebuild processor (distributed mode): lease
-    -> per-stream applyInPandas fold through a real ProjectionBuilder ->
+    -> per-stream applyInArrow fold through a real ProjectionBuilder ->
     snapshot write -> per-batch progress. Also measures the reference's
     serial 250-chunk cursor loop (no SparkSession) on a 10k-event sample of
     the same store for the BASELINE.md >=2x comparison. Store

@@ -15,8 +15,8 @@ Dispatch: the C# `dynamic` double-dispatch to `On(ConcreteEvent)` maps to
 `on_<EventClassName>(event)` methods looked up by event class name.
 
 Bulk reconstruction (the Spark-first upgrade, SURVEY.md §1.2): besides the
-point `load`, `fold_all` reconstructs EVERY aggregate of a partition in one
-distributed pass with groupBy(stream_id) + applyInPandas.
+point `load`, `fold_all` reconstructs EVERY aggregate in one distributed
+pass on the store's per-stream fold kernel (`eventstore.store.fold_streams`).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ import uuid
 from typing import Generic, Optional, Type, TypeVar
 
 from cloudfabric_eventsourcing_spark.eventstore.event import Event
-from cloudfabric_eventsourcing_spark.eventstore.store import EventStore
+from cloudfabric_eventsourcing_spark.eventstore.store import EventStore, fold_streams
 from cloudfabric_eventsourcing_spark.functions import hash_string_to_uuid
 
 
@@ -254,16 +254,11 @@ def fold_all(
     in one distributed pass (SURVEY.md §1.2 — the Spark upgrade over the
     reference's per-id point loads).
 
-    groupBy(stream_id) + applyInPandas: each group arrives as an Arrow
-    batch, is sorted by stream_version, hydrated through the event-type
-    registry, folded through the aggregate's own on_<Event> handlers (the
-    exact same code the point path runs), and emitted as one row via
-    ``to_row(aggregate) -> dict``.
-
-    Scale notes: streams are small (the reference's own benchmark folds 104
-    events), so per-group pandas batches are tiny; the single shuffle is on
-    stream_id (uniform); handler code runs Arrow-batched per group, not
-    per event row.
+    Runs on the store's per-stream fold kernel (`eventstore.store.
+    fold_streams`): each (stream_id, partition_key) group is replayed in
+    version order, each event once, through the aggregate's own
+    on_<Event> handlers (the exact same code the point path runs), and
+    emitted as one row via ``to_row(aggregate) -> dict``.
 
     Args:
         events_df: DataFrame with the event-store schema.
@@ -272,33 +267,10 @@ def fold_all(
         output_schema: DDL string or StructType for the result.
         partition_key: optional partition filter (pruning).
     """
-    from pyspark.sql import functions as F
-
-    from cloudfabric_eventsourcing_spark.eventstore.event import EventRecord
-
     if partition_key is not None:
+        from pyspark.sql import functions as F
+
         events_df = events_df.where(F.col("partition_key") == partition_key)
-
-    def fold(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("stream_version")
-        events = []
-        for rec in pdf.itertuples(index=False):
-            record = EventRecord(
-                id=rec.id,
-                partition_key=rec.partition_key,
-                created_at=rec.created_at.to_pydatetime()
-                if hasattr(rec.created_at, "to_pydatetime")
-                else rec.created_at,
-                stream_id=rec.stream_id,
-                stream_version=int(rec.stream_version),
-                event_type=rec.event_type,
-                event_data=rec.event_data,
-                user_info=rec.user_info,
-            )
-            events.append(record.to_event())
-        aggregate = aggregate_cls(events)
-        return pd.DataFrame([to_row(aggregate)])
-
-    return events_df.groupBy("stream_id").applyInPandas(fold, output_schema)
+    return fold_streams(
+        events_df, lambda events: [to_row(aggregate_cls(events))], output_schema
+    )

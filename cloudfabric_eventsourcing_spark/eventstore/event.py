@@ -133,22 +133,12 @@ def _revive(annotation, v):
     return v
 
 
-# persisted row shape (PostgresqlEventStore.cs:510-526 ↔ FIXTURES.md §1)
-RECORD_FIELDS = (
-    "id",
-    "partition_key",
-    "created_at",
-    "stream_id",
-    "stream_version",
-    "event_type",
-    "event_data",
-    "user_info",
-    "eventstore_schema_version",
-)
-
-
 @dataclasses.dataclass
 class EventRecord:
+    """Persisted row shape (PostgresqlEventStore.cs:510-526 ↔ FIXTURES.md
+    §1): store reads, the fold kernel and the parity observer all turn a
+    row into an Event as ``EventRecord(**row).to_event()``."""
+
     id: str
     partition_key: str
     created_at: datetime.datetime

@@ -61,8 +61,8 @@ class JsonFileMetadataRepository:
     their own key, and the later replace would erase the earlier
     worker's lease.  Reads stay lock-free — the atomic replace
     guarantees every reader sees a complete (if slightly stale)
-    snapshot, and the state store's optimistic updated_at re-check
-    handles staleness."""
+    snapshot, and the compare-and-swap the state store requires rejects
+    a write based on a stale read."""
 
     def __init__(self, path: str):
         self.path = path

@@ -580,6 +580,43 @@ def _records_from_table(table: pa.Table) -> list[EventRecord]:
     return [EventRecord(**row) for row in table.to_pylist()]
 
 
+def fold_streams(events_df, fold: Callable[[list[Event]], list[dict]], struct):
+    """The one per-stream fold kernel: aggregates (`domain.fold_all`),
+    projection rebuilds and live micro-batches
+    (`projections.distributed.fold_builder_documents`) all replay a
+    stream here.
+
+    One `groupBy(stream_id, partition_key).applyInArrow` over the store's
+    columns. Each group is sorted by `stream_version`, deduped with the
+    point reads' `_dedupe_versions` (a frame listed mid-compaction holds
+    every event twice), hydrated with the store's own codec, and handed
+    to ``fold(events) -> list[dict]``; the rows come back as an Arrow
+    table typed by `struct` (a StructType or a DDL string)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(struct, str):
+        struct = _parse_datatype_string(struct)
+    # typed from the Spark struct: Spark rejects a result whose Arrow
+    # types differ from its own (it expects timestamps tz=UTC)
+    out_schema = to_arrow_schema(struct)
+
+    def kernel(table):
+        # Spark hands the rows over tz-aware; cast back to the store's row
+        # types so hydration sees exactly what a point read sees
+        records = _records_from_table(
+            table.cast(_ARROW_SCHEMA).sort_by("stream_version")
+        )
+        events = [r.to_event() for r in _dedupe_versions(records)]
+        return pa.Table.from_pylist(fold(events), schema=out_schema)
+
+    return (
+        events_df.select(*_ARROW_SCHEMA.names)
+        .groupBy("stream_id", "partition_key")
+        .applyInArrow(kernel, struct)
+    )
+
+
 def _relist_on_vanish(read):
     """Run `read()` again while it fails on a fragment it listed that has
     since been unlinked.  A compaction — possibly by another store

@@ -7,10 +7,12 @@ That single cursor is the reference's scale ceiling; SURVEY.md §3.3 notes
 a rebuild is embarrassingly parallel per stream: every projection document
 is a fold of ONE stream's events, so streams can be replayed concurrently.
 
-Spark mapping: groupBy(stream_id, partition_key) + applyInPandas. Each
-group replays through a FRESH builder instance bound to a group-local
-in-memory repository — the exact same handler code the serial path runs —
-and emits the group's final documents as rows. One shuffle on stream_id
+Spark mapping: the store's per-stream fold kernel
+(`eventstore.store.fold_streams`, one groupBy(stream_id, partition_key) +
+applyInArrow). Each group replays, in version order and each event once,
+through a FRESH builder instance bound to a group-local in-memory
+repository — the exact same handler code the serial path runs — and
+emits the group's final documents as rows. One shuffle on stream_id
 (uniform key), no driver funnel; the result DataFrame feeds the
 repository's sink (`overwrite_from_df` for a rebuild, `merge_from_df` for
 the live observer) so a 100 TB projection is written by executors in
@@ -25,33 +27,23 @@ observer's `mode="parity"`.
 
 from __future__ import annotations
 
-from typing import Callable, Type
-
-import pyarrow as pa
-from pyspark.sql import DataFrame
-
+from cloudfabric_eventsourcing_spark.eventstore.store import fold_streams
 from cloudfabric_eventsourcing_spark.projections.repository import (
     InMemoryProjectionRepository,
-    arrow_schema,
 )
-from cloudfabric_eventsourcing_spark.schema import ProjectionSchema
 
 
 TOMBSTONE_COL = "__is_tombstone"
 
 
-def fold_builder_documents(
-    events_df: DataFrame,
-    builder_factory: Callable,
-    schema: ProjectionSchema,
-    with_tombstones: bool = False,
-) -> DataFrame:
-    """Replay each stream through `builder_factory(local_repo)` and return
-    the final documents as a DataFrame shaped by `schema`.
+def fold_builder_documents(events_df, builder, with_tombstones: bool = False):
+    """Replay each stream through a copy of `builder` and return the final
+    documents as a DataFrame shaped by the builder's repository schema.
 
-    `builder_factory` must return a ProjectionBuilder bound to the
-    repository it is given (typically ``lambda repo: MyBuilder(repo,
-    IndexSelector.ProjectionRebuild)``); it is cloudpickled to executors.
+    Executors rebuild the builder as ``type(builder)(local_repo,
+    IndexSelector.ProjectionRebuild)`` (builders may only use Write/Rebuild
+    — ProjectionBuilder.cs:12-18); only the class and the schema are
+    cloudpickled, never the builder's own repository.
 
     With ``with_tombstones=True`` (the live-maintenance MERGE path) the
     result carries an extra boolean `__is_tombstone` column: a document the
@@ -60,22 +52,19 @@ def fold_builder_documents(
     """
     from pyspark.sql import types as T
 
+    builder_cls = type(builder)
+    schema = builder.repository.schema
     struct = schema.to_struct_type()
-    pa_schema = arrow_schema(schema)
     if with_tombstones:
         struct = T.StructType(
             struct.fields + [T.StructField(TOMBSTONE_COL, T.BooleanType())]
         )
-        pa_schema = pa_schema.append(pa.field(TOMBSTONE_COL, pa.bool_()))
     key_name = schema.key_name
 
-    def fold(pdf):
-        import pandas as pd
-
+    def fold(events):
         from cloudfabric_eventsourcing_spark.eventstore import (
             InMemoryMetadataRepository,
         )
-        from cloudfabric_eventsourcing_spark.eventstore.event import EventRecord
         from cloudfabric_eventsourcing_spark.projections.engine import (
             ProjectionsEngine,
         )
@@ -83,30 +72,16 @@ def fold_builder_documents(
             _normalize_doc,
         )
         from cloudfabric_eventsourcing_spark.projections.state import (
+            IndexSelector,
             ProjectionIndexStateStore,
         )
-
-        pdf = pdf.sort_values("stream_version")
-        events = []
-        for rec in pdf.itertuples(index=False):
-            record = EventRecord(
-                id=rec.id,
-                partition_key=rec.partition_key,
-                created_at=rec.created_at.to_pydatetime()
-                if hasattr(rec.created_at, "to_pydatetime")
-                else rec.created_at,
-                stream_id=rec.stream_id,
-                stream_version=int(rec.stream_version),
-                event_type=rec.event_type,
-                event_data=rec.event_data,
-                user_info=rec.user_info,
-            )
-            events.append(record.to_event())
 
         local_state = ProjectionIndexStateStore(InMemoryMetadataRepository())
         local_repo = _TrackingInMemoryRepository(schema, local_state)
         engine = ProjectionsEngine()
-        engine.add_projection_builder(builder_factory(local_repo))
+        engine.add_projection_builder(
+            builder_cls(local_repo, IndexSelector.ProjectionRebuild)
+        )
         for event in events:
             engine.handle_event(event)
 
@@ -131,16 +106,9 @@ def fold_builder_documents(
                             TOMBSTONE_COL: True,
                         }
                     )
-        if not docs:
-            return pd.DataFrame({f.name: [] for f in struct.fields})
-        # round-trip through arrow with the schema-derived types so
-        # decimals/timestamps/nested structs land exactly as the snapshot
-        # writer expects them
-        return pa.Table.from_pylist(docs, schema=pa_schema).to_pandas()
+        return docs
 
-    return events_df.groupBy("stream_id", "partition_key").applyInPandas(
-        fold, struct
-    )
+    return fold_streams(events_df, fold, struct)
 
 
 def _coerce_key(kid, key_prop):
@@ -192,13 +160,3 @@ class _TrackingInMemoryRepository(InMemoryProjectionRepository):
         # keep the NATIVE key value — tombstone rows are typed by the
         # projection schema (a str'd INT64 key breaks the arrow build)
         self.deleted_keys.add((id, partition_key))
-
-
-def builder_rebuild_factory(builder) -> Callable:
-    """Factory replicating `builder` on executors: same class, same schema,
-    ProjectionRebuild selector (builders may only use Write/Rebuild —
-    ProjectionBuilder.cs:12-18)."""
-    from cloudfabric_eventsourcing_spark.projections.state import IndexSelector
-
-    builder_cls: Type = type(builder)
-    return lambda repo: builder_cls(repo, IndexSelector.ProjectionRebuild)

@@ -152,7 +152,7 @@ class ProjectionsRebuildProcessor:
 
     The SparkSession selects the path:
       - **distributed** (given a SparkSession): each builder's documents
-        are recomputed with one per-stream applyInPandas fold over the
+        are recomputed with the store's per-stream fold kernel over the
         whole event table and handed to the repository's
         `overwrite_from_df`, whatever the backend — the SURVEY §3.3 scale
         path. Progress/health is updated per event batch (streams are
@@ -218,7 +218,6 @@ class ProjectionsRebuildProcessor:
         from pyspark.sql import functions as F
 
         from cloudfabric_eventsourcing_spark.projections.distributed import (
-            builder_rebuild_factory,
             fold_builder_documents,
         )
 
@@ -236,11 +235,7 @@ class ProjectionsRebuildProcessor:
                 else events_df
             )
             for i, builder in enumerate(engine._builders):
-                docs = fold_builder_documents(
-                    part,
-                    builder_rebuild_factory(builder),
-                    builder.repository.schema,
-                ).persist()
+                docs = fold_builder_documents(part, builder).persist()
                 docs.count()  # materialize: progress reflects finished work
                 per_builder_parts[i].append(docs)
             stats = part.agg(

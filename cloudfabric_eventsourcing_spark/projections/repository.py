@@ -531,7 +531,7 @@ class ParquetProjectionRepository(ProjectionRepository):
         :304-388 delete, collapsed into one plan).
 
         The documents are computed once: `docs_df` (on the live path a
-        store scan, a semi-join and an `applyInPandas` fold) is
+        store scan, a semi-join and the `fold_streams` kernel) is
         materialized by an eager `localCheckpoint`, and the changed-key
         set and the upserts both read that checkpoint. It runs before the
         snapshot is resolved, so a publish by another instance can only

@@ -23,7 +23,6 @@ import dataclasses
 import datetime
 import json
 import threading
-import uuid
 from typing import Optional
 
 from cloudfabric_eventsourcing_spark.schema import ProjectionSchema
@@ -59,13 +58,6 @@ class IndexStateForSchemaVersion:
     rebuild_completed_at: Optional[datetime.datetime] = None
     rebuild_health_check_at: Optional[datetime.datetime] = None
     last_processed_event_timestamp: Optional[datetime.datetime] = None
-    # lease-ownership nonce for repos WITHOUT compare_and_upsert: the
-    # blind-save fallback's re-read check compares this instead of the
-    # acquisition timestamp (two workers can sample the same microsecond;
-    # they cannot sample the same uuid).  Absent from the reference row
-    # (its conditional UPDATE needs no fallback); defaults keep old
-    # persisted dicts loadable.
-    rebuild_owner_nonce: Optional[str] = None
 
     def to_dict(self) -> dict:
         return {k: _iso(v) for k, v in dataclasses.asdict(self).items()}
@@ -73,6 +65,9 @@ class IndexStateForSchemaVersion:
     @staticmethod
     def from_dict(d: dict) -> "IndexStateForSchemaVersion":
         kwargs = dict(d)
+        # rows leased before every metadata repository had a CAS carry
+        # an owner nonce; the CAS lease needs none
+        kwargs.pop("rebuild_owner_nonce", None)
         for k in (
             "created_at",
             "rebuild_started_at",
@@ -125,6 +120,11 @@ class ProjectionIndexStateStore:
     PARTITION = "projection_index_state"
 
     def __init__(self, metadata_repo):
+        if not callable(getattr(metadata_repo, "compare_and_upsert", None)):
+            raise TypeError(
+                f"{type(metadata_repo).__name__} has no compare_and_upsert: "
+                "rebuild leases and progress need a compare-and-swap"
+            )
         self._repo = metadata_repo
         self._lock = threading.Lock()
 
@@ -226,40 +226,14 @@ class ProjectionIndexStateStore:
             index.rebuild_started_at = started
             index.rebuild_health_check_at = started
             index.rebuild_completed_at = None
-            index.rebuild_owner_nonce = uuid.uuid4().hex
-            cas = getattr(self._repo, "compare_and_upsert", None)
-            if cas is not None:
-                # true compare-and-swap (the reference's conditional
-                # UPDATE, :425-441): the lease write succeeds only if
-                # nobody changed the row since our read — two parallel
-                # worker processes can never both acquire the same index
-                if not cas(
-                    state.projection_name, self.PARTITION,
-                    state.to_dict(), raw_before,
-                ):
-                    continue
-                return state, index.index_name
-            # fallback for custom repos without CAS: blind save + re-read.
-            # Ownership is the per-worker NONCE, not the timestamp — two
-            # workers that sample the same microsecond would both pass a
-            # timestamp check and double-acquire the index.
-            self.save(state)
-            check = self.get(name)
-            winner = None
-            if check is not None:
-                winner = next(
-                    (
-                        s
-                        for s in check.indexes_statuses
-                        if s.index_name == index.index_name
-                    ),
-                    None,
-                )
-            if winner is None or (
-                winner.rebuild_owner_nonce != index.rebuild_owner_nonce
+            # true compare-and-swap (the reference's conditional UPDATE,
+            # :425-441): the lease write succeeds only if nobody changed
+            # the row since our read — two parallel worker processes can
+            # never both acquire the same index
+            if self._repo.compare_and_upsert(
+                state.projection_name, self.PARTITION, state.to_dict(), raw_before
             ):
-                continue
-            return check, index.index_name
+                return state, index.index_name
         return None, None
 
     def update_rebuild_progress(
@@ -272,7 +246,6 @@ class ProjectionIndexStateStore:
         completed: bool = False,
     ) -> None:
         with self._lock:
-            cas = getattr(self._repo, "compare_and_upsert", None)
             # CAS-with-retry: a progress heartbeat must never clobber a
             # CONCURRENT change to the same row (another worker process
             # leasing a sibling index status of this projection) — re-read
@@ -292,10 +265,9 @@ class ProjectionIndexStateStore:
                             s.total_events_to_process = total
                         if completed:
                             s.rebuild_completed_at = _utcnow()
-                if cas is None:
-                    self.save(state)
-                    return
-                if cas(projection_name, self.PARTITION, state.to_dict(), raw):
+                if self._repo.compare_and_upsert(
+                    projection_name, self.PARTITION, state.to_dict(), raw
+                ):
                     return
             raise RuntimeError(
                 f"update_rebuild_progress({projection_name}): row contended "

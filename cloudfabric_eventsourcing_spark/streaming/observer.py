@@ -23,9 +23,9 @@ Execution modes (default = the scale path):
   - **distributed** (default): each micro-batch only *selects* which
     streams changed; the affected streams are re-folded executor-side
     through the builders' own handlers (projections.distributed.
-    fold_builder_documents) and the documents (with tombstones for
-    deletes) go to the repository's `merge_from_df` — the one sink call,
-    whatever the backend. Event rows are never collected to the driver;
+    fold_builder_documents, on the store's one fold kernel) and the
+    documents (with tombstones for deletes) go to the repository's
+    `merge_from_df` — the one sink call, whatever the backend. Event rows are never collected to the driver;
     the Parquet MERGE keeps documents on the executors too, and the
     in-memory repository, whose documents live on the driver, collects
     only the affected documents.
@@ -55,7 +55,6 @@ class SparkStreamingProjectionsObserver:
         event_store: ParquetEventStore,
         engine: ProjectionsEngine,
         checkpoint_dir: str,
-        handled_event_types: Optional[set[str]] = None,
         mode: str = "distributed",
         date_from: Optional[datetime.datetime] = None,
     ):
@@ -73,11 +72,9 @@ class SparkStreamingProjectionsObserver:
         self.date_from = date_from
         # builder fan-out (T6): push down the union of handled types so the
         # stream filter prunes unhandled events before they reach Python
-        if handled_event_types is None:
-            handled_event_types = set()
-            for b in engine._builders:
-                handled_event_types |= b.handled_event_types
-        self.handled_event_types = handled_event_types
+        self.handled_event_types = set().union(
+            *(b.handled_event_types for b in engine._builders)
+        )
         self._query = None
 
     def _foreach_batch(self, batch_df, epoch_id: int) -> None:
@@ -93,7 +90,6 @@ class SparkStreamingProjectionsObserver:
         <epoch_id>: <index>"."""
         from cloudfabric_eventsourcing_spark.projections.distributed import (
             TOMBSTONE_COL,
-            builder_rebuild_factory,
             fold_builder_documents,
         )
 
@@ -108,10 +104,7 @@ class SparkStreamingProjectionsObserver:
                 self.spark, f"projection batch {epoch_id}: {index_name}"
             ):
                 docs_df = fold_builder_documents(
-                    scoped,
-                    builder_rebuild_factory(builder),
-                    repo.schema,
-                    with_tombstones=True,
+                    scoped, builder, with_tombstones=True
                 )
                 repo.merge_from_df(
                     docs_df, selector=builder.index_selector,
@@ -124,18 +117,7 @@ class SparkStreamingProjectionsObserver:
         rows = batch_df.dropDuplicates(["id"]).collect()
         rows.sort(key=lambda r: (r["created_at"], r["stream_version"]))
         for row in rows:
-            record = EventRecord(
-                id=row["id"],
-                partition_key=row["partition_key"],
-                created_at=row["created_at"],
-                stream_id=row["stream_id"],
-                stream_version=row["stream_version"],
-                event_type=row["event_type"],
-                event_data=row["event_data"],
-                user_info=row["user_info"],
-                eventstore_schema_version=row["eventstore_schema_version"],
-            )
-            self.engine.handle_event(record.to_event())
+            self.engine.handle_event(EventRecord(**row.asDict()).to_event())
 
     def _stream_df(self):
         df = self.event_store.read_stream(self.spark, date_from=self.date_from)

@@ -5,6 +5,7 @@ version of the reference's backend-parameterized differential suites
 import datetime
 import decimal
 import os
+import subprocess
 import sys
 import threading
 import time
@@ -49,6 +50,24 @@ def make_order(oid="2c55f399-0000-0000-0000-000000000001"):
         [OrderItem(utcnow(), "Caverna", decimal.Decimal("12.00"))],
         created_by_email="john@gmail.com",
     )
+
+
+def test_event_store_and_domain_import_no_spark():
+    """The event store and the domain layer append and load without a
+    JVM: importing them must not load pyspark (every pyspark import in
+    them sits inside the function that needs it)."""
+    code = (
+        "import sys\n"
+        "import cloudfabric_eventsourcing_spark.eventstore\n"
+        "import cloudfabric_eventsourcing_spark.domain\n"
+        "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pyspark'))"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, check=True,
+        capture_output=True, text=True,
+    )
+    assert out.stdout.strip() == "[]"
 
 
 def test_aggregate_roundtrip(store):

@@ -40,7 +40,6 @@ from cloudfabric_eventsourcing_spark.projections import (
     repository,
 )
 from cloudfabric_eventsourcing_spark.projections.distributed import (
-    builder_rebuild_factory,
     fold_builder_documents,
 )
 from cloudfabric_eventsourcing_spark.queries import (
@@ -438,9 +437,7 @@ def test_readers_never_fail_during_a_live_merge(spark, tmp_path):
     assert failures == [] and reads[0] > 0
     got = {r["Id"]: (r["NEvents"], r["Purchases"], r["ValueCents"])
            for r in repo.to_df().collect()}
-    rebuilt = fold_builder_documents(
-        store.to_df(spark), builder_rebuild_factory(builder), schema
-    )
+    rebuilt = fold_builder_documents(store.to_df(spark), builder)
     want = {r["Id"]: (r["NEvents"], r["Purchases"], r["ValueCents"])
             for r in rebuilt.collect()}
     assert got == want and sum(n for n, _, _ in got.values()) == sum(

@@ -448,66 +448,46 @@ def test_threaded_rebuild_waves_drain_pending_rebuilds(tmp_path):
         assert all(s.rebuild_completed_at for s in st.indexes_statuses), nm
 
 
-def test_no_cas_lease_fallback_uses_nonce_not_timestamp(monkeypatch):
-    """r7 advice pin: for custom metadata repos WITHOUT compare_and_upsert,
-    the blind-save + re-read fallback must establish ownership with a
-    per-worker nonce.  Two workers sampling the SAME microsecond
-    timestamp (frozen clock here) would both pass a timestamp-equality
-    check and double-acquire; with the nonce, exactly one wins."""
-    import json
-
-    from cloudfabric_eventsourcing_spark.projections import state as state_mod
+def test_state_store_rejects_a_repository_without_cas():
+    """Rebuild leases and progress heartbeats are compare-and-swaps; a
+    metadata repository that cannot do one is refused up front rather
+    than raced into a double-acquired lease later."""
 
     class NoCasRepo:
-        # deliberately NO compare_and_upsert: exercises the fallback
-        def __init__(self):
-            self._items = {}
-
         def load_item(self, item_id, partition_key):
-            return self._items.get((item_id, partition_key))
+            return None
 
         def upsert_item(self, item_id, partition_key, item):
-            self._items[(item_id, partition_key)] = item
+            pass
 
-    frozen = datetime.datetime(2026, 8, 15, 12, 0, 0)
-    monkeypatch.setattr(state_mod, "_utcnow", lambda: frozen)
+    with pytest.raises(TypeError, match="compare_and_upsert"):
+        ProjectionIndexStateStore(NoCasRepo())
 
-    repo = NoCasRepo()
-    store_a = ProjectionIndexStateStore(repo)
+
+def test_state_row_with_an_owner_nonce_still_loads():
+    """Rows leased by earlier versions carry `rebuild_owner_nonce`; they
+    load, lease and heartbeat like any other row."""
+    from cloudfabric_eventsourcing_spark.projections import state as state_mod
+
+    repo = InMemoryMetadataRepository()
+    store = ProjectionIndexStateStore(repo)
     schema = orders_list_schema()
     schema.schema_name = "nonce_proj"
-    st = state_mod.ProjectionIndexState(
+    row = state_mod.ProjectionIndexState(
         "nonce_proj",
-        frozen,
+        None,
         [state_mod._new_status(schema, schema.properties_hash(), "idx_n1")],
-    )
-    store_a.save(st)
+    ).to_dict()
+    row["indexes_statuses"][0]["rebuild_owner_nonce"] = "an-old-nonce"
+    repo.upsert_item("nonce_proj", ProjectionIndexStateStore.PARTITION, row)
 
-    # interleave: the instant worker A's blind save lands, worker B's
-    # competing blind save (computed from the SAME pre-lease read, same
-    # frozen timestamp, its own nonce) overwrites it — the last-writer-
-    # wins window the re-read check exists for
-    b_nonce = "b-worker-nonce"
-    real_upsert = repo.upsert_item
-    fired = [False]
-
-    def racing_upsert(item_id, partition_key, item):
-        real_upsert(item_id, partition_key, item)
-        if not fired[0]:
-            fired[0] = True
-            b_item = json.loads(json.dumps(item))
-            b_item["indexes_statuses"][0]["rebuild_owner_nonce"] = b_nonce
-            real_upsert(item_id, partition_key, b_item)
-
-    repo.upsert_item = racing_upsert
-    a_state, a_index = store_a.acquire_and_lock_rebuild()
-
-    # the persisted lease carries B's nonce and A's (identical) timestamp:
-    # a timestamp-equality ownership check would have WRONGLY let A win
-    row = repo.load_item("nonce_proj", ProjectionIndexStateStore.PARTITION)
-    assert state_mod._unaiso(row["updated_at"]) == frozen
-    assert row["indexes_statuses"][0]["rebuild_owner_nonce"] == b_nonce
-    assert a_index is None and a_state is None
+    assert store.get("nonce_proj").indexes_statuses[0].index_name == "idx_n1"
+    leased, index_name = store.acquire_and_lock_rebuild()
+    assert index_name == "idx_n1" and leased.projection_name == "nonce_proj"
+    store.update_rebuild_progress("nonce_proj", "idx_n1", 3, completed=True)
+    saved = repo.load_item("nonce_proj", ProjectionIndexStateStore.PARTITION)
+    assert "rebuild_owner_nonce" not in saved["indexes_statuses"][0]
+    assert store.get("nonce_proj").indexes_statuses[0].rebuild_completed_at
 
 
 def test_two_process_rebuild_workers_split_pending_rebuilds(tmp_path):

@@ -376,6 +376,53 @@ def test_one_batch_applies_each_event_once(spark, tmp_path, world):
     )
 
 
+def test_a_fold_applies_a_listed_twice_event_once(spark, tmp_path, world):
+    """A compaction renames its snapshot in before it unlinks the sources,
+    so `to_df` can list every event twice until the next maintenance: in
+    that window, or after a crash between the two steps."""
+    from cloudfabric_eventsourcing_spark.projections.distributed import (
+        fold_builder_documents,
+    )
+
+    store, _, repo, agg_repo = world
+    seed_orders(agg_repo, 3)
+    builder = OrdersListProjectionBuilder(repo, IndexSelector.Write)
+    events = store.to_df(spark)
+
+    def fold(df):
+        return {
+            r["Id"]: r.asDict(recursive=True)
+            for r in fold_builder_documents(df, builder).collect()
+        }
+
+    once = fold(events)
+    assert [d["ItemsCount"] for d in once.values()] == [2, 2, 2]
+    assert fold(events.unionByName(events)) == once
+
+
+def test_observer_applies_a_listed_twice_event_once(
+    spark, tmp_path, world, monkeypatch
+):
+    """The live batch re-folds its streams from the same `to_df` frame, so
+    the MERGEd documents must count each event once as well."""
+    store, _, repo, agg_repo = world
+    orders = seed_orders(agg_repo, 2)
+    to_df = store.to_df
+    monkeypatch.setattr(
+        store, "to_df", lambda s: to_df(s).unionByName(to_df(s))
+    )
+    engine = ProjectionsEngine(store)
+    engine.add_projection_builder(
+        OrdersListProjectionBuilder(repo, IndexSelector.Write)
+    )
+    SparkStreamingProjectionsObserver(
+        spark, store, engine, str(tmp_path / "ckpt_twice")
+    ).process_all()
+    assert [
+        repo.single(o.id, ORDERS_PARTITION_KEY)["ItemsCount"] for o in orders
+    ] == [2, 2]
+
+
 def test_batch_jobs_carry_the_projection_batch_description(spark, tmp_path, world):
     """Every Spark job of a distributed batch is labelled "projection
     batch <epoch>: <index>", and the caller's label comes back after."""
