@@ -791,7 +791,7 @@ print(json.dumps({"t0": t0, "t1": time.time()}))
 def _bench_replay(spark, sf_dir: str) -> dict:
     """T-replay THROUGH the T8 rebuild processor (distributed mode): lease
     -> per-stream applyInArrow fold through a real ProjectionBuilder ->
-    snapshot write -> per-batch progress. Also measures the reference's
+    snapshot write, with the progress heartbeat running. Also measures the reference's
     serial 250-chunk cursor loop (no SparkSession) on a 10k-event sample of
     the same store for the BASELINE.md >=2x comparison. Store
     materialization is excluded from both timings."""
@@ -817,7 +817,7 @@ def _bench_replay(spark, sf_dir: str) -> dict:
 
     d = tempfile.mkdtemp(prefix="cfes-replay-")
     try:
-        def run(limit, mode, batches, tag=""):
+        def run(limit, mode, tag=""):
             store = make_bench_event_store(
                 spark, sf_dir, os.path.join(d, f"events-{mode}{tag}"), limit=limit
             )
@@ -845,7 +845,6 @@ def _bench_replay(spark, sf_dir: str) -> dict:
             proc = ProjectionsRebuildProcessor(
                 state, factory, store,
                 spark=spark if mode == "distributed" else None,
-                rebuild_batches=batches,
             )
             t0 = time.perf_counter()
             done = proc.rebuild_projections_that_require_rebuild()
@@ -860,11 +859,11 @@ def _bench_replay(spark, sf_dir: str) -> dict:
         # spread); one extra attempt per metric costs ~20 s and pins the
         # round-over-round comparison to the engine, not the neighbor.
         serial = max(
-            run(limit=10_000, mode="serial", batches=1, tag=f"-{i}")
+            run(limit=10_000, mode="serial", tag=f"-{i}")
             for i in range(3)
         )
         distributed = max(
-            run(limit=None, mode="distributed", batches=2, tag=f"-{i}")
+            run(limit=None, mode="distributed", tag=f"-{i}")
             for i in range(3)
         )
         return {

@@ -33,6 +33,10 @@ class InMemoryMetadataRepository:
     def load_item(self, id: str, partition_key: str) -> Optional[Any]:
         return self._items.get((id, partition_key))
 
+    def list_ids(self, partition_key: str) -> list[str]:
+        with self._lock:
+            return [i for i, pk in self._items if pk == partition_key]
+
     def compare_and_upsert(
         self, id: str, partition_key: str, item: Any, expected: Any
     ) -> bool:
@@ -110,3 +114,7 @@ class JsonFileMetadataRepository:
 
     def load_item(self, id: str, partition_key: str) -> Optional[Any]:
         return self._load().get(f"{partition_key}\x00{id}")
+
+    def list_ids(self, partition_key: str) -> list[str]:
+        prefix = f"{partition_key}\x00"
+        return [k[len(prefix):] for k in self._load() if k.startswith(prefix)]

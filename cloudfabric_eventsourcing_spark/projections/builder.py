@@ -19,12 +19,24 @@ from __future__ import annotations
 
 import dataclasses
 import datetime
+import functools
 from typing import Callable, Optional
 
 from cloudfabric_eventsourcing_spark.eventstore.event import Event
 from cloudfabric_eventsourcing_spark.projections.repository import ProjectionRepository
 from cloudfabric_eventsourcing_spark.projections.state import IndexSelector
 from cloudfabric_eventsourcing_spark.queries.projection_query import ProjectionQuery
+
+
+@functools.cache
+def _handled_event_types(cls: type) -> frozenset[str]:
+    """The event types a builder class has `on_<EventType>` handlers for,
+    walked once per class: dispatch reads them for every event."""
+    return frozenset(
+        name[3:]
+        for name in dir(cls)
+        if name.startswith("on_") and callable(getattr(cls, name))
+    )
 
 
 @dataclasses.dataclass
@@ -58,12 +70,8 @@ class ProjectionBuilder:
 
     # -- dispatch -----------------------------------------------------------
     @property
-    def handled_event_types(self) -> set[str]:
-        return {
-            name[3:]
-            for name in dir(type(self))
-            if name.startswith("on_") and callable(getattr(self, name))
-        }
+    def handled_event_types(self) -> frozenset[str]:
+        return _handled_event_types(type(self))
 
     def apply_event(self, event: Event) -> None:
         handler = getattr(self, f"on_{type(event).__name__}", None)

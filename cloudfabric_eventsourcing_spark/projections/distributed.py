@@ -36,7 +36,9 @@ from cloudfabric_eventsourcing_spark.projections.repository import (
 TOMBSTONE_COL = "__is_tombstone"
 
 
-def fold_builder_documents(events_df, builder, with_tombstones: bool = False):
+def fold_builder_documents(
+    events_df, builder, with_tombstones: bool = False, events_folded=None
+):
     """Replay each stream through a copy of `builder` and return the final
     documents as a DataFrame shaped by the builder's repository schema.
 
@@ -49,6 +51,9 @@ def fold_builder_documents(events_df, builder, with_tombstones: bool = False):
     result carries an extra boolean `__is_tombstone` column: a document the
     builder deleted and never re-created comes back as a key-only tombstone
     row, so the caller can propagate the delete to the real index.
+
+    ``events_folded``, set only by the rebuild for its progress, is a
+    Spark accumulator that each stream adds its event count to.
     """
     from pyspark.sql import types as T
 
@@ -84,6 +89,8 @@ def fold_builder_documents(events_df, builder, with_tombstones: bool = False):
         )
         for event in events:
             engine.handle_event(event)
+        if events_folded is not None:
+            events_folded.add(len(events))
 
         docs = [
             _normalize_doc(d)

@@ -20,7 +20,9 @@ under timestamp collisions (documented improvement).
 
 from __future__ import annotations
 
+import contextlib
 import datetime
+import threading
 from typing import Callable, Optional
 
 from cloudfabric_eventsourcing_spark.eventstore.event import Event
@@ -29,6 +31,7 @@ from cloudfabric_eventsourcing_spark.projections.builder import (
     AggregateUpdatedEvent,
     ProjectionBuilder,
 )
+from cloudfabric_eventsourcing_spark.projections import state as state_module
 from cloudfabric_eventsourcing_spark.projections.state import ProjectionIndexStateStore
 
 ProgressCallback = Callable[[int, Event], None]
@@ -155,9 +158,10 @@ class ProjectionsRebuildProcessor:
         are recomputed with the store's per-stream fold kernel over the
         whole event table and handed to the repository's
         `overwrite_from_df`, whatever the backend — the SURVEY §3.3 scale
-        path. Progress/health is updated per event batch (streams are
-        split into `rebuild_batches` hash buckets; each bucket is one
-        Spark job).
+        path, one fold job per builder. While it runs, a driver thread
+        writes progress (events folded so far, from a Spark accumulator)
+        and the health check every `REBUILD_HEALTH_CHECK_STALE / 5`, so
+        the lease cannot lapse mid-job.
       - **serial** (no SparkSession): the reference's chunked
         single-cursor replay loop, kept as the parity path and for
         builders whose documents aggregate across streams.
@@ -170,93 +174,66 @@ class ProjectionsRebuildProcessor:
         event_store: EventStore,
         chunk_size: int = 250,
         spark=None,
-        rebuild_batches: int = 4,
     ):
         self.state_store = state_store
         self.engine_factory = engine_factory
         self.event_store = event_store
         self.chunk_size = chunk_size
         self.spark = spark
-        self.rebuild_batches = max(1, rebuild_batches)
 
     def rebuild_one_projection_which_requires_rebuild(self) -> Optional[str]:
         state, index_name = self.state_store.acquire_and_lock_rebuild()
         if state is None:
             return None
         engine = self.engine_factory(index_name)
-        if self.spark is not None:
-            processed = self._replay_distributed(engine, state, index_name)
+        stats = self.event_store.get_statistics()
+
+        def progress(processed: int, last_ts=None, completed=False) -> None:
+            self.state_store.update_rebuild_progress(
+                state.projection_name,
+                index_name,
+                processed,
+                last_ts=last_ts,
+                total=stats.total_events_count,
+                completed=completed,
+            )
+
+        if self.spark is None:
+            progress(self._replay_serial(engine, progress), completed=True)
         else:
-            processed = self._replay_serial(engine, state, index_name)
-        self.state_store.update_rebuild_progress(
-            state.projection_name, index_name, processed, completed=True
-        )
+            self._replay_distributed(engine, index_name, stats, progress)
+            last_ts = stats.last_event_created_at
+            progress(stats.total_events_count, last_ts, completed=True)
         return index_name
 
     # -- serial parity path (the reference's cursor loop) -------------------
-    def _replay_serial(self, engine, state, index_name) -> int:
-        total = self.event_store.get_statistics().total_events_count
-
-        def progress(processed: int, last_event: Event) -> None:
-            self.state_store.update_rebuild_progress(
-                state.projection_name,
-                index_name,
-                processed,
-                last_ts=last_event.timestamp,
-                total=total,
-            )
-
+    def _replay_serial(self, engine, progress) -> int:
         return engine.replay_events(
-            partition_key=None,
-            date_from=None,
             chunk_size=self.chunk_size,
-            chunk_processed_callback=progress,
+            chunk_processed_callback=lambda n, last: progress(n, last.timestamp),
         )
 
     # -- distributed scale path ---------------------------------------------
-    def _replay_distributed(self, engine, state, index_name) -> int:
-        from pyspark.sql import functions as F
-
+    def _replay_distributed(self, engine, index_name, stats, progress) -> None:
         from cloudfabric_eventsourcing_spark.projections.distributed import (
             fold_builder_documents,
         )
+        from cloudfabric_eventsourcing_spark.session import job_description
 
-        total = self.event_store.get_statistics().total_events_count
-        events_df = self.event_store.to_df(self.spark)
-        n_batches = self.rebuild_batches
-        processed = 0
-        per_builder_parts: list[list] = [[] for _ in engine._builders]
-        for b in range(n_batches):
-            part = (
-                events_df.where(
-                    F.pmod(F.abs(F.xxhash64("stream_id")), F.lit(n_batches)) == b
-                )
-                if n_batches > 1
-                else events_df
-            )
-            for i, builder in enumerate(engine._builders):
-                docs = fold_builder_documents(part, builder).persist()
-                docs.count()  # materialize: progress reflects finished work
-                per_builder_parts[i].append(docs)
-            stats = part.agg(
-                F.count(F.lit(1)).alias("n"), F.max("created_at").alias("ts")
-            ).first()
-            processed += int(stats["n"])
-            self.state_store.update_rebuild_progress(
-                state.projection_name,
-                index_name,
-                processed,
-                last_ts=stats["ts"],
-                total=total,
-            )
-        for builder, parts in zip(engine._builders, per_builder_parts):
-            docs = parts[0]
-            for extra in parts[1:]:
-                docs = docs.unionByName(extra)
-            builder.repository.overwrite_from_df(docs)
-            for p in parts:
-                p.unpersist()
-        return processed
+        folded = self.spark.sparkContext.accumulator(0)
+        n_builders = max(1, len(engine._builders))
+
+        def beat() -> None:
+            progress(min(folded.value // n_builders, stats.total_events_count))
+
+        with job_description(self.spark, f"projection rebuild: {index_name}"):
+            with _heartbeat(beat):
+                events_df = self.event_store.to_df(self.spark)
+                for builder in engine._builders:
+                    docs = fold_builder_documents(
+                        events_df, builder, events_folded=folded
+                    )
+                    builder.repository.overwrite_from_df(docs)
 
     def rebuild_projections_that_require_rebuild(
         self, max_parallel_tasks: int = 1
@@ -300,3 +277,26 @@ class ProjectionsRebuildProcessor:
                     # the reference recurses until a FULL empty pass
                     if all(n is None for n in wave):
                         return done
+
+
+@contextlib.contextmanager
+def _heartbeat(beat: Callable[[], None]):
+    """Run `beat()` on a daemon thread every `REBUILD_HEALTH_CHECK_STALE / 5`
+    while the block runs. The thread is stopped and joined on the way out,
+    so no beat lands after the block and a failed block stops beating."""
+    interval = state_module.REBUILD_HEALTH_CHECK_STALE.total_seconds() / 5
+    stop = threading.Event()
+
+    def run() -> None:
+        while not stop.wait(interval):
+            beat()
+
+    thread = threading.Thread(
+        target=run, name="projection-rebuild-heartbeat", daemon=True
+    )
+    thread.start()
+    try:
+        yield
+    finally:
+        stop.set()
+        thread.join()

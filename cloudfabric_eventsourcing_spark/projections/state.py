@@ -22,12 +22,15 @@ from __future__ import annotations
 import dataclasses
 import datetime
 import json
+import logging
 import threading
 from typing import Optional
 
 from cloudfabric_eventsourcing_spark.schema import ProjectionSchema
 
 REBUILD_HEALTH_CHECK_STALE = datetime.timedelta(minutes=5)
+
+log = logging.getLogger(__name__)
 
 
 class IndexNotReadyError(RuntimeError):
@@ -120,11 +123,12 @@ class ProjectionIndexStateStore:
     PARTITION = "projection_index_state"
 
     def __init__(self, metadata_repo):
-        if not callable(getattr(metadata_repo, "compare_and_upsert", None)):
-            raise TypeError(
-                f"{type(metadata_repo).__name__} has no compare_and_upsert: "
-                "rebuild leases and progress need a compare-and-swap"
-            )
+        for method in ("compare_and_upsert", "list_ids"):
+            if not callable(getattr(metadata_repo, method, None)):
+                raise TypeError(
+                    f"{type(metadata_repo).__name__} has no {method}: rebuild "
+                    "leases need a compare-and-swap and the projections' names"
+                )
         self._repo = metadata_repo
         self._lock = threading.Lock()
 
@@ -136,12 +140,7 @@ class ProjectionIndexStateStore:
         self._repo.upsert_item(state.projection_name, self.PARTITION, state.to_dict())
 
     def list_names(self) -> list[str]:
-        names = getattr(self._repo, "_items", None)
-        if names is not None:  # in-memory
-            return [k[0] for k in names if k[1] == self.PARTITION]
-        data = self._repo._load()  # json-file repo
-        prefix = f"{self.PARTITION}\x00"
-        return [k[len(prefix):] for k in data if k.startswith(prefix)]
+        return self._repo.list_ids(self.PARTITION)
 
     # -- index resolution (ProjectionRepository.cs:252-373) -----------------
     def resolve_index(
@@ -223,6 +222,8 @@ class ProjectionIndexStateStore:
                 (s for s in state.indexes_statuses if eligible(s)),
                 key=lambda s: s.created_at,
             )
+            taken_over = index.rebuild_started_at is not None
+            stale_check = index.rebuild_health_check_at
             index.rebuild_started_at = started
             index.rebuild_health_check_at = started
             index.rebuild_completed_at = None
@@ -233,6 +234,12 @@ class ProjectionIndexStateStore:
             if self._repo.compare_and_upsert(
                 state.projection_name, self.PARTITION, state.to_dict(), raw_before
             ):
+                if taken_over:
+                    log.warning(
+                        "projection %s: taking over the rebuild of index %s "
+                        "from a stale worker (last health check %s)",
+                        state.projection_name, index.index_name, stale_check,
+                    )
                 return state, index.index_name
         return None, None
 

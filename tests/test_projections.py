@@ -6,6 +6,10 @@ rebuild lease (ProjectionRepository.cs:375-442)."""
 
 import datetime
 import decimal
+import logging
+import threading
+import time
+import uuid
 
 import pytest
 
@@ -323,10 +327,9 @@ def test_multi_projection_fanout(world):
 
 
 def test_rebuild_processor_distributed_path(world, spark):
-    """T8 scale mode: the rebuild processor drives the per-stream
-    applyInPandas fold + snapshot write instead of the serial cursor loop,
-    with per-batch progress updates. Result must equal the serial
-    recompute (rebuild == recompute invariant)."""
+    """T8 scale mode: the rebuild processor drives the per-stream fold +
+    the repository's overwrite instead of the serial cursor loop. Result
+    must equal the serial recompute (rebuild == recompute invariant)."""
     store, state, repo, engine, agg_repo = world
     for i in range(4):
         place(
@@ -363,9 +366,7 @@ def test_rebuild_processor_distributed_path(world, spark):
         e.add_projection_builder(V2Builder(new_repo, IndexSelector.ProjectionRebuild))
         return e
 
-    proc = ProjectionsRebuildProcessor(
-        state, engine_factory, store, spark=spark, rebuild_batches=2
-    )
+    proc = ProjectionsRebuildProcessor(state, engine_factory, store, spark=spark)
 
     def serial(*args):  # pragma: no cover - failure path
         raise AssertionError("a SparkSession must select the distributed fold")
@@ -384,6 +385,153 @@ def test_rebuild_processor_distributed_path(world, spark):
     completed = [s for s in st.indexes_statuses if s.rebuild_completed_at]
     assert completed and completed[0].rebuild_events_processed == 4
     assert completed[0].total_events_to_process == 4
+
+
+def pending_rebuild(world, spark, name, builder_cls):
+    """A distributed rebuild processor over the world's store and a state
+    store of its own, where one index, of projection `name`, is pending;
+    `builder_cls` rebuilds it."""
+    store = world[0]
+    state = ProjectionIndexStateStore(InMemoryMetadataRepository())
+    schema = orders_list_schema()
+    schema.schema_name = name
+    repo = InMemoryProjectionRepository(schema, state)
+    repo.ensure_index()
+
+    def engine_factory(index_name):
+        e = ProjectionsEngine(store)
+        e.add_projection_builder(builder_cls(repo, IndexSelector.ProjectionRebuild))
+        return e
+
+    proc = ProjectionsRebuildProcessor(state, engine_factory, store, spark=spark)
+    return proc, schema, repo
+
+
+def heartbeat_threads():
+    return [
+        t for t in threading.enumerate() if t.name == "projection-rebuild-heartbeat"
+    ]
+
+
+def test_a_rebuild_is_one_labelled_fold_job(world, spark):
+    """A one-builder distributed rebuild runs at most 2 Spark jobs, each
+    labelled "projection rebuild: <index>", and the caller's label comes
+    back after."""
+    agg_repo = world[4]
+    ids = [f"00000000-0000-0000-0000-00000000005{i}" for i in range(3)]
+    for i, oid in enumerate(ids):
+        item = OrderItem(utcnow(), "Dixit", decimal.Decimal("6.59"))
+        place(agg_repo, oid, f"J{i}", [item])
+    proc, schema, repo = pending_rebuild(
+        world, spark, "labelled_proj", OrdersListProjectionBuilder
+    )
+    sc = spark.sparkContext
+    group = f"rebuild-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "caller")
+    try:
+        rebuilt = proc.rebuild_one_projection_which_requires_rebuild()
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert rebuilt == schema.index_name()
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    status = sc._jsc.sc().statusStore()
+    assert 1 <= len(jobs) <= 2
+    assert {status.job(j).description().get() for j in jobs} == {
+        f"projection rebuild: {rebuilt}"
+    }
+    assert all(
+        repo.single(oid, ORDERS_PARTITION_KEY)["ItemsCount"] == 1 for oid in ids
+    )
+
+
+def test_a_running_rebuild_keeps_its_lease_and_reports_progress(
+    world, spark, monkeypatch
+):
+    """The heartbeat writes the health check while the fold job runs: past
+    the stale window a second worker still cannot lease the index, and
+    the progress it reports only rises, to the event total."""
+    from cloudfabric_eventsourcing_spark.projections import state as state_mod
+
+    store, _, _, _, agg_repo = world
+    for i in range(2):
+        item = OrderItem(utcnow(), "Dixit", decimal.Decimal("6.59"))
+        place(agg_repo, f"00000000-0000-0000-0000-00000000006{i}", f"S{i}", [item])
+    total = store.get_statistics().total_events_count
+    monkeypatch.setattr(
+        state_mod, "REBUILD_HEALTH_CHECK_STALE", datetime.timedelta(seconds=1)
+    )
+
+    class SlowBuilder(OrdersListProjectionBuilder):
+        def on_OrderPlaced(self, evt):
+            time.sleep(3)  # on the executor: the fold outlasts the window
+            super().on_OrderPlaced(evt)
+
+    proc, schema, _ = pending_rebuild(world, spark, "slow_proj", SlowBuilder)
+    state = proc.state_store
+
+    def status():
+        return state.get(schema.schema_name).indexes_statuses[0]
+
+    done = []
+    worker = threading.Thread(
+        target=lambda: done.append(
+            proc.rebuild_one_projection_which_requires_rebuild()
+        )
+    )
+    worker.start()
+    deadline = time.monotonic() + 30
+    while status().rebuild_started_at is None and time.monotonic() < deadline:
+        time.sleep(0.02)
+    leased_at = time.monotonic()
+    processed, second = [], None
+    while worker.is_alive():
+        processed.append(status().rebuild_events_processed)
+        if second is None and time.monotonic() - leased_at > 1.5:
+            second = state.acquire_and_lock_rebuild()
+            assert worker.is_alive(), "the fold ended before the lease check"
+        time.sleep(0.1)
+    worker.join()
+    assert second == (None, None)
+    assert done == [schema.index_name()]
+    final = status()
+    processed.append(final.rebuild_events_processed)
+    assert processed == sorted(processed) and processed[-1] == total
+    assert final.rebuild_completed_at is not None
+    assert not heartbeat_threads()
+
+
+def test_a_failed_rebuild_stops_its_heartbeat(world, spark, monkeypatch):
+    """A fold that raises ends the rebuild with no heartbeat thread left:
+    the health check stops advancing, so once the stale window has
+    passed another worker takes the lease over."""
+    from cloudfabric_eventsourcing_spark.projections import state as state_mod
+
+    agg_repo = world[4]
+    place(agg_repo, "00000000-0000-0000-0000-000000000070", "F0")
+    monkeypatch.setattr(
+        state_mod, "REBUILD_HEALTH_CHECK_STALE", datetime.timedelta(seconds=1)
+    )
+
+    class FailingBuilder(OrdersListProjectionBuilder):
+        def on_OrderPlaced(self, evt):
+            time.sleep(0.5)  # the heartbeat beats before the failure
+            raise RuntimeError("fold failed")
+
+    proc, schema, _ = pending_rebuild(world, spark, "failing_proj", FailingBuilder)
+    state = proc.state_store
+    with pytest.raises(Exception, match="fold failed"):
+        proc.rebuild_one_projection_which_requires_rebuild()
+    assert not heartbeat_threads()
+    checked = state.get(schema.schema_name).indexes_statuses[0]
+    time.sleep(1.2)
+    later = state.get(schema.schema_name).indexes_statuses[0]
+    assert later.rebuild_health_check_at == checked.rebuild_health_check_at
+    assert later.rebuild_completed_at is None
+    assert state.acquire_and_lock_rebuild()[1] == schema.index_name()
 
 
 def test_threaded_rebuild_waves_drain_pending_rebuilds(tmp_path):
@@ -462,6 +610,72 @@ def test_state_store_rejects_a_repository_without_cas():
 
     with pytest.raises(TypeError, match="compare_and_upsert"):
         ProjectionIndexStateStore(NoCasRepo())
+
+
+class DictMetadataRepo:
+    """A metadata repository with only the public contract."""
+
+    def __init__(self):
+        self.items = {}
+
+    def load_item(self, item_id, partition_key):
+        return self.items.get((item_id, partition_key))
+
+    def upsert_item(self, item_id, partition_key, item):
+        self.items[(item_id, partition_key)] = item
+
+    def compare_and_upsert(self, item_id, partition_key, item, expected):
+        if self.items.get((item_id, partition_key)) != expected:
+            return False
+        self.items[(item_id, partition_key)] = item
+        return True
+
+    def list_ids(self, partition_key):
+        return [i for i, pk in self.items if pk == partition_key]
+
+
+def test_a_repository_with_only_the_public_contract_leases_a_rebuild():
+    """The state store lists projections through `list_ids`, never a
+    repository's private storage, and refuses a repository without it."""
+    state = ProjectionIndexStateStore(DictMetadataRepo())
+    schema = orders_list_schema()
+    state.resolve_index(schema, IndexSelector.ProjectionRebuild)
+    leased, index_name = state.acquire_and_lock_rebuild()
+    assert index_name == schema.index_name()
+    assert leased.projection_name == schema.schema_name
+
+    class NoListRepo(DictMetadataRepo):
+        list_ids = None
+
+    with pytest.raises(TypeError, match="list_ids"):
+        ProjectionIndexStateStore(NoListRepo())
+
+
+def test_taking_over_a_stale_rebuild_lease_logs_one_warning(monkeypatch, caplog):
+    """A first lease is silent; leasing an index whose unfinished rebuild
+    stopped writing its health check logs one WARNING naming the
+    projection, the index and the stale health-check time."""
+    from cloudfabric_eventsourcing_spark.projections import state as state_mod
+
+    state = ProjectionIndexStateStore(InMemoryMetadataRepository())
+    schema = orders_list_schema()
+    state.resolve_index(schema, IndexSelector.ProjectionRebuild)
+    with caplog.at_level(logging.WARNING, logger=state_mod.__name__):
+        _, index_name = state.acquire_and_lock_rebuild()
+        assert index_name == schema.index_name()
+        assert not caplog.records
+        stale_check = state.get(schema.schema_name).indexes_statuses[0]
+        # a negative window makes every health check stale
+        monkeypatch.setattr(
+            state_mod, "REBUILD_HEALTH_CHECK_STALE", datetime.timedelta(seconds=-1)
+        )
+        _, again = state.acquire_and_lock_rebuild()
+    assert again == index_name
+    [record] = caplog.records
+    assert record.levelno == logging.WARNING
+    message = record.getMessage()
+    assert schema.schema_name in message and index_name in message
+    assert str(stale_check.rebuild_health_check_at) in message
 
 
 def test_state_row_with_an_owner_nonce_still_loads():
