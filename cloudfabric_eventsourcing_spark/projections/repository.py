@@ -513,7 +513,7 @@ class ParquetProjectionRepository(ProjectionRepository):
                     for name, expr in updates.items()
                 }
             )
-            self._overwrite(index_name, updated, base)
+            self._rewrite_df(index_name, updated, base)
 
     def merge_from_df(
         self,
@@ -537,21 +537,18 @@ class ParquetProjectionRepository(ProjectionRepository):
         snapshot is resolved, so a publish by another instance can only
         race the anti-join and the write. The changed keys are not made
         distinct: a `left_anti` join does not need unique build keys, and
-        the fold emits one row per (key, PartitionKey). The observer does
-        make its batch's (stream, partition) pairs distinct before the
-        fold, because a batch after a compaction re-delivers the whole
-        store and the fold's semi-join broadcast should be sized by
-        streams, not by events.
+        the fold emits one row per (key, PartitionKey).
 
         Shape at scale: the changed-key set is bounded by the streams a
         micro-batch touched, so it is broadcast to anti-join the big
-        current snapshot (no shuffle of the snapshot); on Delta the same
-        call maps to MERGE INTO which rewrites only matched files instead
-        of the full snapshot. The snapshot is read with `docs_df`'s own
-        session, so a repository built without one works as a sink. When
-        another repository instance on the same base_path published since
-        this MERGE read its snapshot, it raises
-        `commit.SnapshotConflictError` and publishes nothing."""
+        current snapshot (no shuffle of the snapshot), and `_rewrite_df`
+        writes a small projection as one file. On Delta the same call maps
+        to MERGE INTO, which rewrites only the matched files instead of the
+        full snapshot. The snapshot is read with `docs_df`'s own session,
+        so a repository built without one works as a sink. When another
+        repository instance on the same base_path published since this
+        MERGE read its snapshot, it raises `commit.SnapshotConflictError`
+        and publishes nothing."""
         from pyspark.sql import functions as F
 
         index_name, schema = self._resolve(selector)
@@ -575,7 +572,7 @@ class ParquetProjectionRepository(ProjectionRepository):
             if tombstone_col is not None:
                 ups = ups.where(~F.col(tombstone_col)).drop(tombstone_col)
             merged = kept.unionByName(ups.select(*current.columns))
-            self._overwrite(index_name, merged, base)
+            self._rewrite_df(index_name, merged, base)
 
     def overwrite_from_df(self, df, selector: str = IndexSelector.ProjectionRebuild):
         """Distributed rebuild sink: the Spark job writes the new snapshot
@@ -586,6 +583,18 @@ class ParquetProjectionRepository(ProjectionRepository):
         single-cursor loop')."""
         index_name, _ = self._resolve(selector)
         self._overwrite(index_name, df, commit.LATEST)
+
+    def _rewrite_df(self, index_name: str, df, base) -> None:
+        """Publish `df`, a rewrite of the snapshot at `base`, in one file per
+        `spark.sql.files.maxPartitionBytes` of Catalyst's size estimate, not
+        one per input file or checkpoint partition. An unknown estimate
+        (`defaultSizeInBytes`) keeps the plan's partitioning. The rebuild
+        does not come here: the coalesce would narrow its fold stage."""
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        if size < conf.defaultSizeInBytes():
+            df = df.coalesce(max(1, -(-size // conf.filesMaxPartitionBytes())))
+        self._overwrite(index_name, df, base)
 
     def _overwrite(self, index_name: str, df, base) -> None:
         from pyspark.sql import functions as F

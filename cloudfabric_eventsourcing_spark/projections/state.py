@@ -206,9 +206,9 @@ class ProjectionIndexStateStore:
         threshold = _utcnow() - REBUILD_HEALTH_CHECK_STALE
 
         def eligible(s: IndexStateForSchemaVersion) -> bool:
-            return s.rebuild_started_at is None or (
-                s.rebuild_completed_at is None
-                and (s.rebuild_health_check_at or datetime.datetime.min) < threshold
+            return s.rebuild_completed_at is None and (
+                s.rebuild_started_at is None
+                or (s.rebuild_health_check_at or datetime.datetime.min) < threshold
             )
 
         for name in self.list_names():

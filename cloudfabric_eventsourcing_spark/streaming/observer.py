@@ -86,16 +86,19 @@ class SparkStreamingProjectionsObserver:
     def _apply_batch_distributed(self, batch_df, epoch_id: int) -> None:
         """Scale path: re-fold only the streams touched by this batch,
         executor-side, and MERGE the resulting documents (+ tombstones).
-        Each builder's jobs show in the Spark UI as "projection batch
-        <epoch_id>: <index>"."""
+        The batch's keys reach the semi-join as they are, so Spark plans
+        it: a small batch is broadcast, and a whole-store redelivery after
+        a compaction is a shuffle join already partitioned as the fold's
+        groupBy needs. Each builder's jobs show in the Spark UI as
+        "projection batch <epoch_id>: <index>"."""
         from cloudfabric_eventsourcing_spark.projections.distributed import (
             TOMBSTONE_COL,
             fold_builder_documents,
         )
 
-        affected = batch_df.select("stream_id", "partition_key").distinct()
+        keys = ["stream_id", "partition_key"]
         scoped = self.event_store.to_df(self.spark).join(
-            F.broadcast(affected), ["stream_id", "partition_key"], "left_semi"
+            batch_df.select(*keys), keys, "left_semi"
         )
         for builder in self.engine._builders:
             repo = builder.repository

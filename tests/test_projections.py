@@ -347,6 +347,8 @@ def test_rebuild_processor_distributed_path(world, spark):
         PropertySchema("TotalPrice", DECIMAL, is_filterable=True)
     )
     new_repo = InMemoryProjectionRepository(new_schema, state)
+    # register the evolved schema's index: its rebuild is now pending
+    new_repo.ensure_index()
 
     class V2Builder(OrdersListProjectionBuilder):
         def on_OrderPlaced(self, evt):
@@ -382,9 +384,12 @@ def test_rebuild_processor_distributed_path(world, spark):
     assert res.records[0].document["TotalPrice"] == decimal.Decimal("11.44")
     assert res.records[0].document["ItemsCount"] == 2
     st = state.get(new_schema.schema_name)
-    completed = [s for s in st.indexes_statuses if s.rebuild_completed_at]
-    assert completed and completed[0].rebuild_events_processed == 4
-    assert completed[0].total_events_to_process == 4
+    [status] = [
+        s for s in st.indexes_statuses if s.index_name == new_schema.index_name()
+    ]
+    assert status.rebuild_completed_at is not None
+    assert status.rebuild_events_processed == 4
+    assert status.total_events_to_process == 4
 
 
 def pending_rebuild(world, spark, name, builder_cls):
@@ -676,6 +681,33 @@ def test_taking_over_a_stale_rebuild_lease_logs_one_warning(monkeypatch, caplog)
     message = record.getMessage()
     assert schema.schema_name in message and index_name in message
     assert str(stale_check.rebuild_health_check_at) in message
+
+
+def test_a_completed_index_is_never_leased_for_a_rebuild():
+    """An index marked complete without ever being leased (how a fresh
+    projection is bootstrapped) is not pending: next to it, the pending
+    index of a new schema version is leased, and alone it leases nothing."""
+
+    def completed_state():
+        state = ProjectionIndexStateStore(InMemoryMetadataRepository())
+        schema = orders_list_schema()
+        state.resolve_index(schema, IndexSelector.ProjectionRebuild)
+        state.update_rebuild_progress(
+            schema.schema_name, schema.index_name(), 0, completed=True
+        )
+        return state, schema
+
+    state, schema = completed_state()
+    evolved = orders_list_schema()
+    evolved.properties.append(PropertySchema("TotalPrice", DECIMAL))
+    state.resolve_index(evolved, IndexSelector.ProjectionRebuild)
+    assert evolved.index_name() != schema.index_name()
+    leased, index_name = state.acquire_and_lock_rebuild()
+    assert index_name == evolved.index_name()
+    assert leased.projection_name == schema.schema_name
+
+    alone, _ = completed_state()
+    assert alone.acquire_and_lock_rebuild() == (None, None)
 
 
 def test_state_row_with_an_owner_nonce_still_loads():

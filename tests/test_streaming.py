@@ -3,11 +3,15 @@ distributed-fold rebuild path."""
 
 import collections
 import decimal
+import json
+import os
 import uuid
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
+from cloudfabric_eventsourcing_spark import commit
 from cloudfabric_eventsourcing_spark.domain import AggregateRepository
 from cloudfabric_eventsourcing_spark.eventstore import (
     InMemoryMetadataRepository,
@@ -19,6 +23,9 @@ from cloudfabric_eventsourcing_spark.projections import (
     ParquetProjectionRepository,
     ProjectionsEngine,
     ProjectionIndexStateStore,
+)
+from cloudfabric_eventsourcing_spark.projections.distributed import (
+    fold_builder_documents,
 )
 from cloudfabric_eventsourcing_spark.queries import Filter, ProjectionQuery
 from cloudfabric_eventsourcing_spark.streaming import SparkStreamingProjectionsObserver
@@ -452,6 +459,127 @@ def test_batch_jobs_carry_the_projection_batch_description(spark, tmp_path, worl
     }
     assert all(
         repo.single(o.id, ORDERS_PARTITION_KEY)["ItemsCount"] == 2 for o in orders
+    )
+
+
+def rebuilt_documents(spark, store, tmp_path, ids):
+    """The documents of a full rebuild of the store, by id."""
+    schema = orders_list_schema()
+    state = ProjectionIndexStateStore(InMemoryMetadataRepository())
+    repo = ParquetProjectionRepository(schema, state, str(tmp_path / "rebuilt"), spark)
+    builder = OrdersListProjectionBuilder(repo, IndexSelector.ProjectionRebuild)
+    repo.overwrite_from_df(fold_builder_documents(store.to_df(spark), builder))
+    return {i: repo.single(i, ORDERS_PARTITION_KEY) for i in ids}
+
+
+def test_a_first_drain_into_an_empty_projection_writes_every_document(
+    spark, tmp_path, world
+):
+    """The first MERGE into an empty projection has a plan Catalyst cannot
+    size; it keeps the plan's partitioning and writes every document."""
+    store, _, repo, agg_repo = world
+    ids = [o.id for o in seed_orders(agg_repo, 3)]
+    engine = ProjectionsEngine(store)
+    engine.add_projection_builder(OrdersListProjectionBuilder(repo, IndexSelector.Write))
+    SparkStreamingProjectionsObserver(
+        spark, store, engine, str(tmp_path / "ckpt_first")
+    ).process_all()
+    assert repo.to_df().count() == 3
+    assert {i: repo.single(i, ORDERS_PARTITION_KEY) for i in ids} == (
+        rebuilt_documents(spark, store, tmp_path, ids)
+    )
+
+
+def test_a_one_event_batch_writes_one_file_in_five_labelled_jobs(
+    spark, tmp_path, world
+):
+    """After the first drain, each one-event micro-batch runs at most 5
+    Spark jobs, every one labelled "projection batch <epoch>: <index>",
+    and leaves the projection in one snapshot file: the MERGE writes as
+    many files as the projection's estimated size needs, not one per
+    partition of the snapshot it read."""
+    store, _, repo, agg_repo = world
+    orders = seed_orders(agg_repo, 3)
+    engine = ProjectionsEngine(store)
+    engine.add_projection_builder(OrdersListProjectionBuilder(repo, IndexSelector.Write))
+    observer = SparkStreamingProjectionsObserver(
+        spark, store, engine, str(tmp_path / "ckpt_shape")
+    )
+    query = observer.start(processing_time="100 milliseconds")
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+    try:
+        query.processAllAvailable()
+        for i in range(3):
+            loaded = agg_repo.load(orders[i].id, ORDERS_PARTITION_KEY)
+            loaded.add_item(OrderItem(utcnow(), f"One-{i}", decimal.Decimal("2.00")))
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            # micro-batch jobs run in the job group of the query's run
+            before = set(sc.statusTracker().getJobIdsForGroup(str(query.runId)))
+            agg_repo.save(USER, loaded)
+            query.processAllAvailable()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = set(sc.statusTracker().getJobIdsForGroup(str(query.runId)))
+            epoch = query.lastProgress["batchId"]
+            assert 1 <= len(jobs - before) <= 5
+            assert {status.job(j).description().get() for j in jobs - before} == {
+                f"projection batch {epoch}: {repo.schema.index_name()}"
+            }
+    finally:
+        observer.stop()
+    latest = commit.latest(repo._dir(repo.schema.index_name()))
+    assert len([f for f in os.listdir(latest) if f.endswith(".parquet")]) == 1
+    assert [
+        repo.single(o.id, ORDERS_PARTITION_KEY)["ItemsCount"] for o in orders
+    ] == [3, 3, 3]
+
+
+def test_a_restart_after_compaction_unlinked_a_logged_fragment_converges(
+    spark, tmp_path, world
+):
+    """A batch fails after its offsets are logged, and a compaction then
+    unlinks the fragment that batch listed. The restarted query skips the
+    missing file, and the compaction snapshot re-delivers the event, so
+    the projection ends equal to a full rebuild."""
+    store, _, repo, agg_repo = world
+    orders = seed_orders(agg_repo, 2)
+    ids = [o.id for o in orders]
+    checkpoint = str(tmp_path / "ckpt_race")
+
+    def observer():
+        engine = ProjectionsEngine(store)
+        engine.add_projection_builder(
+            OrdersListProjectionBuilder(repo, IndexSelector.Write)
+        )
+        return SparkStreamingProjectionsObserver(spark, store, engine, checkpoint)
+
+    observer().process_all()
+    loaded = agg_repo.load(orders[0].id, ORDERS_PARTITION_KEY)
+    loaded.remove_item("Dixit")
+    agg_repo.save(USER, loaded)
+
+    epochs = []
+
+    def fail(batch_df, epoch_id):
+        epochs.append(epoch_id)
+        raise RuntimeError("batch failed after its offsets were logged")
+
+    failing = observer()
+    failing._foreach_batch = fail
+    with pytest.raises(Exception, match="offsets were logged"):
+        failing.process_all()
+    # the file source's log of the failed batch: a version line, then
+    # one JSON entry per file the batch listed
+    with open(os.path.join(checkpoint, "sources", "0", str(epochs[0]))) as fh:
+        listed = [json.loads(line)["path"] for line in fh.read().splitlines()[1:]]
+    assert listed and all(os.path.exists(urlparse(p).path) for p in listed)
+    store.compact()
+    assert not any(os.path.exists(urlparse(p).path) for p in listed)
+
+    observer().process_all()
+    assert repo.single(orders[0].id, ORDERS_PARTITION_KEY)["ItemsCount"] == 1
+    assert {i: repo.single(i, ORDERS_PARTITION_KEY) for i in ids} == (
+        rebuilt_documents(spark, store, tmp_path, ids)
     )
 
 
