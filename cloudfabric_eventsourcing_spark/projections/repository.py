@@ -46,7 +46,7 @@ from cloudfabric_eventsourcing_spark.queries.projection_query import (
     ProjectionQueryResult,
     QueryResultDocument,
 )
-from cloudfabric_eventsourcing_spark.session import job_description
+from cloudfabric_eventsourcing_spark.session import estimated_bytes, job_description
 from cloudfabric_eventsourcing_spark.schema import (
     ARRAY,
     BOOLEAN,
@@ -513,7 +513,7 @@ class ParquetProjectionRepository(ProjectionRepository):
                     for name, expr in updates.items()
                 }
             )
-            self._rewrite_df(index_name, updated, base)
+            self._rewrite_df(index_name, updated, base, df)
 
     def merge_from_df(
         self,
@@ -537,18 +537,19 @@ class ParquetProjectionRepository(ProjectionRepository):
         snapshot is resolved, so a publish by another instance can only
         race the anti-join and the write. The changed keys are not made
         distinct: a `left_anti` join does not need unique build keys, and
-        the fold emits one row per (key, PartitionKey).
+        the fold emits one row per (key, PartitionKey). The observer makes
+        its batch's (stream, partition) pairs distinct only when the batch
+        is too big to broadcast as it is, as after a compaction.
 
         Shape at scale: the changed-key set is bounded by the streams a
         micro-batch touched, so it is broadcast to anti-join the big
-        current snapshot (no shuffle of the snapshot), and `_rewrite_df`
-        writes a small projection as one file. On Delta the same call maps
-        to MERGE INTO, which rewrites only the matched files instead of the
-        full snapshot. The snapshot is read with `docs_df`'s own session,
-        so a repository built without one works as a sink. When another
-        repository instance on the same base_path published since this
-        MERGE read its snapshot, it raises `commit.SnapshotConflictError`
-        and publishes nothing."""
+        current snapshot (no shuffle of the snapshot); on Delta the same
+        call maps to MERGE INTO which rewrites only matched files instead
+        of the full snapshot. The snapshot is read with `docs_df`'s own
+        session, so a repository built without one works as a sink. When
+        another repository instance on the same base_path published since
+        this MERGE read its snapshot, it raises
+        `commit.SnapshotConflictError` and publishes nothing."""
         from pyspark.sql import functions as F
 
         index_name, schema = self._resolve(selector)
@@ -572,7 +573,9 @@ class ParquetProjectionRepository(ProjectionRepository):
             if tombstone_col is not None:
                 ups = ups.where(~F.col(tombstone_col)).drop(tombstone_col)
             merged = kept.unionByName(ups.select(*current.columns))
-            self._rewrite_df(index_name, merged, base)
+            self._rewrite_df(
+                index_name, merged, base, current, docs.rdd.getNumPartitions()
+            )
 
     def overwrite_from_df(self, df, selector: str = IndexSelector.ProjectionRebuild):
         """Distributed rebuild sink: the Spark job writes the new snapshot
@@ -584,16 +587,18 @@ class ParquetProjectionRepository(ProjectionRepository):
         index_name, _ = self._resolve(selector)
         self._overwrite(index_name, df, commit.LATEST)
 
-    def _rewrite_df(self, index_name: str, df, base) -> None:
-        """Publish `df`, a rewrite of the snapshot at `base`, in one file per
-        `spark.sql.files.maxPartitionBytes` of Catalyst's size estimate, not
-        one per input file or checkpoint partition. An unknown estimate
-        (`defaultSizeInBytes`) keeps the plan's partitioning. The rebuild
-        does not come here: the coalesce would narrow its fold stage."""
+    def _rewrite_df(self, index_name: str, df, base, snapshot, min_files=1) -> None:
+        """Publish `df`, a rewrite of the `snapshot` read at `base`, in one
+        file per `spark.sql.files.maxPartitionBytes` of that snapshot's
+        scan (a fold's checkpoint keeps the whole store's estimate) but no
+        fewer than `min_files`, the MERGE's document partitions. An empty
+        projection, of unknown size, keeps `df`'s partitioning. Not for the
+        rebuild: the coalesce would narrow its fold stage."""
         conf = df.sparkSession._jsparkSession.sessionState().conf()
-        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        size = estimated_bytes(snapshot)
         if size < conf.defaultSizeInBytes():
-            df = df.coalesce(max(1, -(-size // conf.filesMaxPartitionBytes())))
+            n = -(-size // conf.filesMaxPartitionBytes())
+            df = df.coalesce(max(min_files, n))
         self._overwrite(index_name, df, base)
 
     def _overwrite(self, index_name: str, df, base) -> None:

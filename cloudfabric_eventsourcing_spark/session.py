@@ -62,6 +62,11 @@ def job_description(spark: SparkSession, text: str):
         sc.setJobDescription(previous)
 
 
+def estimated_bytes(df) -> int:
+    """Catalyst's size estimate of `df`'s plan, read without a job."""
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
 def cluster_conf(
     target_partition_mb: int = 128,
     executors: int = 1000,

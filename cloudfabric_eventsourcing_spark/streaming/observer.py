@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from cloudfabric_eventsourcing_spark.eventstore.event import EventRecord
 from cloudfabric_eventsourcing_spark.eventstore.store import ParquetEventStore
 from cloudfabric_eventsourcing_spark.projections.engine import ProjectionsEngine
-from cloudfabric_eventsourcing_spark.session import job_description
+from cloudfabric_eventsourcing_spark.session import estimated_bytes, job_description
 
 
 class SparkStreamingProjectionsObserver:
@@ -86,20 +86,14 @@ class SparkStreamingProjectionsObserver:
     def _apply_batch_distributed(self, batch_df, epoch_id: int) -> None:
         """Scale path: re-fold only the streams touched by this batch,
         executor-side, and MERGE the resulting documents (+ tombstones).
-        The batch's keys reach the semi-join as they are, so Spark plans
-        it: a small batch is broadcast, and a whole-store redelivery after
-        a compaction is a shuffle join already partitioned as the fold's
-        groupBy needs. Each builder's jobs show in the Spark UI as
-        "projection batch <epoch_id>: <index>"."""
+        Each builder's jobs show in the Spark UI as "projection batch
+        <epoch_id>: <index>"."""
         from cloudfabric_eventsourcing_spark.projections.distributed import (
             TOMBSTONE_COL,
             fold_builder_documents,
         )
 
-        keys = ["stream_id", "partition_key"]
-        scoped = self.event_store.to_df(self.spark).join(
-            batch_df.select(*keys), keys, "left_semi"
-        )
+        scoped = touched_streams(self.event_store.to_df(self.spark), batch_df)
         for builder in self.engine._builders:
             repo = builder.repository
             index_name = repo.ensure_index(builder.index_selector)
@@ -159,3 +153,16 @@ class SparkStreamingProjectionsObserver:
         if self._query is not None:
             self._query.stop()
             self._query = None
+
+
+def touched_streams(events_df, batch_df):
+    """The rows of `events_df` in the streams `batch_df` touched. A batch
+    whose keys fit `spark.sql.autoBroadcastJoinThreshold` is broadcast as
+    it is, in one job; a larger one (a large store re-delivered after a
+    compaction) or one of unknown size is broadcast as distinct streams."""
+    keys = ["stream_id", "partition_key"]
+    touched = batch_df.select(*keys)
+    conf = batch_df.sparkSession._jsparkSession.sessionState().conf()
+    if estimated_bytes(touched) > conf.autoBroadcastJoinThreshold():
+        touched = touched.distinct()
+    return events_df.join(F.broadcast(touched), keys, "left_semi")

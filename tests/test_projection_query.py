@@ -323,6 +323,25 @@ def _merge(repo, doc):
     repo.merge_from_df(repo.spark.createDataFrame([doc], struct))
 
 
+
+def test_a_merge_of_local_documents_applies_its_tombstones(spark, tmp_path):
+    """A `createDataFrame` frame, whose size Catalyst does not know, with a
+    tombstone column MERGEs into a four-file snapshot: one document
+    changed, one deleted, one added, every other one kept."""
+    repo = _spark_repo(spark, tmp_path)
+    struct = SCHEMA.to_struct_type().add("Deleted", "boolean")
+    rows = [
+        dict(DOCS[1], Name="renamed", Deleted=False),
+        dict(DOCS[2], Deleted=True),
+        dict(_doc(99), Deleted=False),
+    ]
+    repo.merge_from_df(spark.createDataFrame(rows, struct), tombstone_col="Deleted")
+    names = {r["Id"]: r["Name"] for r in repo.to_df().collect()}
+    assert len(names) == len(DOCS)
+    assert "d002" not in names
+    assert (names["d001"], names["d099"]) == ("renamed", _doc(99)["Name"])
+
+
 def test_every_write_path_returns_the_same_raw_document(spark, tmp_path):
     """single() returns one raw document whichever path wrote it: a Spark
     MERGE (timestamps nested in a struct and in an array of structs

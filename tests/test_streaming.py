@@ -2,6 +2,7 @@
 distributed-fold rebuild path."""
 
 import collections
+import contextlib
 import decimal
 import json
 import os
@@ -28,7 +29,9 @@ from cloudfabric_eventsourcing_spark.projections.distributed import (
     fold_builder_documents,
 )
 from cloudfabric_eventsourcing_spark.queries import Filter, ProjectionQuery
+from cloudfabric_eventsourcing_spark.session import estimated_bytes
 from cloudfabric_eventsourcing_spark.streaming import SparkStreamingProjectionsObserver
+from cloudfabric_eventsourcing_spark.streaming.observer import touched_streams
 from tests.domain_fixtures import (
     ORDERS_PARTITION_KEY,
     Order,
@@ -577,6 +580,95 @@ def test_a_restart_after_compaction_unlinked_a_logged_fragment_converges(
     assert not any(os.path.exists(urlparse(p).path) for p in listed)
 
     observer().process_all()
+    assert repo.single(orders[0].id, ORDERS_PARTITION_KEY)["ItemsCount"] == 1
+    assert {i: repo.single(i, ORDERS_PARTITION_KEY) for i in ids} == (
+        rebuilt_documents(spark, store, tmp_path, ids)
+    )
+
+
+
+@contextlib.contextmanager
+def sql_setting(spark, key, value):
+    """`key` set to `value` for the block; streaming queries started in
+    it take the setting with them."""
+    previous = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if previous is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, previous)
+
+
+def data_files(repo):
+    latest = commit.latest(repo._dir(repo.schema.index_name()))
+    return [os.path.join(latest, f) for f in os.listdir(latest) if f.endswith(".parquet")]
+
+
+def test_a_merge_is_sized_by_its_snapshot_not_by_the_store(spark, tmp_path, world):
+    """With `spark.sql.files.maxPartitionBytes` above the projection's
+    bytes but below the store's, each one-event MERGE still leaves the
+    projection in one file: a fold's checkpoint keeps the estimate of the
+    whole store it read, and the write is sized by the snapshot instead."""
+    store, _, repo, agg_repo = world
+    orders = seed_orders(agg_repo, 3)
+    engine = ProjectionsEngine(store)
+    engine.add_projection_builder(OrdersListProjectionBuilder(repo, IndexSelector.Write))
+    observer = SparkStreamingProjectionsObserver(
+        spark, store, engine, str(tmp_path / "ckpt_sized")
+    )
+    observer.process_all()
+    target = 2 * sum(os.path.getsize(f) for f in data_files(repo))
+    assert estimated_bytes(store.to_df(spark)) > target
+    with sql_setting(spark, "spark.sql.files.maxPartitionBytes", str(target)):
+        for i, order in enumerate(orders):
+            loaded = agg_repo.load(order.id, ORDERS_PARTITION_KEY)
+            loaded.add_item(OrderItem(utcnow(), f"One-{i}", decimal.Decimal("2.00")))
+            agg_repo.save(USER, loaded)
+            observer.process_all()
+            assert len(data_files(repo)) == 1
+    assert [
+        repo.single(o.id, ORDERS_PARTITION_KEY)["ItemsCount"] for o in orders
+    ] == [3, 3, 3]
+
+
+def test_a_batch_too_big_to_broadcast_selects_its_distinct_streams(
+    spark, tmp_path, world
+):
+    """A batch within `spark.sql.autoBroadcastJoinThreshold` is broadcast
+    as it is; a larger one is made distinct first, so the broadcast holds
+    one row per stream. The observer drains, and re-drains after a
+    compaction, through the distinct path to a full rebuild's documents."""
+    store, _, repo, agg_repo = world
+    orders = seed_orders(agg_repo, 3)
+    ids = [o.id for o in orders]
+    events = store.to_df(spark)
+
+    def selection():
+        scoped = touched_streams(events, events)
+        plan = scoped._jdf.queryExecution().optimizedPlan().toString()
+        return "Aggregate" in plan, sorted(r["id"] for r in scoped.collect())
+
+    keys = estimated_bytes(events.select("stream_id", "partition_key"))
+    every_event = sorted(r["id"] for r in events.collect())
+    assert selection() == (False, every_event)
+    with sql_setting(spark, "spark.sql.autoBroadcastJoinThreshold", str(keys - 1)):
+        assert selection() == (True, every_event)
+
+    engine = ProjectionsEngine(store)
+    engine.add_projection_builder(OrdersListProjectionBuilder(repo, IndexSelector.Write))
+    observer = SparkStreamingProjectionsObserver(
+        spark, store, engine, str(tmp_path / "ckpt_distinct")
+    )
+    with sql_setting(spark, "spark.sql.autoBroadcastJoinThreshold", "1"):
+        observer.process_all()
+        store.compact()
+        loaded = agg_repo.load(orders[0].id, ORDERS_PARTITION_KEY)
+        loaded.remove_item("Dixit")
+        agg_repo.save(USER, loaded)
+        observer.process_all()
     assert repo.single(orders[0].id, ORDERS_PARTITION_KEY)["ItemsCount"] == 1
     assert {i: repo.single(i, ORDERS_PARTITION_KEY) for i in ids} == (
         rebuilt_documents(spark, store, tmp_path, ids)
