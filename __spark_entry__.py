@@ -1425,10 +1425,11 @@ def p16_winnowing_overlap(spark, sf_dir):
     # Winnowing (MOSS) positional-overlap pairs — the partial-copy /
     # quotation detector the whole-document fingerprint family can't
     # be: any shared token run of >= window+k-1 = 6 tokens guarantees a
-    # shared fingerprint.  Scale shape: per-row Column exprs (linear
-    # zip-of-shifted-slices), then the inverted-index self-join — same
-    # bucket-local shape as LSH, with max_postings as the skew valve in
-    # production (not set here so the oracle matches exactly).
+    # shared fingerprint.  Scale shape: a map-only mapInArrow kernel
+    # (C MD5 over the token k-grams, sliced window minima), then the
+    # inverted-index self-join — same bucket-local shape as LSH, with
+    # max_postings as the skew valve in production (not set here so the
+    # oracle matches exactly).
     return _text.winnowing_overlap_pairs(
         load_table(spark, sf_dir, "documents"),
         k=3,

@@ -350,7 +350,7 @@ class ParquetEventStore(EventStore):
 
     def load_events(self, partition_key=None, date_from=None, limit=250):
         expr = None
-        if partition_key:
+        if partition_key is not None:
             expr = pc.field("partition_key") == partition_key
         if date_from is not None:
             date_expr = pc.field("created_at") > pa.scalar(

@@ -190,7 +190,6 @@ def dsir_log_weights(
     alpha: float = 1.0,
     bucket_hex: int = 3,
     bigrams: bool = True,
-    use_arrow: bool = False,
     cache_features: bool = False,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
@@ -222,7 +221,11 @@ def dsir_log_weights(
     a count into 4096 cells).  The per-doc scoring pass joins each
     exploded gram to the B-row weight table, which is broadcast — the
     corpus itself is never shuffled; the only wide exchange is the
-    final per-doc sum keyed by id.  Empty documents weigh 0."""
+    final per-doc sum keyed by id.  That join is the only scoring form:
+    an Arrow kernel over a collected weight table ran at 0.82x its
+    speed at sf10.  `cache_features=True` makes the raw fit and the
+    scoring join read one persisted tokenize+md5 pass (same output).
+    Empty documents weigh 0."""
     buckets = _hashed_gram_buckets(text_col, bucket_hex, bigrams)
     n_buckets = 16 ** bucket_hex
 
@@ -243,13 +246,10 @@ def dsir_log_weights(
         # scoring join (persisted MEMORY_AND_DISK; ContextCleaner
         # reclaims on GC).  Same results bit-for-bit — the fit's
         # explode() equals the outer-explode rows minus the null-b
-        # rows empty documents contribute.  (With use_arrow the
-        # scoring path never reads per_gram, so the persist would pin
-        # a single-use table — skipped.)
-        if not use_arrow:
-            from pyspark import StorageLevel
+        # rows empty documents contribute.
+        from pyspark import StorageLevel
 
-            per_gram = per_gram.persist(StorageLevel.MEMORY_AND_DISK)
+        per_gram = per_gram.persist(StorageLevel.MEMORY_AND_DISK)
         rc = (
             per_gram.where(F.col("b").isNotNull())
             .groupBy("b")
@@ -289,76 +289,6 @@ def dsir_log_weights(
             .alias("lw_micro"),
         )
     )
-    if use_arrow:
-        # t09-lesson scoring path (r12 verdict Next #4): the per-doc
-        # sum is map-only once the <= B-row micro-weight table is in
-        # hand — collect it (bounded meta-read, B = 16^bucket_hex <=
-        # 4096 rows at the default, the PQ-codebook pattern) and fold
-        # each document's gram weights in an Arrow kernel.  No gram row
-        # is exploded, joined, or shuffled; the corpus crosses the
-        # Arrow boundary once as (id, bucket-array).  Integer
-        # micro-unit sums keep the exact-lattice contract: np.bincount
-        # accumulates the int64 weights in float64, exact while every
-        # per-doc partial sum stays under 2^53 — |lw_micro| < ~25e6,
-        # so a document would need ~4e8 grams (a multi-GB text) to
-        # risk the bound.
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as _T
-
-        wmap = {r["b"]: int(r["lw_micro"]) for r in lw.collect()}
-        id_field = raw.schema[id_col]
-        out_schema = _T.StructType(
-            [
-                _T.StructField(id_col, id_field.dataType, id_field.nullable),
-                _T.StructField("n_grams", _T.LongType(), False),
-                _T.StructField("log_weight", _T.DoubleType(), True),
-            ]
-        )
-
-        def _score_batches(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                bl = pdf["__b"]
-                lens = np.fromiter(
-                    (0 if b is None else len(b) for b in bl),
-                    dtype=np.int64,
-                    count=n,
-                )
-                tot = np.zeros(n, dtype=np.int64)
-                if lens.sum():
-                    flat = np.concatenate(
-                        [
-                            np.asarray(b, dtype=object)
-                            for b in bl
-                            if b is not None and len(b)
-                        ]
-                    )
-                    codes, uniq = pd.factorize(flat)
-                    w = np.fromiter(
-                        (wmap.get(u, 0) for u in uniq),
-                        dtype=np.int64,
-                        count=len(uniq),
-                    )
-                    doc_idx = np.repeat(np.arange(n), lens)
-                    tot = np.bincount(
-                        doc_idx, weights=w[codes], minlength=n
-                    ).astype(np.int64)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "n_grams": lens,
-                        # same final op as the Column path: one IEEE
-                        # double division of the exact integer sum
-                        "log_weight": tot.astype(np.float64) / 1e6,
-                    }
-                )
-
-        return raw.select(
-            F.col(id_col), buckets.alias("__b")
-        ).mapInPandas(_score_batches, out_schema)
     return (
         per_gram.join(F.broadcast(lw), "b", "left")
         .groupBy("id")

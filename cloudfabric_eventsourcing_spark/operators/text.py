@@ -320,15 +320,17 @@ def with_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
 def _winnowing_md5_arrow(
     df: DataFrame, k: int, window: int, text_col: str, id_col: str
 ) -> DataFrame:
-    """mapInArrow winnowing kernel, bit-equal with the md5 expression
-    path: same ASCII-\\s tokenization, same `tok k-gram joined by ' '`
-    gram strings, standard MD5 hex, lexicographic window minima,
-    first-occurrence distinct.  One batch crosses the boundary as two
-    Arrow columns (id + text) and comes back as id + the fingerprint
-    array; hashlib's C MD5 plus a NumPy sliding-window minimum replace
-    the interpreted transform/arrays_zip HOF chain (guide §4.2), which
-    dominates the expression path's wall (r11 p16 study: 22-32 s per
-    evaluation at sf10)."""
+    """mapInArrow winnowing kernel, the one implementation of
+    `hash="md5"`: tokens split on the ASCII `\\s` class as the JVM's
+    F.split(text, r"\\s+") does, `tok k-gram joined by ' '` gram
+    strings, standard MD5 hex, lexicographic window minima,
+    first-occurrence distinct — the gram strings and selections
+    DuckDB's md5 reproduces, which is what the p16 oracle checks.  One
+    batch crosses the boundary as two Arrow columns (id + text) and
+    comes back as id + the fingerprint array; hashlib's C MD5 and
+    sliced minima avoid the interpreted transform/arrays_zip HOF chain
+    that md5 grams need as Column expressions (r11 p16 study: 22-32 s
+    per evaluation at sf10)."""
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
     out_schema = StructType(
@@ -391,7 +393,6 @@ def winnowing_fingerprints(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash: str = "xxh64",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken 2003,
     the MOSS algorithm): hash every token k-gram, slide a width-`window`
@@ -405,50 +406,29 @@ def winnowing_fingerprints(
     bit-identical across engines (Spark and DuckDB both implement
     standard MD5 over the same gram strings), making fingerprint
     selection — and therefore overlap pairs — exactly reproducible
-    outside Spark; the p16 oracle row runs on it.
+    outside Spark; the p16 oracle row runs on it.  md5 always runs on
+    the mapInArrow kernel (_winnowing_md5_arrow: C MD5, no interpreted
+    HOF lambda); xxh64 always runs as Column expressions (no bit-equal
+    Python xxhash64 is guaranteed available).
 
-    `use_arrow` (default None = auto: Arrow for md5) picks the
-    implementation of the md5 path: the mapInArrow kernel
-    (_winnowing_md5_arrow, bit-equal by construction and pinned by
-    tests) or the pure-expression chain.  The expression md5 path runs
-    interpreted (non-codegen HOF lambda over arrays_zip structs) and is
-    the wall of the p16 bench row; the kernel hashes with C MD5 and
-    takes the window minima vectorized.  xxh64 always uses the
-    expression path (no bit-equal Python xxhash64 is guaranteed
-    available).
-
-    Plan shape: both the gram hashing and the window minimum use the
-    t06 linear zip-of-shifted-slices form (never transform(sequence)
-    whose nested re-evaluation goes quadratic); everything is per-row
-    Column expressions — no shuffle, no UDF, embarrassingly parallel.
-    Documents shorter than k tokens yield an empty fingerprint set;
-    with fewer than `window` grams the single minimum is kept (the
-    standard short-document degeneration)."""
+    Plan shape of the xxh64 path: both the gram hashing and the window
+    minimum use the t06 linear zip-of-shifted-slices form (never
+    transform(sequence) whose nested re-evaluation goes quadratic);
+    everything is per-row Column expressions — no shuffle, no UDF,
+    embarrassingly parallel.  Documents shorter than k tokens yield an
+    empty fingerprint set; with fewer than `window` grams the single
+    minimum is kept (the standard short-document degeneration)."""
     if hash not in ("xxh64", "md5"):
         raise ValueError("hash must be 'xxh64' or 'md5'")
-    if use_arrow is None:
-        use_arrow = hash == "md5"
-    if use_arrow:
-        if hash != "md5":
-            raise ValueError("use_arrow requires hash='md5'")
+    if hash == "md5":
         return _winnowing_md5_arrow(df, k, window, text_col, id_col)
     toks = tokens_column(F.col(text_col))
     m = F.size(toks)
     gspan = m - (k - 1)
     gz = F.arrays_zip(*[F.slice(toks, i + 1, gspan) for i in range(k)])
-    if hash == "md5":
-        grams = F.transform(
-            gz,
-            lambda s: F.md5(
-                F.concat_ws(" ", *[s[str(i)] for i in range(k)])
-            ),
-        )
-        empty = F.array().cast("array<string>")
-    else:
-        grams = F.transform(
-            gz, lambda s: F.xxhash64(*[s[str(i)] for i in range(k)])
-        )
-        empty = F.array().cast("array<bigint>")
+    grams = F.transform(
+        gz, lambda s: F.xxhash64(*[s[str(i)] for i in range(k)])
+    )
     wspan = gspan - (window - 1)
     wz = F.arrays_zip(*[F.slice(grams, i + 1, wspan) for i in range(window)])
     mins = F.transform(
@@ -457,7 +437,7 @@ def winnowing_fingerprints(
     fps = (
         F.when(gspan >= window, F.array_distinct(mins))
         .when(gspan > 0, F.array(F.array_min(grams)))
-        .otherwise(empty)
+        .otherwise(F.array().cast("array<bigint>"))
     )
     return df.select(F.col(id_col), fps.alias("fingerprints"))
 
@@ -472,7 +452,6 @@ def winnowing_overlap_pairs(
     id_col: str = "doc_id",
     hash: str = "xxh64",
     materialize: bool = True,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Document pairs sharing >= min_shared winnowing fingerprints —
     (id_a, id_b, n_shared), id_a < id_b.  The inverted-index pattern:
@@ -503,7 +482,6 @@ def winnowing_overlap_pairs(
         text_col=text_col,
         id_col=id_col,
         hash=hash,
-        use_arrow=use_arrow,
     )
     if materialize:
         arrays = arrays.localCheckpoint(eager=True)

@@ -238,45 +238,34 @@ class ProjectionsRebuildProcessor:
     def rebuild_projections_that_require_rebuild(
         self, max_parallel_tasks: int = 1
     ) -> list[str]:
-        """Drain every pending rebuild; with ``max_parallel_tasks > 1``,
-        mirror the reference worker's wave shape
-        (Worker/ProjectionsRebuildProcessor.cs:28-59, default
-        maxParallelTasks=4 there): acquire up to N leases, run those
-        rebuilds concurrently, await the wave, repeat until nothing is
-        pending.  Lease acquisition is the state store's CAS, so
-        concurrent threads (or a second worker process) can never
-        double-acquire one index; Spark accepts job submission from
-        multiple threads, so distributed waves genuinely overlap.
-        The default stays serial — parallel draining is the long-queue
-        worker deployment's knob, not a local-test default."""
-        done: list[str] = []
-        if max_parallel_tasks <= 1:
-            while True:
-                name = self.rebuild_one_projection_which_requires_rebuild()
-                if name is None:
-                    return done
-                done.append(name)
+        """Drain every pending rebuild in waves, the reference worker's
+        shape (Worker/ProjectionsRebuildProcessor.cs:28-59, default
+        maxParallelTasks=4 there): start ``max_parallel_tasks`` rebuilds
+        at once, await the wave, repeat until a whole wave finds nothing
+        pending. The calling thread runs one rebuild of every wave and a
+        pool the rest, so the default one-task drain runs each rebuild
+        serially on the caller's thread, under its Spark job group.
+        Lease acquisition is the state store's CAS, so concurrent
+        threads (or a second worker process) can never double-acquire
+        one index; Spark accepts job submission from multiple threads,
+        so distributed rebuilds in one wave overlap."""
         import concurrent.futures
 
+        rebuild = self.rebuild_one_projection_which_requires_rebuild
+        done: list[str] = []
         with concurrent.futures.ThreadPoolExecutor(
-            max_workers=max_parallel_tasks
+            max_workers=max(1, max_parallel_tasks - 1)
         ) as pool:
             while True:
-                # one wave: the reference acquires serially (each CAS
-                # marks the row leased, so the next acquire sees fresh
-                # state) then awaits the batch
-                futures = [
-                    pool.submit(self.rebuild_one_projection_which_requires_rebuild)
-                    for _ in range(max_parallel_tasks)
-                ]
-                wave = [f.result() for f in futures]  # re-raises failures
+                # each acquire is a CAS that marks the row leased, so the
+                # wave's rebuilds never share an index; a rebuild finishing
+                # mid-wave may have been re-flagged, so only a FULL empty
+                # wave ends the drain, as in the reference
+                futures = [pool.submit(rebuild) for _ in range(max_parallel_tasks - 1)]
+                wave = [rebuild()] + [f.result() for f in futures]  # re-raises
                 done.extend(n for n in wave if n is not None)
-                if any(n is None for n in wave):
-                    # at least one worker found the queue empty — but a
-                    # rebuild finishing mid-wave may have been re-flagged;
-                    # the reference recurses until a FULL empty pass
-                    if all(n is None for n in wave):
-                        return done
+                if all(n is None for n in wave):
+                    return done
 
 
 @contextlib.contextmanager

@@ -104,10 +104,8 @@ class ProjectionRepository:
         self.state_store = state_store
 
     # -- physical ops implemented by backends -------------------------------
-    def _create_index(self, index_name: str, schema: ProjectionSchema) -> None:
-        """Called when the state store registers an index; both backends
-        here create an index's storage on its first write instead."""
-
+    # (no create op: every backend creates an index's storage on its first
+    # write, so registering an index is a state-store write only)
     def _upsert_batch(self, index_name: str, docs: list[dict]) -> None:
         raise NotImplementedError
 
@@ -137,7 +135,7 @@ class ProjectionRepository:
         return self._resolve(selector)[0]
 
     def _resolve(self, selector: str) -> tuple[str, ProjectionSchema]:
-        return self.state_store.resolve_index(self.schema, selector, self._create_index)
+        return self.state_store.resolve_index(self.schema, selector)
 
     def upsert(
         self,
@@ -615,9 +613,14 @@ class ParquetProjectionRepository(ProjectionRepository):
                 casts[f.name] = F.col(f.name).cast(ntz)
         if casts:
             df = df.withColumns(casts)
+        # no `_SUCCESS` marker (nor its `.crc`): the publish rename is the
+        # commit, and on a local disk without native Hadoop each file the
+        # JVM creates costs a forked `chmod`
+        writer = df.write.mode("overwrite").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        )
         self._publish(
-            index_name, lambda staging: df.write.mode("overwrite").parquet(staging),
-            df.schema, base,
+            index_name, lambda staging: writer.parquet(staging), df.schema, base
         )
 
 

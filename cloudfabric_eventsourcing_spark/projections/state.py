@@ -144,10 +144,7 @@ class ProjectionIndexStateStore:
 
     # -- index resolution (ProjectionRepository.cs:252-373) -----------------
     def resolve_index(
-        self,
-        schema: ProjectionSchema,
-        selector: str,
-        on_create_index=None,
+        self, schema: ProjectionSchema, selector: str
     ) -> tuple[str, ProjectionSchema]:
         with self._lock:
             schema_hash = schema.properties_hash()
@@ -159,8 +156,6 @@ class ProjectionIndexStateStore:
                     projection_name=schema.schema_name,
                     indexes_statuses=[status],
                 )
-                if on_create_index:
-                    on_create_index(exact_name, schema)
                 self.save(state)
                 return exact_name, schema
 
@@ -168,8 +163,6 @@ class ProjectionIndexStateStore:
                 state.indexes_statuses.append(
                     _new_status(schema, schema_hash, exact_name)
                 )
-                if on_create_index:
-                    on_create_index(exact_name, schema)
                 self.save(state)
 
             if selector == IndexSelector.ProjectionRebuild:

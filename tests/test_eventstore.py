@@ -189,6 +189,17 @@ def test_load_events_cursor_and_limit(store):
     assert len(limited) == 2
 
 
+def test_load_events_empty_partition_key_is_a_partition(store):
+    """`partition_key=""` selects the partition named "" (the default of
+    `Event.partition_key`) on both backends; only None means every
+    partition."""
+    for pk in ("", "A"):
+        ev = OrderPlaced(aggregate_id=f"x{pk}", partition_key=pk, order_name=pk)
+        assert store.append_to_stream(USER, f"x{pk}", 0, [ev])
+    assert [e.partition_key for e in store.load_events(partition_key="")] == [""]
+    assert sorted(e.partition_key for e in store.load_events()) == ["", "A"]
+
+
 def test_partition_key_mixing_rejected(store):
     ev1 = OrderPlaced(aggregate_id="x", partition_key="A", order_name="a")
     ev2 = OrderPlaced(aggregate_id="x", partition_key="B", order_name="b")

@@ -1073,20 +1073,18 @@ def test_winnowing_guarantee_and_edges(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_winnowing_arrow_kernel_identical(spark, sf_dir):
-    """r15 optimization: the md5 winnowing path defaults to a mapInArrow
-    kernel (hashlib MD5 + NumPy window minima) replacing the interpreted
-    arrays_zip/transform HOF chain.  Fingerprint ARRAYS must be
-    element-for-element identical to the expression path (same gram
-    strings, same window minima, same first-occurrence distinct order),
-    and the pair surface must be row-identical — on the real fixture
-    corpus AND on the edge shapes (null/empty/short docs, mixed ASCII
-    whitespace)."""
+def test_winnowing_arrow_kernel_identical(spark):
+    """The md5 winnowing kernel (hashlib MD5 + sliced window minima) on
+    the edge shapes: null/empty/short docs, mixed ASCII whitespace
+    (Java's `\\s` class, which excludes Unicode spaces), and non-ASCII
+    case folding (final sigma, dotted capital I), where the JVM and
+    Python must lowercase alike.  The literals are the fingerprints the
+    retired md5 Column-expression path produced for the same docs; on
+    the fixture corpus the p16_winnowing_overlap DuckDB oracle pins the
+    kernel's pairs."""
     from cloudfabric_eventsourcing_spark.operators.text import (
         winnowing_fingerprints,
-        winnowing_overlap_pairs,
     )
-    from cloudfabric_eventsourcing_spark.sources import load_table
 
     edge = spark.createDataFrame(
         [
@@ -1097,8 +1095,6 @@ def test_winnowing_arrow_kernel_identical(spark, sf_dir):
             (5, "four tokens right here"),
             (6, "tab\tand\nnewline   runs\x0bform\fone token stream"),
             (7, "UPPER Case MiXeD tokens lower the same way"),
-            # non-ASCII case folding (final sigma, dotted capital I): the
-            # JVM and Python lowercase these identically
             (8, "ΣΑΣ"),
             (9, "ΣΑΣ ΟΔΟΣ"),
             (10, "İ"),
@@ -1106,38 +1102,29 @@ def test_winnowing_arrow_kernel_identical(spark, sf_dir):
         ],
         "doc_id long, text string",
     )
-    for docs in (edge, load_table(spark, sf_dir, "documents")):
-        expr = {
-            r["doc_id"]: list(r["fingerprints"])
-            for r in winnowing_fingerprints(
-                docs, k=3, window=4, hash="md5", use_arrow=False
-            ).collect()
-        }
-        kern = {
-            r["doc_id"]: list(r["fingerprints"])
-            for r in winnowing_fingerprints(
-                docs, k=3, window=4, hash="md5", use_arrow=True
-            ).collect()
-        }
-        assert expr and kern == expr
-    docs = load_table(spark, sf_dir, "documents")
-    lazy_pairs = sorted(
-        map(
-            tuple,
-            winnowing_overlap_pairs(
-                docs, k=3, window=4, min_shared=2, hash="md5", use_arrow=False
-            ).collect(),
-        )
-    )
-    kern_pairs = sorted(
-        map(
-            tuple,
-            winnowing_overlap_pairs(
-                docs, k=3, window=4, min_shared=2, hash="md5"
-            ).collect(),
-        )
-    )
-    assert lazy_pairs and kern_pairs == lazy_pairs
+    got = {
+        r["doc_id"]: list(r["fingerprints"])
+        for r in winnowing_fingerprints(
+            edge, k=3, window=4, hash="md5"
+        ).collect()
+    }
+    assert got == {
+        1: [],
+        2: [],
+        3: [],
+        # one gram, so its md5 is the fingerprint
+        4: ["44b5280632ae21de6db6e662829414cf"],
+        5: ["625e0670be7127c48a049198d8aa56ab"],
+        6: ["079ab9c916cd9987931b78c711d9ea43"],
+        7: [
+            "36726296c5761faacf8c786ab2941809",
+            "307a37e2582dcc724ea35ba14824fe3d",
+        ],
+        8: [],
+        9: [],
+        10: [],
+        11: ["012c92033e6108f34b411698a522c846"],
+    }
 
 
 def test_duplicated_spans_and_removal(spark):
@@ -6246,12 +6233,11 @@ def test_pyav_adapter_decodes_when_av_present():
     assert set(av_adapter.available_decoders()) == {"video", "audio"}
 
 
-def test_dsir_arrow_scoring_matches_join_form(spark, sf_dir):
-    """The r12-verdict p19 candidate: DSIR per-doc scoring folded into
-    an Arrow kernel over a collected micro-weight dict must equal the
-    explode -> broadcast-join -> per-doc-sum form EXACTLY (the integer
-    micro-unit lattice makes both order-independent), including
-    null/empty/whitespace documents."""
+def test_dsir_empty_docs_weigh_zero_and_cached_features_match(spark, sf_dir):
+    """DSIR scoring on the fixture corpus plus null/empty/whitespace
+    documents: a null or empty document scores (0 grams, weight 0.0),
+    and `cache_features=True` (one tokenize+md5 pass feeds the raw fit
+    AND the scoring join) returns exactly the two-pass rows."""
     from cloudfabric_eventsourcing_spark.operators import sampling as S
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -6270,17 +6256,11 @@ def test_dsir_arrow_scoring_matches_join_form(spark, sf_dir):
     a = sorted(
         tuple(r) for r in S.dsir_log_weights(both, tgt).collect()
     )
-    b = sorted(
-        tuple(r)
-        for r in S.dsir_log_weights(both, tgt, use_arrow=True).collect()
-    )
-    assert a == b
-    byid = {t[0]: t[1:] for t in b}
+    byid = {t[0]: t[1:] for t in a}
     assert byid[900001] == (0, 0.0)
     assert byid[900002] == (0, 0.0)
-    # cache_features (one tokenize+md5 pass feeds fit AND scoring):
-    # bit-identical too — the fit's explode() equals the outer-explode
-    # rows minus the null-b rows
+    # bit-identical: the fit's explode() equals the outer-explode rows
+    # minus the null-b rows
     c = sorted(
         tuple(r)
         for r in S.dsir_log_weights(

@@ -342,6 +342,17 @@ def test_a_merge_of_local_documents_applies_its_tombstones(spark, tmp_path):
     assert (names["d001"], names["d099"]) == ("renamed", _doc(99)["Name"])
 
 
+def test_a_merged_snapshot_holds_only_data_files(spark, tmp_path):
+    """A MERGE-published snapshot is its `part-*` files and their `.crc`
+    side files: no `_SUCCESS` marker, since the publish rename is the
+    commit."""
+    repo = _spark_repo(spark, tmp_path)
+    _merge(repo, dict(DOCS[1], Name="renamed"))
+    names = sorted(os.listdir(_snapshot(repo)))
+    data = [n for n in names if n.startswith("part-")]
+    assert data and names == sorted(data + [f".{n}.crc" for n in data])
+
+
 def test_every_write_path_returns_the_same_raw_document(spark, tmp_path):
     """single() returns one raw document whichever path wrote it: a Spark
     MERGE (timestamps nested in a struct and in an array of structs

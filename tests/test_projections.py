@@ -601,6 +601,30 @@ def test_threaded_rebuild_waves_drain_pending_rebuilds(tmp_path):
         assert all(s.rebuild_completed_at for s in st.indexes_statuses), nm
 
 
+@pytest.mark.parametrize("tasks, waves", [(1, 5), (3, 3)])
+def test_rebuild_waves_run_one_rebuild_on_the_callers_thread(tasks, waves):
+    """Each wave runs one rebuild on the calling thread and the other
+    tasks - 1 on a pool, and the drain ends at the first wave that finds
+    nothing pending; so the default one-task drain is the serial loop, on
+    the caller's thread (its Spark job group and labels apply)."""
+    pending = [f"idx{i}" for i in range(4)]
+    threads = []
+    lock = threading.Lock()
+
+    def rebuild_one():
+        with lock:
+            threads.append(threading.current_thread())
+            return pending.pop(0) if pending else None
+
+    proc = ProjectionsRebuildProcessor(None, None, None)
+    proc.rebuild_one_projection_which_requires_rebuild = rebuild_one
+    assert sorted(proc.rebuild_projections_that_require_rebuild(tasks)) == [
+        f"idx{i}" for i in range(4)
+    ]
+    assert len(threads) == waves * tasks
+    assert threads.count(threading.current_thread()) == waves
+
+
 def test_state_store_rejects_a_repository_without_cas():
     """Rebuild leases and progress heartbeats are compare-and-swaps; a
     metadata repository that cannot do one is refused up front rather
